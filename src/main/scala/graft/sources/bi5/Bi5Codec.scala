@@ -1,7 +1,9 @@
 package graft.sources.bi5
 
-import java.io.InputStream
+import java.io.{BufferedInputStream, InputStream}
 import java.util.{Calendar, TimeZone}
+
+import scala.util.control.NonFatal
 
 /**
  * Pure (Spark-free) decoding core for Dukascopy `.bi5` tick files.
@@ -65,7 +67,7 @@ object Bi5Codec {
           len += n
         }
       } catch {
-        case _: Throwable => done = true // corrupt tail: keep complete records read so far
+        case NonFatal(_) => done = true // corrupt tail: keep complete records read so far
       }
       if (len < RecordBytes) done = true // clean EOF / partial trailing record dropped
     }
@@ -89,6 +91,33 @@ object Bi5Codec {
         be32(p + 8),
         java.lang.Float.intBitsToFloat(be32(p + 12)),
         java.lang.Float.intBitsToFloat(be32(p + 16)))
+    }
+  }
+
+  /** Decoder memory cap (KiB): above every xz preset's dictionary (64 MiB at
+    * preset 9). A garbage header can name a dictionary of up to 2 GiB, which
+    * the decoder would allocate before reading a byte; with the cap it fails
+    * as a corrupt file instead. */
+  private final val LzmaMemoryLimitKiB = 128 << 10
+
+  /**
+   * Open one `.bi5` file as a decompressed stream (buffered — the decoder
+   * issues many small reads against its source), or None when it cannot be
+   * opened: bad LZMA header, empty file, missing file. That is the
+   * skip-corrupt rule for opening. Only NonFatal failures count as corrupt;
+   * an interrupt or a fatal JVM error propagates. The LZMA constructor
+   * throws before the caller holds the stream, so the raw stream is closed
+   * here, or its descriptor would leak until GC.
+   */
+  def openLzma(store: Bi5Store, path: String): Option[InputStream] = {
+    var raw: InputStream = null
+    try {
+      raw = store.open(path)
+      Some(new org.tukaani.xz.LZMAInputStream(new BufferedInputStream(raw, 1 << 16), LzmaMemoryLimitKiB))
+    } catch {
+      case NonFatal(_) =>
+        if (raw != null) { try raw.close() catch { case NonFatal(_) => } }
+        None
     }
   }
 

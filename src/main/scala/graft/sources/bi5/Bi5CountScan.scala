@@ -1,6 +1,8 @@
 package graft.sources.bi5
 
-import java.io.{DataInputStream, InputStream}
+import java.io.DataInputStream
+
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -103,23 +105,16 @@ class Bi5AggReader(partition: Bi5Partition, opts: Bi5Options, aggs: Seq[Bi5Agg],
     } finally in.close()
   }
 
-  /** Decode one file's tick timestamps (micros); empty on any corruption. */
-  private def decodeTs(path: String, meta: Bi5PathMeta): Iterator[Long] = {
-    var raw: InputStream = null
-    try {
-      raw = store.open(path)
-      val in = new org.tukaani.xz.LZMAInputStream(
-        new java.io.BufferedInputStream(raw, 1 << 16))
-      // materialize so the stream can close here (boundary files are small)
-      val out = Bi5Codec.ticks(in).map(t => meta.baseEpochMicros + t.msOffset * 1000L).toArray
-      in.close()
-      out.iterator
-    } catch {
-      case _: Throwable =>
-        if (raw != null) { try raw.close() catch { case _: Throwable => } }
-        Iterator.empty
+  /** Decode one file's tick timestamps (micros); empty when it cannot be
+    * opened. Materialized so the stream closes here (boundary files are
+    * small). */
+  private def decodeTs(path: String, meta: Bi5PathMeta): Iterator[Long] =
+    Bi5Codec.openLzma(store, path) match {
+      case Some(in) =>
+        try Bi5Codec.ticks(in).map(t => meta.baseEpochMicros + t.msOffset * 1000L).toArray.iterator
+        finally try in.close() catch { case NonFatal(_) => }
+      case None => Iterator.empty
     }
-  }
 
   private lazy val metaFiles: Seq[(String, Bi5PathMeta)] =
     Bi5FileLister.partitionFiles(partition, store)
@@ -128,22 +123,15 @@ class Bi5AggReader(partition: Bi5Partition, opts: Bi5Options, aggs: Seq[Bi5Agg],
   private def countFiles(): Long = {
     var total = 0L
     metaFiles.foreach { case (path, _) =>
-      val size = try headerSize(path) catch { case _: Throwable => -1L }
+      val size = try headerSize(path) catch { case NonFatal(_) => -1L }
       if (size >= 0) {
         total += size / Bi5Codec.RecordBytes
       } else {
-        // unknown/unreadable size: decode-count this one file exactly.
-        // Close the raw stream if the LZMA ctor throws (else the fd leaks).
-        var raw: InputStream = null
-        try {
-          raw = store.open(path)
-          val in = new org.tukaani.xz.LZMAInputStream(
-            new java.io.BufferedInputStream(raw, 1 << 16))
+        // unknown/unreadable size: decode-count this one file exactly
+        // (a file that cannot be opened is corrupt and contributes 0)
+        Bi5Codec.openLzma(store, path).foreach { in =>
           try total += Bi5Codec.ticks(in).size
-          finally in.close()
-        } catch {
-          case _: Throwable => // corrupt: contributes 0
-            if (raw != null) { try raw.close() catch { case _: Throwable => } }
+          finally try in.close() catch { case NonFatal(_) => }
         }
       }
     }

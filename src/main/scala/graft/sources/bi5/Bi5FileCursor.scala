@@ -1,6 +1,8 @@
 package graft.sources.bi5
 
-import java.io.{BufferedInputStream, InputStream}
+import java.io.InputStream
+
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.unsafe.types.UTF8String
@@ -8,15 +10,17 @@ import org.apache.spark.unsafe.types.UTF8String
 /**
  * Shared executor-side file cursor for both bi5 readers (row + columnar):
  * walks/iterates a partition's candidate files, prunes by path metadata and
- * pushed filters, opens the LZMA stream (buffered — the decoder issues many
- * small reads against its source), and applies the skip-corrupt rule: any
- * failure opening a file silently advances to the next
- * (reference BI5DataSource.scala:149-159).
+ * pushed filters (planning-time and runtime alike), opens the LZMA stream,
+ * and applies the skip-corrupt rule: a NonFatal failure opening a file
+ * silently advances to the next (reference BI5DataSource.scala:149-159); an
+ * interrupt or a fatal JVM error propagates and fails the task.
  *
  * All filesystem access goes through the partition's [[Bi5Store]] — local
  * java.nio or Hadoop FileSystem, decided by the load path's scheme. Walk
  * mode streams paths LAZILY from the store (no subtree-sized list in task
- * memory; the first record decodes before the traversal finishes), and each
+ * memory; the first record decodes before the traversal finishes), never
+ * lists a directory the filters rule out ([[Bi5FilePruner.dirFilter]] —
+ * partition roots included, since they sit below the load root), and each
  * store's walk embeds its own fault contract (nio: a traversal fault ends
  * the supply — local skip-corrupt; Hadoop: FileNotFound ends the supply,
  * transient faults fail the retryable task). Owns the current decompression
@@ -34,10 +38,11 @@ final class Bi5FileCursor(
 
   private[this] val files: Iterator[String] =
     if (partition.walk) {
-      partition.roots.iterator.flatMap { root =>
-        val w = store.walkBi5Files(root)
+      val enterDir = Bi5FilePruner.dirFilter(opts.monthOffset, filters)
+      partition.roots.iterator.filter(enterDir).flatMap { root =>
+        val w = store.walkBi5Files(root, enterDir)
         walks += w
-        w.files
+        w.files.map(_._1)
       }
     } else {
       partition.roots.iterator
@@ -52,19 +57,11 @@ final class Bi5FileCursor(
       val path = files.next()
       Bi5PathMeta.parse(path, opts.monthOffset) match {
         case Some(meta) if Bi5FilePruner.mayMatchMeta(meta, filters) =>
-          var raw: InputStream = null
-          try {
-            raw = store.open(path)
-            val in = new org.tukaani.xz.LZMAInputStream(new BufferedInputStream(raw, 1 << 16))
-            currentIn = in
-            return Some(OpenFile(meta, UTF8String.fromString(meta.ticker), Bi5Codec.ticks(in)))
-          } catch {
-            case _: Throwable =>
-              // bad LZMA header, empty file, ... — the LZMAInputStream ctor
-              // throws BEFORE currentIn is assigned, so close the raw stream
-              // explicitly or its descriptor leaks until GC
-              if (raw != null) { try raw.close() catch { case _: Throwable => } }
-              closeCurrent()
+          Bi5Codec.openLzma(store, path) match {
+            case Some(in) =>
+              currentIn = in
+              return Some(OpenFile(meta, UTF8String.fromString(meta.ticker), Bi5Codec.ticks(in)))
+            case None => // corrupt: skip
           }
         case _ => // non-matching layout (reference throws+swallows) or pruned
       }
@@ -74,14 +71,14 @@ final class Bi5FileCursor(
 
   private[this] def closeCurrent(): Unit = {
     if (currentIn != null) {
-      try currentIn.close() catch { case _: Throwable => }
+      try currentIn.close() catch { case NonFatal(_) => }
       currentIn = null
     }
   }
 
   def close(): Unit = {
     closeCurrent()
-    walks.foreach(w => try w.close() catch { case _: Throwable => })
+    walks.foreach(w => try w.close() catch { case NonFatal(_) => })
     walks.clear()
   }
 }

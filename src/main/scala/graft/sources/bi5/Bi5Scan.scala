@@ -3,6 +3,7 @@ package graft.sources.bi5
 import java.util.OptionalLong
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -138,7 +139,7 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
     else if (opts.listShards > 0) planFileBinsSharded()
     else planFileBins()
 
-  /** Scale mode: list all files on the driver, prune by pushed filters, then
+  /** Scale mode: list the files on the driver, prune by pushed filters, then
     * first-fit-decreasing bin-pack by compressed size. With the DEFAULT byte
     * cap the bin target also shrinks to totalBytes / (2 * defaultParallelism):
     * a byte cap alone would collapse any dataset smaller than one cap into a
@@ -146,12 +147,12 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
     * tree decoding single-threaded under the 128 MiB default). */
   private def planFileBins(): Array[InputPartition] = {
     val files = listedFiles
-      .filter { case (p, _) => Bi5FilePruner.mayMatch(p, opts.monthOffset, allFilters) }
+      .filter { case (p, _) => Bi5FilePruner.mayMatch(p, opts.monthOffset, runtimeFilters) }
       .sortBy { case (_, size) => -size }
     val totalBytes = files.map(_._2).sum
     val parallelism =
       try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
-      catch { case _: Throwable => 8 }
+      catch { case NonFatal(_) => 8 }
     // An explicitly-set maxPartitionBytes is the user's tuning decision —
     // honor it exactly in either direction. Only the DEFAULT engages the
     // parallelism heuristic (with a 1 MB floor so small datasets fan out
@@ -210,8 +211,10 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
           val targetBytes = opts.maxPartitionBytes
           val perShard = sc.parallelize(roots, math.min(opts.listShards, roots.size))
             .mapPartitions { rs =>
-              val files = rs.flatMap(r => storeLocal.listBi5Files(r))
-                .filter { case (p, _) => Bi5FilePruner.mayMatch(p, monthOffset, filtersLocal) }
+              // shard roots sit below the load root, so they are judged too
+              val enterDir = Bi5FilePruner.dirFilter(monthOffset, filtersLocal)
+              val files = rs.filter(enterDir)
+                .flatMap(r => Bi5FileLister.listPruned(storeLocal, r, monthOffset, filtersLocal))
                 .toArray.sortBy { case (_, size) => -size }
               Iterator.single((Bi5Scan.packBins(files, targetBytes), files.map(_._2).sum))
             }
@@ -230,11 +233,12 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
   override def createReaderFactory(): PartitionReaderFactory =
     new Bi5PartitionReaderFactory(opts, required, allFilters, store)
 
-  // ONE listing per scan, shared by stats and split=files planning (pruned
-  // per use: runtime filters can arrive between the two). Matches the stock
-  // file source's load()-time index snapshot semantics.
+  // ONE listing per scan, shared by stats and split=files planning, pruned by
+  // the planning-time filters down to the directory level. Runtime filters
+  // can only narrow it, so planning applies them per file on top. Matches
+  // the stock file source's load()-time index snapshot semantics.
   private lazy val listedFiles: Seq[(String, Long)] =
-    store.listBi5Files(opts.path)
+    Bi5FileLister.listPruned(store, opts.path, opts.monthOffset, filters)
 
   /** listShards-mode statistics: the pruned compressed byte total from the
     * shared sharded job (memoized — see [[shardedListing]]). Stats must not
@@ -250,9 +254,7 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
     // reports its actual magnitude (broadcast decisions depend on this).
     val compressed =
       if (opts.splitPerFile && opts.listShards > 0) shardedCompressedBytes()
-      else listedFiles
-        .filter { case (p, _) => Bi5FilePruner.mayMatch(p, opts.monthOffset, filters) }
-        .map(_._2).sum
+      else listedFiles.map(_._2).sum
     val rows = (compressed * 4.2 / Bi5Codec.RecordBytes).toLong
     new Statistics {
       override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(rows * 48L, 1L))
@@ -377,53 +379,64 @@ class Bi5PartitionReader(
   override def close(): Unit = cursor.close()
 }
 
-/** Driver-side listing helpers shared by planning, stats, and streaming. */
+/** Listing helpers shared by planning, stats, streaming and the readers. */
 object Bi5FileLister {
 
   // Directory tails of the layout `<ticker>/<YYYY>/<mm>/<dd>/<hh>h_ticks.bi5`,
-  // matched against a directory PATH during the pruned descent. Mutually
+  // matched against a directory PATH during a pruned descent. Mutually
   // exclusive: the year component's fixed 4 digits anchors the depth.
-  private val DayDirTail = """/[a-zA-Z0-9]+/(\d{4})/(\d{1,2})/(\d{1,2})$""".r
-  private val MonthDirTail = """/[a-zA-Z0-9]+/(\d{4})/(\d{1,2})$""".r
-  private val YearDirTail = """/[a-zA-Z0-9]+/(\d{4})$""".r
+  private val DayDirTail = """/([a-zA-Z0-9]+)/(\d{4})/(\d{1,2})/(\d{1,2})$""".r
+  private val MonthDirTail = """/([a-zA-Z0-9]+)/(\d{4})/(\d{1,2})$""".r
+  private val YearDirTail = """/([a-zA-Z0-9]+)/(\d{4})$""".r
+
+  private[bi5] final val HourMicros = 3600L * 1000 * 1000
 
   /**
-   * Latest hour base any file under `dir` can carry, from the directory name
-   * alone, or None when the tail doesn't look like a date level. EXACT, not
-   * heuristic: path components are `\d{1,2}` (so at most 99), the lenient
-   * Calendar is monotone in each field, and unparsed deeper levels can only
-   * produce files the layout regex rejects — so plugging the max component
-   * value (99) into the same Calendar the row path uses yields a true upper
-   * bound. (The one shape outside the bound is a FULL new ticker hierarchy
-   * nested inside a date directory — outside the layout contract, documented
-   * on listBi5FilesSince.)
+   * The ticker and the `[lo, hi]` row-timestamp interval (µs) of every file
+   * the layout places under `dirPath`, from the directory name alone, or
+   * None when the tail is not a `<T>/<YYYY>`, `<T>/<YYYY>/<mm>` or
+   * `<T>/<YYYY>/<mm>/<dd>` level. EXACT, not heuristic: the missing
+   * components are `\d{1,2}` (0 to 99), the lenient Calendar the file path
+   * goes through is monotone in each field, and a file's rows span its hour
+   * — so plugging 0 and 99 into that same Calendar bounds every file below,
+   * roll-over dirs such as `2019/11/31` included. The one shape outside the
+   * bound is a complete ticker hierarchy nested INSIDE a date directory,
+   * which the layout contract excludes (see [[Bi5FilePruner]]).
    */
-  private def subtreeMaxBaseMicros(dirPath: String, monthOffset: Int): Option[Long] = {
+  def subtreeBounds(dirPath: String, monthOffset: Int): Option[(String, Long, Long)] = {
     val normalized = dirPath.replace('\\', '/')
+    def span(ticker: String, year: String, month0Lo: Int, month0Hi: Int, dayLo: Int, dayHi: Int) =
+      (ticker,
+        Bi5PathMeta.lenientBaseMicros(year.toInt, month0Lo, dayLo, 0),
+        Bi5PathMeta.lenientBaseMicros(year.toInt, month0Hi, dayHi, 99) + HourMicros - 1)
     DayDirTail.findFirstMatchIn(normalized).map { m =>
-      Bi5PathMeta.lenientBaseMicros(
-        m.group(1).toInt, m.group(2).toInt - monthOffset, m.group(3).toInt, 99)
+      val month0 = m.group(3).toInt - monthOffset
+      val day = m.group(4).toInt
+      span(m.group(1), m.group(2), month0, month0, day, day)
     }.orElse(MonthDirTail.findFirstMatchIn(normalized).map { m =>
-      Bi5PathMeta.lenientBaseMicros(m.group(1).toInt, m.group(2).toInt - monthOffset, 99, 99)
+      val month0 = m.group(3).toInt - monthOffset
+      span(m.group(1), m.group(2), month0, month0, 0, 99)
     }).orElse(YearDirTail.findFirstMatchIn(normalized).map { m =>
-      Bi5PathMeta.lenientBaseMicros(m.group(1).toInt, 99, 99, 99)
+      span(m.group(1), m.group(2), -monthOffset, 99 - monthOffset, 0, 99)
     })
   }
 
   /**
-   * Streaming-tail listing: like [[listBi5Files]] but skips (never even
-   * enumerates) directories whose EVERY possible file sorts strictly before
-   * hour base `minBaseMicros` — the committed offset's hour. An idle tail
-   * over years of history then re-lists only the frontier day/month dirs
-   * instead of re-walking the whole archive every trigger: O(new + frontier)
-   * driver work per micro-batch, not O(corpus).
+   * Streaming-tail listing: like [[Bi5Store.listBi5Files]] but skips (never
+   * even enumerates) directories whose EVERY possible file sorts strictly
+   * before hour base `minBaseMicros` — the committed offset's hour. An idle
+   * tail over years of history then re-lists only the frontier day/month
+   * dirs instead of re-walking the whole archive every trigger:
+   * O(new + frontier) driver work per micro-batch, not O(corpus). It
+   * descends through [[Bi5Store.children]] on every store, so an object
+   * store is LISTed one frontier directory at a time rather than with a
+   * whole-tree flat listing.
    *
    * Files AT `minBaseMicros` are still listed (the caller's exact
    * (base, path) key filter owns the tiebreak), so nothing the full walk
-   * would admit is lost. Caveat, documented deliberately: a complete ticker
-   * hierarchy nested INSIDE a date directory (e.g.
-   * `…/EURUSD/2020/1/2/GBPUSD/2024/…`) violates the layout contract and may
-   * be pruned here even though the batch scan would read it.
+   * would admit is lost — up to the layout contract's one exception, shared
+   * with the batch scan: a complete ticker hierarchy nested INSIDE a pruned
+   * date directory is not read (see [[Bi5FilePruner]]).
    *
    * `onDirEnumerated` is a test seam: invoked once per directory whose
    * children this walk actually reads.
@@ -435,14 +448,15 @@ object Bi5FileLister {
       monthOffset: Int,
       onDirEnumerated: String => Unit = _ => ()): Seq[(String, Long)] = {
     val out = Vector.newBuilder[(String, Long)]
+    // skip iff the latest hour base below the dir sorts before the frontier
+    def enter(dir: String): Boolean =
+      subtreeBounds(dir, monthOffset).forall { case (_, _, hi) => hi - HourMicros + 1 >= minBaseMicros }
     def descend(dir: String): Unit = {
       onDirEnumerated(dir)
       store.children(dir).foreach { child =>
         if (child.isDir) {
-          val skip = subtreeMaxBaseMicros(child.path, monthOffset)
-            .exists(_ < minBaseMicros)
-          if (!skip) descend(child.path)
-        } else if (child.path.toLowerCase.endsWith(".bi5")) {
+          if (enter(child.path)) descend(child.path)
+        } else if (Bi5Store.isBi5Name(child.path)) {
           out += ((child.path, child.size))
         }
       }
@@ -451,6 +465,18 @@ object Bi5FileLister {
     else if (store.exists(root)) out += ((root, store.fileSize(root)))
     out.result()
   }
+
+  /** Candidate files under `root` for `filters`, strict: subtrees the
+    * filters rule out are never listed, and every listed file passed the
+    * file-level check. `root` itself is not judged (see
+    * [[Bi5Store.walkBi5Files]]). */
+  def listPruned(
+      store: Bi5Store,
+      root: String,
+      monthOffset: Int,
+      filters: Array[Filter]): Seq[(String, Long)] =
+    store.listBi5Files(root, Bi5FilePruner.dirFilter(monthOffset, filters))
+      .filter { case (p, _) => Bi5FilePruner.mayMatch(p, monthOffset, filters) }
 
   /** All candidate .bi5 files of a partition, strict (streams closed). */
   def partitionFiles(partition: Bi5Partition, store: Bi5Store): Seq[String] =
@@ -462,15 +488,30 @@ object Bi5FileLister {
 }
 
 /**
- * File-granularity pruning with pushed source filters, evaluated against
- * path-derived metadata: `ticker` equals the path's ticker exactly, and a
- * file's rows span `[base, base + 1h)` (offsets are milliseconds within the
- * named hour). Conservative: returns true unless a filter PROVES no row in
- * the file can match.
+ * Pruning with pushed source filters, evaluated against path-derived
+ * metadata: `ticker` equals the path's ticker exactly, and a file's rows
+ * span `[base, base + 1h)` (offsets are milliseconds within the named hour).
+ * Conservative: a check returns true unless a filter PROVES no row can
+ * match.
+ *
+ * The same filters judge whole DIRECTORIES: a `<T>/<YYYY>[/<mm>[/<dd>]]`
+ * directory covers one ticker and a bounded time span
+ * ([[Bi5FileLister.subtreeBounds]]), and a walk never lists a directory
+ * whose span no filter admits. A file's check is the one-hour case of the
+ * same interval test.
+ *
+ * Layout contract. Pruning, at both levels, relies on every file sitting at
+ * `<ticker>/<YYYY>/<mm>/<dd>/<hh>h_ticks.bi5` with its rows inside that
+ * hour. Its one known exception: a complete ticker hierarchy nested INSIDE
+ * a date directory (`…/EURUSD/2020/1/2/GBPUSD/2024/…`) is not read when the
+ * outer date directory is pruned — by a filter in a batch scan, or by the
+ * committed hour in a stream. The load root itself is never
+ * judged by its name. Rows of a malformed file whose offsets leave its hour
+ * can likewise be pruned away with a ts filter present.
  */
 object Bi5FilePruner {
 
-  private final val HourMicros = 3600L * 1000 * 1000
+  import Bi5FileLister.HourMicros
 
   def supported(f: Filter): Boolean = f match {
     case EqualTo(a, _)            => a == "ticker" || a == "ts"
@@ -491,7 +532,19 @@ object Bi5FilePruner {
     }
 
   def mayMatchMeta(meta: Bi5PathMeta, filters: Array[Filter]): Boolean =
-    filters.forall(f => eval(meta, f))
+    mayMatchSpan(meta.ticker, meta.baseEpochMicros, meta.baseEpochMicros + HourMicros - 1, filters)
+
+  /** true = some row of `ticker` with ts in `[lo, hi]` may pass every filter. */
+  private def mayMatchSpan(ticker: String, lo: Long, hi: Long, filters: Array[Filter]): Boolean =
+    filters.forall(f => eval(ticker, lo, hi, f))
+
+  /** The directory predicate of a walk pruned by `filters`: false only when
+    * the directory's name proves no file below it can match. */
+  def dirFilter(monthOffset: Int, filters: Array[Filter]): String => Boolean =
+    if (filters.isEmpty) Bi5Store.EveryDir
+    else dir => Bi5FileLister.subtreeBounds(dir, monthOffset).forall {
+      case (ticker, lo, hi) => mayMatchSpan(ticker, lo, hi, filters)
+    }
 
   private def toMicros(v: Any): Option[Long] = v match {
     case t: java.sql.Timestamp  => Some(t.getTime * 1000L + (t.getNanos / 1000) % 1000)
@@ -501,21 +554,16 @@ object Bi5FilePruner {
     case _ => None
   }
 
-  /** true = some row of the file may satisfy the filter. */
-  private def eval(meta: Bi5PathMeta, f: Filter): Boolean = {
-    val lo = meta.baseEpochMicros
-    val hi = meta.baseEpochMicros + HourMicros - 1
-    f match {
-      case EqualTo("ticker", v)     => v == meta.ticker
-      case In("ticker", vs)         => vs.contains(meta.ticker)
-      case EqualTo("ts", v)         => toMicros(v).forall(m => m >= lo && m <= hi)
-      case GreaterThan("ts", v)     => toMicros(v).forall(m => hi > m)
-      case GreaterThanOrEqual("ts", v) => toMicros(v).forall(m => hi >= m)
-      case LessThan("ts", v)        => toMicros(v).forall(m => lo < m)
-      case LessThanOrEqual("ts", v) => toMicros(v).forall(m => lo <= m)
-      case And(l, r)                => eval(meta, l) && eval(meta, r)
-      case Or(l, r)                 => eval(meta, l) || eval(meta, r)
-      case _                        => true
-    }
+  private def eval(ticker: String, lo: Long, hi: Long, f: Filter): Boolean = f match {
+    case EqualTo("ticker", v)        => v == ticker
+    case In("ticker", vs)            => vs.contains(ticker)
+    case EqualTo("ts", v)            => toMicros(v).forall(m => m >= lo && m <= hi)
+    case GreaterThan("ts", v)        => toMicros(v).forall(m => hi > m)
+    case GreaterThanOrEqual("ts", v) => toMicros(v).forall(m => hi >= m)
+    case LessThan("ts", v)           => toMicros(v).forall(m => lo < m)
+    case LessThanOrEqual("ts", v)    => toMicros(v).forall(m => lo <= m)
+    case And(l, r)                   => eval(ticker, lo, hi, l) && eval(ticker, lo, hi, r)
+    case Or(l, r)                    => eval(ticker, lo, hi, l) || eval(ticker, lo, hi, r)
+    case _                           => true
   }
 }

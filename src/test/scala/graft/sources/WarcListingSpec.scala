@@ -54,10 +54,8 @@ class WarcListingSpec extends AnyFunSuite {
       }
       NioBi5Store.children(path)
     }
-    override def listBi5Files(root: String): Seq[(String, Long)] =
-      NioBi5Store.listBi5Files(root)
-    override def walkBi5Files(root: String): Bi5Store.FileWalk =
-      NioBi5Store.walkBi5Files(root)
+    override def walkBi5Files(root: String, enterDir: String => Boolean): Bi5Store.FileWalk =
+      NioBi5Store.walkBi5Files(root, enterDir)
     override def open(path: String): java.io.InputStream = NioBi5Store.open(path)
     override def fileSize(path: String): Long = NioBi5Store.fileSize(path)
   }
