@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 object Bench {
 
@@ -36,7 +37,10 @@ object Bench {
         // prune output columns and eliminate final sorts — under-measuring)
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => failed = true; false }
+          catch { case NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+            failed = true; false
+          }
         ((System.nanoTime() - t0) / 1e9, ok)
       }
       if (failed) { errors += 1; errNames += name }
@@ -98,7 +102,7 @@ object Bench {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(qFile),
         detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case scala.util.control.NonFatal(_) => () } // never fail the bench
+      catch { case NonFatal(_) => () } // never fail the bench
     }
 
     // Secondary scale factor: the 2x gate is only ever exercised at one SF —

@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{FloatVecDot, TextExpressions, WordNgrams}
+import graft.functions.NativeFunctions
 
 /**
  * Session-extensions entry point: makes the library's native expressions
@@ -15,112 +14,20 @@ import graft.functions.{FloatVecDot, TextExpressions, WordNgrams}
  *   spark.sql.extensions=graft.GraftExtensions
  * }}}
  *
- * Injected functions:
- *  - `vec_dot(array<float>, array<float>)` — codegen dot product
- *    (graft.functions.FloatVecDot)
- *  - `word_ngrams(array<string>, n)` — compiled word n-gram shingling
- *    (graft.functions.WordNgrams)
- *  - `bloom_might_contain(binary, bigint)` — codegen Bloom probe
- *    (graft.functions.BloomMightContain)
- *  - `cms_estimate(binary, bigint)` — codegen count-min frequency read
- *    (graft.functions.CmsEstimate)
+ * Injected functions: every entry of [[graft.functions.NativeFunctions.all]],
+ * with the same builders that `NativeFunctions.register` uses.
  *
  * Injected optimizer rules:
  *  - [[graft.plans.LevenshteinPrefilter]] — guards `levenshtein(a,b) <= k`
  *    filters with the free `abs(length(a)-length(b)) <= k` bound so the
  *    quadratic distance skips rows with a hopeless length gap.
- *
- * The imperative `VectorExpressions.register` / `TextExpressions.register`
- * remain for sessions created without the extension (the query library calls
- * them defensively); both paths bind the same Expression classes.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => FloatVecDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      TextExpressions.wordNgramsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("word_ngram_hash48"),
-      new ExpressionInfo(classOf[graft.functions.WordNgramHash48].getName, "word_ngram_hash48"),
-      TextExpressions.wordNgramHash48Builder))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_bits"),
-      new ExpressionInfo(classOf[graft.functions.SimHashBits].getName, "simhash_bits"),
-      TextExpressions.simhashBitsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("max_token_run"),
-      new ExpressionInfo(classOf[graft.functions.MaxTokenRun].getName, "max_token_run"),
-      TextExpressions.maxTokenRunBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("token_entropy"),
-      new ExpressionInfo(classOf[graft.functions.TokenEntropy].getName, "token_entropy"),
-      TextExpressions.tokenEntropyBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_cuts"),
-      new ExpressionInfo(classOf[graft.functions.CdcCuts].getName, "cdc_cuts"),
-      TextExpressions.cdcCutsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("window_mins"),
-      new ExpressionInfo(classOf[graft.functions.WindowMins].getName, "window_mins"),
-      TextExpressions.windowMinsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("canonical_url"),
-      new ExpressionInfo(classOf[graft.functions.CanonicalUrl].getName, "canonical_url"),
-      (exprs: Seq[Expression]) => graft.functions.CanonicalUrl(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("strip_html"),
-      new ExpressionInfo(classOf[graft.functions.StripHtml].getName, "strip_html"),
-      (exprs: Seq[Expression]) => graft.functions.StripHtml(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("url_host"),
-      new ExpressionInfo(classOf[graft.functions.UrlHost].getName, "url_host"),
-      (exprs: Seq[Expression]) => graft.functions.UrlHost(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("url_domain"),
-      new ExpressionInfo(classOf[graft.functions.UrlDomain].getName, "url_domain"),
-      (exprs: Seq[Expression]) => graft.functions.UrlDomain(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("blocklist_hits"),
-      new ExpressionInfo(classOf[graft.functions.BlocklistHits].getName, "blocklist_hits"),
-      (exprs: Seq[Expression]) => graft.functions.BlocklistHits(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("scrub_pii"),
-      new ExpressionInfo(classOf[graft.functions.ScrubPii].getName, "scrub_pii"),
-      (exprs: Seq[Expression]) => graft.functions.ScrubPii(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("robots_match"),
-      new ExpressionInfo(classOf[graft.functions.RobotsMatch].getName, "robots_match"),
-      (exprs: Seq[Expression]) => graft.functions.RobotsMatch(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("http_status"),
-      new ExpressionInfo(classOf[graft.functions.HttpStatus].getName, "http_status"),
-      (exprs: Seq[Expression]) => graft.functions.HttpStatus(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("http_body"),
-      new ExpressionInfo(classOf[graft.functions.HttpBody].getName, "http_body"),
-      (exprs: Seq[Expression]) => graft.functions.HttpBody(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("http_header"),
-      new ExpressionInfo(classOf[graft.functions.HttpHeaderValue].getName, "http_header"),
-      (exprs: Seq[Expression]) => graft.functions.HttpHeaderValue(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("decode_payload"),
-      new ExpressionInfo(classOf[graft.functions.DecodePayload].getName, "decode_payload"),
-      (exprs: Seq[Expression]) => graft.functions.DecodePayload(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[graft.functions.BloomMightContain].getName, "bloom_might_contain"),
-      (exprs: Seq[Expression]) => graft.functions.BloomMightContain(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("cms_estimate"),
-      new ExpressionInfo(classOf[graft.functions.CmsEstimate].getName, "cms_estimate"),
-      (exprs: Seq[Expression]) => graft.functions.CmsEstimate(exprs(0), exprs(1))))
+    NativeFunctions.all.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), NativeFunctions.info(name), builder))
+    }
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinPrefilter)
   }
 }

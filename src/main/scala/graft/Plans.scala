@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dev tool: dump `.explain("formatted")` for named queries to files —
   * the optimization rounds' plan-evidence artifacts (plans/rNN/).
@@ -36,7 +37,7 @@ object Plans {
             org.apache.spark.sql.execution.FormattedMode)
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
           println(s"[plans] wrote $name")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[plans] $name failed: ${e.getMessage}")
         }
       }

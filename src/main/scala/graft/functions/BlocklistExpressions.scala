@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -219,16 +218,8 @@ object AhoCorasick {
 }
 
 object BlocklistExpressions {
-  private val blocklistHitsBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val blocklistHitsBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"blocklist_hits takes 2 arguments, got ${exprs.length}")
     BlocklistHits(exprs(0), exprs(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("blocklist_hits")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction("blocklist_hits", blocklistHitsBuilder, "built-in")
-    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
@@ -88,14 +87,8 @@ case class BloomMightContain(left: Expression, right: Expression)
 }
 
 object BloomExpressions {
-  /** Register `bloom_might_contain` in the session's function registry
-    * (idempotent), so it is usable from selectExpr / spark.sql. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      { children =>
-        require(children.size == 2, "bloom_might_contain(bloom, key) takes 2 arguments")
-        BloomMightContain(children.head, children(1))
-      },
-      "built-in")
+  private[functions] val bloomMightContainBuilder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 2, s"bloom_might_contain takes 2 arguments, got ${exprs.length}")
+    BloomMightContain(exprs(0), exprs(1))
+  }
 }

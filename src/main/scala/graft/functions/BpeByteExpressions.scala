@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -453,25 +452,12 @@ object BpeByteExpressions {
       mk(exprs(0), exprs(1))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val builder1: (String, Expression => Expression) => (Seq[Expression] => Expression) = {
-      (name, mk) => exprs => {
-        require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-        mk(exprs.head)
-      }
-    }
-    Seq(
-      ("bpe_encode_bytes", builder2("bpe_encode_bytes", BpeEncodeBytes.apply)),
-      ("bpe_decode_bytes", builder2("bpe_decode_bytes", BpeDecodeBytes.apply)),
-      ("bpe_segment_bytes", builder2("bpe_segment_bytes", BpeSegmentBytes.apply)),
-      ("bpe_encode_gpt2", builder2("bpe_encode_gpt2", BpeEncodeGpt2.apply)),
-      ("pretokenize_gpt2", builder1("pretokenize_gpt2", PretokenizeGpt2.apply))).foreach {
-      case (name, builder) =>
-        val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-        if (!reg.functionExists(id)) {
-          reg.createOrReplaceTempFunction(name, builder, "built-in")
-        }
-    }
+  private[functions] val encodeBytesBuilder = builder2("bpe_encode_bytes", BpeEncodeBytes.apply)
+  private[functions] val decodeBytesBuilder = builder2("bpe_decode_bytes", BpeDecodeBytes.apply)
+  private[functions] val segmentBytesBuilder = builder2("bpe_segment_bytes", BpeSegmentBytes.apply)
+  private[functions] val encodeGpt2Builder = builder2("bpe_encode_gpt2", BpeEncodeGpt2.apply)
+  private[functions] val pretokenizeGpt2Builder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 1, s"pretokenize_gpt2 takes 1 argument, got ${exprs.length}")
+    PretokenizeGpt2(exprs.head)
   }
 }

@@ -300,24 +300,17 @@ object BpeIntKit {
 }
 
 object BpeIntExpressions {
-  private val encodeBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val encodeBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"bpe_encode takes 2 arguments, got ${exprs.length}")
     BpeEncode(exprs(0), exprs(1))
   }
-  private val segmentBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val segmentBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"bpe_segment takes 2 arguments, got ${exprs.length}")
     BpeSegment(exprs(0), exprs(1))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(
-      ("bpe_encode", encodeBuilder),
-      ("bpe_segment", segmentBuilder)).foreach { case (name, builder) =>
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!reg.functionExists(id)) {
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-      }
-    }
-  }
+  /** Registers every native function, not only this family's: the
+    * perfbench harness calls this entry point, so it stays as a delegation
+    * to [[NativeFunctions.register]]. */
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
@@ -89,14 +88,8 @@ case class CmsEstimate(left: Expression, right: Expression)
 }
 
 object CmsExpressions {
-  /** Register `cms_estimate` in the session's function registry
-    * (idempotent), so it is usable from selectExpr / spark.sql. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_estimate",
-      { children =>
-        require(children.size == 2, "cms_estimate(cms, key) takes 2 arguments")
-        CmsEstimate(children.head, children(1))
-      },
-      "built-in")
+  private[functions] val cmsEstimateBuilder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 2, s"cms_estimate takes 2 arguments, got ${exprs.length}")
+    CmsEstimate(exprs(0), exprs(1))
+  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -344,24 +343,12 @@ case class ExtractMain(child: Expression) extends UnaryExpression {
 }
 
 object HtmlExpressions {
-  private val stripHtmlBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val stripHtmlBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"strip_html takes 1 argument, got ${exprs.length}")
     StripHtml(exprs.head)
   }
-  private val extractMainBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val extractMainBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"extract_main takes 1 argument, got ${exprs.length}")
     ExtractMain(exprs.head)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(
-      ("strip_html", stripHtmlBuilder),
-      ("extract_main", extractMainBuilder)).foreach { case (name, builder) =>
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!reg.functionExists(id)) {
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-      }
-    }
   }
 }

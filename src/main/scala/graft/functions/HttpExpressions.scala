@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -427,34 +426,20 @@ object HttpKit {
 }
 
 object HttpExpressions {
-  private val httpStatusBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val httpStatusBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"http_status takes 1 argument, got ${exprs.length}")
     HttpStatus(exprs.head)
   }
-  private val httpBodyBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val httpBodyBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"http_body takes 1 argument, got ${exprs.length}")
     HttpBody(exprs.head)
   }
-  private val decodePayloadBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val decodePayloadBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"decode_payload takes 2 arguments, got ${exprs.length}")
     DecodePayload(exprs(0), exprs(1))
   }
-  private val httpHeaderBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val httpHeaderBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"http_header takes 2 arguments, got ${exprs.length}")
     HttpHeaderValue(exprs(0), exprs(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(
-      ("http_status", httpStatusBuilder),
-      ("http_body", httpBodyBuilder),
-      ("http_header", httpHeaderBuilder),
-      ("decode_payload", decodePayloadBuilder)).foreach { case (name, builder) =>
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!reg.functionExists(id)) {
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-      }
-    }
   }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -263,16 +262,8 @@ object PiiKit {
 }
 
 object PiiExpressions {
-  private val scrubPiiBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val scrubPiiBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"scrub_pii takes 1 argument, got ${exprs.length}")
     ScrubPii(exprs.head)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("scrub_pii")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction("scrub_pii", scrubPiiBuilder, "built-in")
-    }
   }
 }

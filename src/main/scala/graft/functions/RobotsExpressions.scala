@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
@@ -85,16 +84,8 @@ object RobotsKit {
 }
 
 object RobotsExpressions {
-  private val robotsMatchBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val robotsMatchBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"robots_match takes 2 arguments, got ${exprs.length}")
     RobotsMatch(exprs(0), exprs(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("robots_match")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction("robots_match", robotsMatchBuilder, "built-in")
-    }
   }
 }

@@ -675,149 +675,64 @@ object WindowMins {
 
 object TextExpressions {
 
-  /** Shared expression builder (used by both the imperative register and the
-    * GraftExtensions injection): the window size must be a foldable integer
-    * expression — int or long literals both accepted. */
-  val wordNgramsBuilder: Seq[Expression] => Expression = { exprs =>
+  /** The value of a builder's integer argument, which must be a foldable
+    * int or long literal; `what` names it in the error message. */
+  private def foldInt(e: Expression, what: String): Int = {
+    // guard first: eval(null) on a column reference would throw an opaque
+    // unresolved/NPE error at parse time
+    require(e.foldable, s"$what must be a foldable (literal) integer, got ${e.sql}")
+    e.eval(null) match {
+      case i: Int  => i
+      case l: Long => math.toIntExact(l)
+      case null    => throw new IllegalArgumentException(s"$what must not be null")
+      case other =>
+        throw new IllegalArgumentException(s"$what must be a foldable integer, got $other")
+    }
+  }
+
+  private[functions] val wordNgramsBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"word_ngrams expects 2 arguments, got ${exprs.length}")
-    val n = exprs(1).eval(null) match {
-      case i: Int  => i
-      case l: Long => math.toIntExact(l)
-      case other =>
-        throw new IllegalArgumentException(
-          s"word_ngrams window must be a foldable integer, got $other")
-    }
-    WordNgrams(exprs(0), n)
+    WordNgrams(exprs(0), foldInt(exprs(1), "word_ngrams window"))
   }
 
-  /** Shared builder for `word_ngram_hash48` (same foldable-window contract
-    * as `word_ngrams`). */
-  val wordNgramHash48Builder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val wordNgramHash48Builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"word_ngram_hash48 expects 2 arguments, got ${exprs.length}")
-    val n = exprs(1).eval(null) match {
-      case i: Int  => i
-      case l: Long => math.toIntExact(l)
-      case other =>
-        throw new IllegalArgumentException(
-          s"word_ngram_hash48 window must be a foldable integer, got $other")
-    }
-    WordNgramHash48(exprs(0), n)
+    WordNgramHash48(exprs(0), foldInt(exprs(1), "word_ngram_hash48 window"))
   }
 
-  /** Shared builder for `simhash_bits` (same foldable-width contract). */
-  val simhashBitsBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val simhashBitsBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"simhash_bits expects 2 arguments, got ${exprs.length}")
-    val n = exprs(1).eval(null) match {
-      case i: Int  => i
-      case l: Long => math.toIntExact(l)
-      case other =>
-        throw new IllegalArgumentException(
-          s"simhash_bits width must be a foldable integer, got $other")
-    }
-    SimHashBits(exprs(0), n)
+    SimHashBits(exprs(0), foldInt(exprs(1), "simhash_bits width"))
   }
 
-  /** Shared builder for `max_token_run` (single array<string> argument). */
-  val maxTokenRunBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val maxTokenRunBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"max_token_run expects 1 argument, got ${exprs.length}")
     MaxTokenRun(exprs(0))
   }
 
-  /** Shared builder for `token_entropy` (single array<string> argument). */
-  val tokenEntropyBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val tokenEntropyBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"token_entropy expects 1 argument, got ${exprs.length}")
     TokenEntropy(exprs(0))
   }
 
-  /** Shared builder for `cdc_cuts` (text + foldable window + divisor). */
-  val cdcCutsBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val cdcCutsBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 3, s"cdc_cuts expects 3 arguments, got ${exprs.length}")
-    def foldInt(e: Expression, what: String): Int = e.eval(null) match {
-      case i: Int  => i
-      case l: Long => math.toIntExact(l)
-      case other =>
-        throw new IllegalArgumentException(
-          s"cdc_cuts $what must be a foldable integer, got $other")
-    }
-    CdcCuts(exprs(0), foldInt(exprs(1), "window"), foldInt(exprs(2), "divisor"))
+    CdcCuts(exprs(0), foldInt(exprs(1), "cdc_cuts window"), foldInt(exprs(2), "cdc_cuts divisor"))
   }
 
-  /** Shared builder for `window_mins` (array<long> + foldable window). */
-  val windowMinsBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val windowMinsBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"window_mins expects 2 arguments, got ${exprs.length}")
-    // foldability guard first: a column reference as the window arg would
-    // otherwise throw an opaque unresolved/NPE from eval(null) at parse time
-    require(exprs(1).foldable,
-      s"window_mins window must be a foldable (literal) integer, got ${exprs(1).sql}")
-    val w = exprs(1).eval(null) match {
-      case i: Int  => i
-      case l: Long => math.toIntExact(l)
-      case null =>
-        throw new IllegalArgumentException("window_mins window must not be null")
-      case other =>
-        throw new IllegalArgumentException(
-          s"window_mins window must be a foldable integer, got $other")
-    }
-    WindowMins(exprs(0), w)
+    WindowMins(exprs(0), foldInt(exprs(1), "window_mins window"))
   }
 
-  /** Shared builder for `char3_bucket_rates` (foldable bucket-count
-    * contract, the `window_mins` spelling). */
-  val char3BucketRatesBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val char3BucketRatesBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2,
       s"char3_bucket_rates expects 2 arguments, got ${exprs.length}")
-    require(exprs(1).foldable,
-      s"char3_bucket_rates bucket count must be a foldable (literal) integer, got ${exprs(1).sql}")
-    val n = exprs(1).eval(null) match {
-      case i: Int  => i
-      case l: Long => math.toIntExact(l)
-      case null =>
-        throw new IllegalArgumentException("char3_bucket_rates bucket count must not be null")
-      case other =>
-        throw new IllegalArgumentException(
-          s"char3_bucket_rates bucket count must be a foldable integer, got $other")
-    }
-    Char3BucketRates(exprs(0), n)
+    Char3BucketRates(exprs(0), foldInt(exprs(1), "char3_bucket_rates bucket count"))
   }
 
-  /** Register `word_ngrams` + `word_ngram_hash48` + `simhash_bits` +
-    * `max_token_run` in the session's function registry (idempotent,
-    * skip-if-present), so they are usable from selectExpr / spark.sql. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("word_ngrams")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction("word_ngrams", wordNgramsBuilder, "built-in")
-    }
-    val idH = org.apache.spark.sql.catalyst.FunctionIdentifier("word_ngram_hash48")
-    if (!reg.functionExists(idH)) {
-      reg.createOrReplaceTempFunction(
-        "word_ngram_hash48", wordNgramHash48Builder, "built-in")
-    }
-    val idS = org.apache.spark.sql.catalyst.FunctionIdentifier("simhash_bits")
-    if (!reg.functionExists(idS)) {
-      reg.createOrReplaceTempFunction("simhash_bits", simhashBitsBuilder, "built-in")
-    }
-    val idR = org.apache.spark.sql.catalyst.FunctionIdentifier("max_token_run")
-    if (!reg.functionExists(idR)) {
-      reg.createOrReplaceTempFunction("max_token_run", maxTokenRunBuilder, "built-in")
-    }
-    val idE = org.apache.spark.sql.catalyst.FunctionIdentifier("token_entropy")
-    if (!reg.functionExists(idE)) {
-      reg.createOrReplaceTempFunction("token_entropy", tokenEntropyBuilder, "built-in")
-    }
-    val idC = org.apache.spark.sql.catalyst.FunctionIdentifier("cdc_cuts")
-    if (!reg.functionExists(idC)) {
-      reg.createOrReplaceTempFunction("cdc_cuts", cdcCutsBuilder, "built-in")
-    }
-    val idW = org.apache.spark.sql.catalyst.FunctionIdentifier("window_mins")
-    if (!reg.functionExists(idW)) {
-      reg.createOrReplaceTempFunction("window_mins", windowMinsBuilder, "built-in")
-    }
-    val idB = org.apache.spark.sql.catalyst.FunctionIdentifier("char3_bucket_rates")
-    if (!reg.functionExists(idB)) {
-      reg.createOrReplaceTempFunction(
-        "char3_bucket_rates", char3BucketRatesBuilder, "built-in")
-    }
-  }
+  /** Registers every native function, not only this family's: the
+    * perfbench harness calls this entry point, so it stays as a delegation
+    * to [[NativeFunctions.register]]. */
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark)
 }

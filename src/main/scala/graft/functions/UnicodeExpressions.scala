@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -306,29 +305,16 @@ object UnicodeKit {
 }
 
 object UnicodeExpressions {
-  private val normalizeBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val normalizeBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"unicode_normalize takes 2 arguments, got ${exprs.length}")
     UnicodeNormalize(exprs(0), exprs(1))
   }
-  private val tokenizeBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val tokenizeBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"tokenize_text takes 1 argument, got ${exprs.length}")
     TokenizeText(exprs.head)
   }
-  private val sentencesBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val sentencesBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"split_sentences takes 1 argument, got ${exprs.length}")
     SplitSentences(exprs.head)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(
-      ("unicode_normalize", normalizeBuilder),
-      ("tokenize_text", tokenizeBuilder),
-      ("split_sentences", sentencesBuilder)).foreach { case (name, builder) =>
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!reg.functionExists(id)) {
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-      }
-    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -428,31 +427,18 @@ object UrlKit {
 }
 
 object UrlExpressions {
-  private val canonicalUrlBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val canonicalUrlBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"canonical_url takes 1 argument, got ${exprs.length}")
     CanonicalUrl(exprs.head)
   }
-  private val urlHostBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val urlHostBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"url_host takes 1 argument, got ${exprs.length}")
     UrlHost(exprs.head)
   }
-  private val urlDomainBuilder: Seq[Expression] => Expression = { exprs =>
+  private[functions] val urlDomainBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1 || exprs.length == 2,
       s"url_domain takes 1 (LITE) or 2 (PSL table) arguments, got ${exprs.length}")
     if (exprs.length == 1) UrlDomain(exprs.head)
     else UrlDomainPsl(exprs(0), exprs(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(
-      ("canonical_url", canonicalUrlBuilder),
-      ("url_host", urlHostBuilder),
-      ("url_domain", urlDomainBuilder)).foreach { case (name, builder) =>
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!reg.functionExists(id)) {
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-      }
-    }
   }
 }

@@ -34,7 +34,7 @@ object Ann {
       idCol: String,
       vecCol: String,
       centroids: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     require(centroids.columns.toSet == Set("centroid_id", "ce"),
       s"centroids needs exactly (centroid_id, ce); got ${centroids.columns.mkString(", ")}")
     // fail fast: internal/appended names must not collide with df's columns
@@ -71,7 +71,7 @@ object Ann {
       vecCol: String,
       centroids: DataFrame,
       nProbe: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     require(nProbe >= 1, s"nProbe ($nProbe) must be positive")
     val reserved = Set("centroid_id", "ce", "cluster_id", "probe_rank", "n2", "__cdot")
     val clash = df.columns.toSet.intersect(reserved)
@@ -315,7 +315,7 @@ object Ann {
       k: Int,
       iters: Int,
       dims: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     require(k >= 1, s"k ($k) must be positive")
     require(iters >= 0, s"iters ($iters) must be non-negative")
     require(dims >= 1, s"dims ($dims) must be positive")

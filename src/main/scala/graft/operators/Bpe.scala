@@ -77,7 +77,7 @@ object Bpe {
     * multilingual corpus trains real units instead of treating an entire
     * unspaced CJK document as one giant "word". One hash shuffle. */
   def wordCounts(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.UnicodeExpressions.register(df.sparkSession)
+    graft.functions.NativeFunctions.register(df.sparkSession)
     df.select(explode(expr(s"tokenize_text(`$textCol`)")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("wcnt"))
   }
@@ -89,7 +89,7 @@ object Bpe {
     * distinct bigram units, enough headroom for 512+ merges. One hash
     * shuffle; docs with fewer than two words contribute nothing. */
   def bigramCounts(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.UnicodeExpressions.register(df.sparkSession)
+    graft.functions.NativeFunctions.register(df.sparkSession)
     df.select(expr(s"tokenize_text(`$textCol`)").as("__toks"))
       .filter(size(col("__toks")) >= 2)
       .select(explode(expr(

@@ -41,7 +41,7 @@ object BpeByte {
   def pretokenCounts(df: org.apache.spark.sql.DataFrame, textCol: String)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.BpeByteExpressions.register(df.sparkSession)
+    graft.functions.NativeFunctions.register(df.sparkSession)
     df.select(explode(expr(s"pretokenize_gpt2(`$textCol`)")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("wcnt"))
   }
@@ -55,7 +55,7 @@ object BpeByte {
       maxRounds: Int = 64,
       candCap: Int = 16384,
       acceptCap: Int = 1024): DataFrame = {
-    graft.functions.BpeByteExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     BpeInt.fitCore(spark, words, wordCol, countCol, nMerges, maxRounds,
       candCap, acceptCap, IdBase, "bpe_encode_bytes", "BpeByte.fitBlocked")
   }

@@ -65,7 +65,7 @@ object BpeInt {
     * [[graft.functions.TokenizeText]] grammar; docs with fewer than four
     * tokens contribute nothing. One hash shuffle. */
   def fourgramCounts(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.UnicodeExpressions.register(df.sparkSession)
+    graft.functions.NativeFunctions.register(df.sparkSession)
     df.select(expr(s"tokenize_text(`$textCol`)").as("__toks"))
       .filter(size(col("__toks")) >= 4)
       .select(explode(expr(
@@ -85,7 +85,7 @@ object BpeInt {
       maxRounds: Int = 64,
       candCap: Int = 16384,
       acceptCap: Int = 1024): DataFrame = {
-    graft.functions.BpeIntExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     fitCore(spark, words, wordCol, countCol, nMerges, maxRounds, candCap,
       acceptCap, IdBase, "bpe_encode", "BpeInt.fitBlocked")
   }

@@ -55,7 +55,7 @@ object Curation {
       idCol: String,
       textCol: String,
       p: Params = Params()): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     require(p.shingleN >= 1 && p.minTokens >= 1, s"invalid params: $p")
     val reserved = Set("toks", "n_tokens", "avg_token_len", "quality_ok",
       "dup_frac", "repetition_ok", "n_sh", "n_overlap",

@@ -53,7 +53,7 @@ object Dedup {
       perms: Seq[(Long, Long)] = DefaultPerms): DataFrame = {
     require(perms.nonEmpty && perms.size % rowsPerBand == 0,
       s"perms (${perms.size}) must split evenly into bands of $rowsPerBand")
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val minhashes = perms.zipWithIndex.map { case ((a, b), i) =>
       s"array_min(transform(hs, h -> ($a * (h % $P) + $b) % $P)) as minh$i"
     }
@@ -68,7 +68,6 @@ object Dedup {
     // CJK text shingles over bigram units instead of arriving as one
     // un-shingleable "word"; degenerates to split-on-space on clean
     // spaced text, so spaced-corpus signatures are unchanged
-    graft.functions.UnicodeExpressions.register(spark)
     val sigs = df
       .withColumn("toks", expr(s"tokenize_text(`$textCol`)"))
       .filter(size(col("toks")) >= shingleN)

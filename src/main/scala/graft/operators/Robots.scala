@@ -82,7 +82,7 @@ object Robots {
       pathsDf: DataFrame,
       pathCol: String,
       agent: String): DataFrame = {
-    graft.functions.RobotsExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val bot = agent.toLowerCase
     val pathRules = rulesDf.filter(col("rule").isin("allow", "disallow"))
     // RFC 9309 §2.2.1: obey the bot-specific group set when one exists in

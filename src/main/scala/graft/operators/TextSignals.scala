@@ -59,8 +59,7 @@ object TextSignals {
       idCol: String,
       textCol: String,
       n: Int = 3): DataFrame = {
-    graft.functions.TextExpressions.register(corpus.sparkSession)
-    graft.functions.UnicodeExpressions.register(corpus.sparkSession)
+    graft.functions.NativeFunctions.register(corpus.sparkSession)
     val reserved = Set("__toks", "__shingle", "__hit", "n_sh", "n_overlap", "contam_frac")
     val clash = (corpus.columns ++ eval.columns).toSet.intersect(reserved)
     require(clash.isEmpty, s"input columns collide with reserved names: $clash")

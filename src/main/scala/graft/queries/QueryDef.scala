@@ -121,14 +121,9 @@ object Tables {
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Library-wide native functions: any query may reach them via selectExpr.
-    graft.functions.TextExpressions.register(spark)
-    graft.functions.BloomExpressions.register(spark)
-    graft.functions.CmsExpressions.register(spark)
-    // tokenize_text/unicode_normalize/split_sentences: the query layer
-    // tokenizes through the script-aware grammar everywhere (the r8
-    // split-debt retirement), so the registration is library-wide too
-    graft.functions.UnicodeExpressions.register(spark)
+    // the query layer's one registration: every query loads a table before
+    // it names a native function in selectExpr / expr
+    graft.functions.NativeFunctions.register(spark)
     val loaded = if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")

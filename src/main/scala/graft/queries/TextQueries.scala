@@ -1824,7 +1824,6 @@ object TextQueries {
         // hazard q98/GlobalRank exists to kill. Ranks must stay exact
         // (the fused output reports them), so a top-k cap is not an
         // option. Fusion then joins two narrow rank frames on doc.
-        graft.functions.VectorExpressions.register(s)
         // GlobalRank orders ascending; negating the score (exact IEEE)
         // gives the DESC ranking with the same doc_id tie-break
         // r12: LAZY bounds for both rank passes (GlobalRank.boundsOf
@@ -2697,7 +2696,6 @@ object TextQueries {
         // form runs unicode_normalize first. Scale: one hash shuffle on
         // the canonical md5 + one group-back equi-join, exactly the q23
         // shape; normalization is map-only codegen.
-        graft.functions.UnicodeExpressions.register(s)
         val docs = table(s, dir, "documents").select("doc_id", "text")
         val twins = docs
           .filter(col("doc_id") % 25 === 0)
@@ -6837,7 +6835,6 @@ object TextQueries {
         // canonicalization rule in portable string SQL. Scale: map-only
         // canonicalization inside WholeStageCodegen + ONE hash aggregate
         // on the canonical key.
-        graft.functions.UrlExpressions.register(s)
         table(s, dir, "documents")
           .selectExpr("doc_id", "source")
           .withColumn("url", expr(
@@ -7106,7 +7103,6 @@ object TextQueries {
         // CONSTRUCTION, not the parser — an independent ground truth the
         // stripper has to land on byte-for-byte, 500x per SF. Map-only,
         // one WholeStageCodegen span.
-        graft.functions.HtmlExpressions.register(s)
         table(s, dir, "documents")
           .selectExpr("doc_id", "source", "text")
           .withColumn("html", expr(
@@ -7205,7 +7201,6 @@ object TextQueries {
         // bit-equal cross-engine by q146, so the label can never flip on
         // a last-ulp log2 difference. One map-only labeling pass + one
         // 4-cell contingency aggregate; kappa is pure 1-row arithmetic.
-        graft.functions.TextExpressions.register(s)
         val labeled = table(s, dir, "documents")
           .withColumn("toks", expr("tokenize_text(text)"))
           .withColumn("n_tokens", size(col("toks")))
@@ -7444,7 +7439,6 @@ object TextQueries {
         // strip_html discipline) must recover exactly the constructed
         // status and body; the oracle replays the CONSTRUCTION, never the
         // parser. Map-only, one WholeStageCodegen span.
-        graft.functions.HttpExpressions.register(s)
         table(s, dir, "documents")
           .selectExpr("doc_id", "text",
             "cast(doc_id % 5 as int) as kind",
@@ -7494,7 +7488,6 @@ object TextQueries {
         // á/é/ø, all Latin-1) and ENCODED in the declared charset with
         // Spark's own encode(), so the expected decode is known by
         // construction; the oracle replays the construction. Map-only.
-        graft.functions.HttpExpressions.register(s)
         table(s, dir, "documents")
           .selectExpr("doc_id",
             "replace(replace(replace(text, 'a', 'á'), 'e', 'é'), 'o', 'ø') as acc",
@@ -7638,7 +7631,6 @@ object TextQueries {
         // plus a probe for a header that is never present. The oracle
         // replays the construction: lang/source come straight off the
         // table, fold or not. Map-only, one codegen'd pass per column.
-        graft.functions.HttpExpressions.register(s)
         table(s, dir, "documents")
           .selectExpr("doc_id", "lang", "source")
           .withColumn("msg", expr(
@@ -7681,7 +7673,6 @@ object TextQueries {
         // straight from the construction branches (it never parses), so
         // every normalization rule (www/userinfo/port strip, cc
         // second-level keep-three) is locked. One hash aggregate.
-        graft.functions.UrlExpressions.register(s)
         table(s, dir, "documents")
           .selectExpr("doc_id", "source", "cast(doc_id % 4 as int) as kind")
           .withColumn("url", expr(
@@ -7859,7 +7850,6 @@ object TextQueries {
         // patterns, documented rule order EMAIL>IP>CARD>PHONE) must land
         // exactly on the constructed redaction; the oracle replays the
         // construction. Map-only, one pass per row.
-        graft.functions.PiiExpressions.register(s)
         table(s, dir, "documents")
           .selectExpr("doc_id", "text")
           .withColumn("dirty", expr(
@@ -7944,7 +7934,6 @@ object TextQueries {
         // every doc. Phrases deliberately overlap ('table' inside
         // 'table value'), cross word boundaries, and include an
         // absent probe. Map-only, one codegen'd pass.
-        graft.functions.BlocklistExpressions.register(s)
         table(s, dir, "documents")
           .selectExpr("doc_id",
             """blocklist_hits(text, array(
@@ -8081,7 +8070,6 @@ object TextQueries {
         // of the full string, not just lengths). Map-only codegen'd pass;
         // the capability every visually-identical-spelling dedup bug at
         // crawl scale traces back to.
-        graft.functions.UnicodeExpressions.register(s)
         val sfx = when(col("doc_id") % 4 === 0, lit(" cafe\u0301"))
           .when(col("doc_id") % 4 === 1, lit(" \ufb01le \uff21"))
           .when(col("doc_id") % 4 === 2, lit(" \u6f22\u5b57"))
@@ -8135,7 +8123,6 @@ object TextQueries {
         // tokens with string_split and the CJK expansion with explicit
         // expected bigram lists. Map-only codegen'd pass; this grammar
         // is what wordCounts/shingles now route through.
-        graft.functions.UnicodeExpressions.register(s)
         val sfx = when(col("doc_id") % 3 === 0,
             lit(" \u6f22\u5b57\u30c6\u30b9\u30c8"))
           .when(col("doc_id") % 3 === 1, lit(" abc\u6f22\u5b57def"))
@@ -8218,7 +8205,6 @@ object TextQueries {
         // used. The oracle recomputes the same stats from its replayed
         // final table state — agreement proves the single-expression
         // apply equals the round-by-round table mutation end to end.
-        graft.functions.BpeIntExpressions.register(s)
         val docs = table(s, dir, "documents")
           .filter(col("doc_id") < 500).select("text")
         val units = graft.operators.BpeInt.fourgramCounts(docs, "text")
@@ -8277,7 +8263,6 @@ object TextQueries {
         // oracle computes the expected keys straight from the
         // construction branches, locking the published PSL algorithm:
         // exception beats wildcard beats longest-plain beats default.
-        graft.functions.UrlExpressions.register(s)
         val rules = "uk;co.uk;au;com.au;io;github.io;com;net;org;ck;*.ck;!city.ck"
         table(s, dir, "documents")
           .selectExpr("doc_id", "source", "cast(doc_id % 5 as int) as kind")
@@ -8336,7 +8321,6 @@ object TextQueries {
         // expected outputs itself, so ANY false positive (a decoy
         // touched) or false negative (a plant missed) breaks a count
         // and the hash. Map-only + one hash aggregate.
-        graft.functions.PiiExpressions.register(s)
         val plant = expr(
           """case cast(doc_id % 12 as int)
                when 0  then concat('u', cast(doc_id as string), '@ex.org')
@@ -8429,7 +8413,6 @@ object TextQueries {
         // the integer days-to-drain for its backlog. Scale: per-FILE
         // robots windows, host-keyed equi-joins, one aggregate — no
         // stage differs from its standalone plan-locked shape.
-        graft.functions.UrlExpressions.register(s)
         val docs = table(s, dir, "documents")
           .selectExpr("doc_id", "source", "cast(doc_id % 7 + 1 as string) as cd")
         val txt = docs.withColumn("txt", expr(
@@ -8509,7 +8492,6 @@ object TextQueries {
         // not decorative), and (c) surface the pair as an LSH candidate
         // (identical tokens => identical signatures => same buckets).
         // The oracle states all three from the construction.
-        graft.functions.UnicodeExpressions.register(s)
         val docs = table(s, dir, "documents").select("doc_id", "text")
         val sfxNfc = " caf\u00e9 \u6f22\u5b57\u30c6\u30b9\u30c8 end"
         val sfxNfd = " cafe\u0301 \u6f22\u5b57\u30c6\u30b9\u30c8 end"
@@ -8625,7 +8607,6 @@ object TextQueries {
         // runs, closers, missing-terminator tails and unspaced CJK.
         // Locked per doc by an md5 over the ENTIRE sentence stream —
         // one boundary off anywhere fails the row. Map-only pass.
-        graft.functions.UnicodeExpressions.register(s)
         table(s, dir, "documents")
           .select(col("doc_id"), concat(col("text"), sentenceTail).as("t"))
           .withColumn("sents", expr("split_sentences(t)"))
@@ -8665,7 +8646,6 @@ object TextQueries {
         // by corpus_size/df so it BROADCASTS back (no second wide
         // shuffle); per-doc order is restored from carried positions,
         // never from collect order.
-        graft.functions.UnicodeExpressions.register(s)
         val sent = table(s, dir, "documents")
           .select(col("doc_id"), concat(col("text"), sentenceTail).as("t"))
           .select(col("doc_id"),
@@ -8815,7 +8795,6 @@ object TextQueries {
         // already-locked shape (map-only passes, one sentence-df
         // shuffle + bounded broadcast, hash-group dedup); at 100 TB the
         // normalized frame would be pinned once across stages.
-        graft.functions.UnicodeExpressions.register(s)
         val cjkTail = " " + ("\u6f22\u5b57\u3067\u3059" * 10) +
           "\u3002\u6b21\u306e\u6587\uff01"
         val raw = table(s, dir, "documents").select(col("doc_id"),
@@ -8971,7 +8950,6 @@ object TextQueries {
         // it as a list_reduce with a delimited VARCHAR state. Locked by
         // the FULL chunk-assignment vector (md5 over the per-sentence
         // chunk ids): one wrong boundary anywhere fails the row.
-        graft.functions.UnicodeExpressions.register(s)
         table(s, dir, "documents")
           .select(col("doc_id"), concat(col("text"), sentenceTail).as("t"))
           .withColumn("sents", expr("split_sentences(t)"))
@@ -9087,7 +9065,6 @@ object TextQueries {
         // its replayed final table state and asserts the construction
         // laws (all units round-trip, lines = merges + 1, vocab =
         // 256 + merges).
-        graft.functions.BpeByteExpressions.register(s)
         val units = graft.operators.BpeInt.fourgramCounts(bpeByteCorpus(s, dir), "t")
           .localCheckpoint(true)
         val m = graft.operators.BpeByte.fitBlocked(s, units, "w", "wcnt",
@@ -9162,7 +9139,6 @@ object TextQueries {
         // the block-join. extract_main must recover EXACTLY the article
         // paragraphs; the oracle replays the CONSTRUCTION (q239's
         // discipline), not the parser. Map-only codegen'd pass.
-        graft.functions.HtmlExpressions.register(s)
         table(s, dir, "documents")
           .selectExpr("doc_id", "source", "text", "cast(doc_id % 2 as int) as kind")
           .withColumn("html", expr(
@@ -9506,7 +9482,6 @@ object TextQueries {
         // and rebuilds each doc's id sequence by joining its pieces (in
         // order) against the final replayed unit state — one wrong merge,
         // boundary, or id anywhere breaks the md5 of some doc.
-        graft.functions.BpeByteExpressions.register(s)
         val corpus = bpeGpt2Corpus(s, dir).localCheckpoint(true)
         val units = graft.operators.BpeByte.pretokenCounts(corpus, "t")
           .localCheckpoint(true)
@@ -9572,7 +9547,6 @@ object TextQueries {
         // window md5. The oracle rebuilds the whole id stream from its
         // replayed chain and re-slices it arithmetically — any boundary
         // or separator error shifts every later window's hash.
-        graft.functions.BpeByteExpressions.register(s)
         val corpus = bpeGpt2Corpus(s, dir).localCheckpoint(true)
         val units = graft.operators.BpeByte.pretokenCounts(corpus, "t")
           .localCheckpoint(true)
@@ -9633,7 +9607,6 @@ object TextQueries {
         // a read-back re-manifest; readback_ok certifies the round trip.
         // The oracle replays windows, shards, counts, and content hashes
         // from its own replayed id stream.
-        graft.functions.BpeByteExpressions.register(s)
         val corpus = bpeGpt2Corpus(s, dir).localCheckpoint(true)
         val units = graft.operators.BpeByte.pretokenCounts(corpus, "t")
           .localCheckpoint(true)
@@ -9699,7 +9672,6 @@ object TextQueries {
         // no overlaps). The oracle re-derives every span arithmetically
         // from per-doc offsets: a = max(0, off - w*128),
         // b = min(128, off + n - w*128).
-        graft.functions.BpeByteExpressions.register(s)
         val corpus = bpeGpt2Corpus(s, dir).localCheckpoint(true)
         val units = graft.operators.BpeByte.pretokenCounts(corpus, "t")
           .localCheckpoint(true)
@@ -9772,7 +9744,6 @@ object TextQueries {
         // training order (locks the ORDER, not just the set). The
         // oracle replays the permutation keys, the rank deal, and every
         // aggregate.
-        graft.functions.BpeByteExpressions.register(s)
         val corpus = bpeGpt2Corpus(s, dir).localCheckpoint(true)
         val units = graft.operators.BpeByte.pretokenCounts(corpus, "t")
           .localCheckpoint(true)
@@ -9875,7 +9846,6 @@ object TextQueries {
         // the label md5 (content-exact), the masked count, and the
         // first 8 labels verbatim. The oracle rebuilds labels from its
         // replayed id stream and span starts.
-        graft.functions.BpeByteExpressions.register(s)
         val corpus = bpeGpt2Corpus(s, dir).localCheckpoint(true)
         val units = graft.operators.BpeByte.pretokenCounts(corpus, "t")
           .localCheckpoint(true)
@@ -9963,7 +9933,6 @@ object TextQueries {
         // never disagree about EOS. Stats run under the RE-IMPORTED
         // spec: unit compression, the weighted byte-level decode
         // round-trip law, artifact shape, spec==reimport.
-        graft.functions.BpeByteExpressions.register(s)
         val corpus = bpeGpt2Corpus(s, dir)
         val units = graft.operators.BpeByte.pretokenCounts(corpus, "t")
           .localCheckpoint(true)
@@ -10054,7 +10023,6 @@ object TextQueries {
         // crawl front, the full training, the per-doc encode, the
         // packing arithmetic, and every shard hash from the parquet
         // corpus — one wrong byte anywhere in the chain shifts a hash.
-        graft.functions.BpeByteExpressions.register(s)
         val st = capstoneStages(s, dir)
         val mixed = st.mixed
         val sample = mixed.filter(col("rid") < 1500)
@@ -10166,7 +10134,6 @@ object TextQueries {
         // from its own replayed id stream and recomputes every family
         // hash — a flipped id, a shifted span bound, or one wrong label
         // anywhere fails exactly its family's column on its shard.
-        graft.functions.BpeByteExpressions.register(s)
         val corpus = bpeGpt2Corpus(s, dir).localCheckpoint(true)
         val units = graft.operators.BpeByte.pretokenCounts(corpus, "t")
           .localCheckpoint(true)
@@ -10797,10 +10764,9 @@ object TextQueries {
 
   private def capstoneStages(
       s: org.apache.spark.sql.SparkSession, dir: String): CapstoneStages = {
-    graft.functions.HttpExpressions.register(s)
-    graft.functions.HtmlExpressions.register(s)
-    graft.functions.UnicodeExpressions.register(s)
-    graft.functions.UrlExpressions.register(s)
+    // the stages read the WARC fixture, not a table, so nothing has
+    // registered the native functions on this path yet
+    graft.functions.NativeFunctions.register(s)
     val warcDir = capstoneWarcFixture(s, dir)
     val all = s.read.format("warc").load(warcDir)
     val resp = all.filter(col("record_type") === "response")

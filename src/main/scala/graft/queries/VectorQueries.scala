@@ -213,7 +213,6 @@ object VectorQueries {
     Q(
       "q33_ann_topk",
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val e = table(s, dir, "embeddings")
         // Per-vector squared norm computed inline (native codegen dot, no
         // shuffle); the probe x corpus join is broadcast (probe side tiny).
@@ -280,7 +279,6 @@ object VectorQueries {
     Q(
       "q38_embed_neardup_lsh",
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         // Use-site of the parameterized hyperplane-LSH operator at its
         // 8-plane single-band setting: deterministic LCG planes mapped to
         // [-0.5, 0.5), same integer arithmetic in both engines -> identical
@@ -598,7 +596,6 @@ object VectorQueries {
         // q33 posture); the candidate sides are the production equi-join
         // path, whose work scales linearly in nProbe. This is the audit a
         // deployment runs before trusting nProbe-tuned search.
-        graft.functions.VectorExpressions.register(s)
         val e = table(s, dir, "embeddings").select("vec_id", "embedding")
         val cents = e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("centroid_id"), col("embedding").as("ce"))
@@ -697,7 +694,6 @@ object VectorQueries {
         // cartesian — so re-ranking costs O(probes x 10) dots regardless
         // of corpus size: the recall of float scoring at the memory cost
         // of int8 storage.
-        graft.functions.VectorExpressions.register(s)
         val e = table(s, dir, "embeddings").select("vec_id", "embedding")
         val cents = e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("centroid_id"), col("embedding").as("ce"))
@@ -864,7 +860,6 @@ object VectorQueries {
         // sample (q70's machinery, the q97 knob), so the quadratic truth
         // join is bounded at ANY corpus size while the candidate side
         // stays the production equi-join shape.
-        graft.functions.VectorExpressions.register(s)
         val hk = graft.functions.HashConventions
           .md5long48("concat('sdr|', cast(vec_id as string))")
         // PAIR-AWARE sampling: sample BASE ids, then include every sampled
@@ -1375,7 +1370,6 @@ object VectorQueries {
     Q(
       "q153_hard_negatives",
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         // Contrastive HARD-NEGATIVE mining: for each probe, the top-3 most
         // cosine-similar vectors with a DIFFERENT label — the negatives
         // that sit closest to the decision boundary, which is exactly what
@@ -1434,7 +1428,6 @@ object VectorQueries {
     Q(
       "q154_cluster_purity",
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         // External cluster-quality audit of the IVF assignment against the
         // ground-truth labels: purity (majority-label mass), Rand index
         // (pair-agreement), and adjusted Rand (chance-corrected) — the
@@ -1571,7 +1564,6 @@ object VectorQueries {
     Q(
       "q158_silhouette",
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         // INTERNAL cluster-quality metric to pair with q154's external
         // panel: the simplified (centroid-based) silhouette — a = distance
         // to the OWN centroid, b = min distance to any OTHER centroid,
@@ -2033,7 +2025,6 @@ object VectorQueries {
         // frame and its (probes x 8 x 8) pairwise-sim frame — bounded by
         // the probe set, never corpus-sized; selection argmax is a
         // partitioned (per-pid) window.
-        graft.functions.VectorExpressions.register(s)
         val e = table(s, dir, "embeddings").select("vec_id", "embedding")
         val wn = e.selectExpr("vec_id", "embedding",
           s"${sparkDot("embedding", "embedding")} as n2")
@@ -2164,7 +2155,6 @@ object VectorQueries {
         // sf0.001). Scale: truth is probes x corpus with the probe side
         // broadcast; candidates are cluster-keyed equi-joins whose work
         // grows linearly in nProbe — never all-pairs.
-        graft.functions.VectorExpressions.register(s)
         val tau = 0.35
         val e = table(s, dir, "embeddings").select("vec_id", "embedding")
         val cents = e.filter(col("vec_id") < 8)
@@ -2403,7 +2393,6 @@ object VectorQueries {
         // Scale: the prefix scan is the only corpus-sized pass and it
         // reads an 8-float slice; the full vectors surface only for the
         // 32-row-per-probe shortlist. Probes constant (vec_id < 20).
-        graft.functions.VectorExpressions.register(s)
         val e = table(s, dir, "embeddings")
           .selectExpr("vec_id", "embedding",
             "slice(embedding, 1, 8) as pre",
@@ -2498,7 +2487,6 @@ object VectorQueries {
         // q261 audit discipline). Scale: packing is map-only; the
         // probe side is a bounded broadcast; the corpus-sized pass
         // reads 16 bytes per vector instead of 256.
-        graft.functions.VectorExpressions.register(s)
         def pack(w: Int) =
           s"aggregate(sequence(0, 31), 0L, (acc, k) -> " +
             s"acc + if(element_at(embedding, ${w * 32} + k + 1) > 0, shiftleft(1L, k), 0L))"

@@ -167,18 +167,6 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
     else bins.map(b => Bi5Partition(b, walk = false): InputPartition)
   }
 
-  /** Extreme-file-count mode (`listShards=N`): the recursive listing runs as
-    * a SPARK JOB — one task group over the root's immediate child subtrees —
-    * and each task prunes, sorts, and bin-packs ITS OWN files before anything
-    * returns to the driver. The driver therefore only ever holds the packed
-    * partition bins (which planInputPartitions must produce regardless),
-    * never the flat (path, size) listing: at 10M files that is the difference
-    * between ~1 GB of listing pairs plus sort scratch and just the partition
-    * array. Per-shard packing can leave at most one underfull bin per task
-    * (bounded by listShards, not by file count). The bin target is the
-    * explicit maxPartitionBytes, or its 128 MiB default — the small-dataset
-    * parallelism heuristic needs a global byte total the driver deliberately
-    * no longer computes. */
   /** Immediate child subtrees of the load root — the task granularity of
     * every listShards-mode distributed listing job. */
   private def shardRoots(): Seq[String] =
@@ -224,6 +212,18 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
       })
     }
 
+  /** Extreme-file-count mode (`listShards=N`): the recursive listing runs as
+    * a SPARK JOB — one task group over the root's immediate child subtrees —
+    * and each task prunes, sorts, and bin-packs ITS OWN files before anything
+    * returns to the driver. The driver therefore only ever holds the packed
+    * partition bins (which planInputPartitions must produce regardless),
+    * never the flat (path, size) listing: at 10M files that is the difference
+    * between ~1 GB of listing pairs plus sort scratch and just the partition
+    * array. Per-shard packing can leave at most one underfull bin per task
+    * (bounded by listShards, not by file count). The bin target is the
+    * explicit maxPartitionBytes, or its 128 MiB default — the small-dataset
+    * parallelism heuristic needs a global byte total the driver deliberately
+    * no longer computes. */
   private def planFileBinsSharded(): Array[InputPartition] = {
     val bins = shardedListing(allFilters)._1
     if (bins.isEmpty) Array(Bi5Partition(Array.empty, walk = false))

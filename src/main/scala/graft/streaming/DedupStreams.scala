@@ -52,7 +52,7 @@ object DedupStreams {
     * permutations from [[graft.functions.HashConventions]], 2x2 bands.
     * Works unchanged on batch and streaming frames (pure projection). */
   def minhashBands(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val P = graft.functions.HashConventions.MinhashP
     val perms = graft.functions.HashConventions.MinhashPerms
     val minhs = perms.zipWithIndex.map { case ((a, b), i) =>

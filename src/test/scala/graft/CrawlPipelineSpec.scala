@@ -88,9 +88,7 @@ class CrawlPipelineSpec extends AnyFunSuite {
 
     // ---- stage 1: scan with pushed type filter; charset-aware decode,
     // then the native HTTP peel + HTML strip (no ad-hoc string surgery)
-    graft.functions.UrlExpressions.register(spark)
-    graft.functions.HtmlExpressions.register(spark)
-    graft.functions.HttpExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val responses = spark.read.format("warc").load(dir.toString)
       .filter(col("record_type") === "response")
       .select(
@@ -179,8 +177,7 @@ class CrawlPipelineSpec extends AnyFunSuite {
     g.write(recBytes(2, gbkPage.getBytes("GBK")))
     g.finish(); f.close()
 
-    graft.functions.HtmlExpressions.register(spark)
-    graft.functions.HttpExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val decoded = spark.read.format("warc").load(dir.toString)
       .select(
         expr("cast(regexp_extract(record_id, '<urn:uuid:c-(\\\\d+)>', 1) as bigint)")
@@ -198,7 +195,6 @@ class CrawlPipelineSpec extends AnyFunSuite {
     // the WHOLE text-extraction chain is stateless map-only expressions,
     // so it runs UNCHANGED on the live crawl tail: stream the same
     // segments and require streaming == batch row-for-row
-    graft.functions.PiiExpressions.register(spark)
     val q = spark.readStream.format("warc").load(dir.toString)
       .select(
         expr("cast(regexp_extract(record_id, '<urn:uuid:c-(\\\\d+)>', 1) as bigint)")

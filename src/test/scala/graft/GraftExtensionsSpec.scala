@@ -1,32 +1,55 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.NativeFunctions
+
 /** The extensions entry point must expose the native functions to a session
-  * configured only with `spark.sql.extensions` — the zero-code-integration
-  * path for SQL-only users. */
+  * built with it alone — the zero-code-integration path for SQL-only users. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
+  // create() always builds a new session with a function registry of its
+  // own, so what resolves here came from the extension. getOrCreate() would
+  // hand back any session an earlier suite made, where the query library
+  // has registered the functions imperatively.
   lazy val spark: SparkSession = {
-    // getOrCreate() silently IGNORES spark.sql.extensions when a default
-    // session already exists (any earlier suite in this JVM) — and the query
-    // library registers the functions imperatively, which would make this
-    // test pass without the extension ever running. Stop any pre-existing
-    // session so the config path is genuinely exercised; suites run
-    // sequentially, and later ones getOrCreate a fresh session.
-    SparkSession.getDefaultSession.foreach(_.stop())
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
     val s = SparkSession.builder()
       .master("local[2]")
       .appName("GraftExtensionsSpec")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .withExtensions(new GraftExtensions)
+      .create()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  test("the extension's session has its own function registry") {
+    val ext = spark.sessionState.functionRegistry
+    // a second session on the same context, built without the extension
+    val plain = SparkSession.builder().create().sessionState.functionRegistry
+    val url = FunctionIdentifier("url_host")
+    assert(plain ne ext)
+    assert(!plain.functionExists(url))
+    assert(ext.functionExists(url))
+  }
+
+  test("every entry of NativeFunctions.all is injected with its table builder") {
+    val reg = spark.sessionState.functionRegistry
+    val wrong = NativeFunctions.all.collect {
+      case (name, builder)
+          if !reg.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder) => name
+    }
+    assert(wrong.isEmpty, s"not injected with the table's builder: $wrong")
+    assert(spark.sql("select url_host('http://Example.org/a')").head().getString(0) ===
+      "example.org")
+  }
+
+  test("a wrong-arity call fails with the builder's arity message") {
+    val e = intercept[Exception](spark.sql("select url_host()").collect())
+    assert(e.getMessage.contains("url_host takes 1 argument, got 0"), e.getMessage)
   }
 
   test("vec_dot and word_ngrams are usable from pure SQL") {

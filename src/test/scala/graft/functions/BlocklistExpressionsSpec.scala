@@ -17,7 +17,7 @@ class BlocklistExpressionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    BlocklistExpressions.register(s)
+    NativeFunctions.register(s)
     s
   }
 

@@ -16,7 +16,7 @@ class HtmlExpressionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    HtmlExpressions.register(s)
+    NativeFunctions.register(s)
     s
   }
 

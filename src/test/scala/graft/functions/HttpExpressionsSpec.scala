@@ -17,7 +17,7 @@ class HttpExpressionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    HttpExpressions.register(s)
+    NativeFunctions.register(s)
     s
   }
 

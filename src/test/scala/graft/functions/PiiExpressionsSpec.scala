@@ -17,7 +17,7 @@ class PiiExpressionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    PiiExpressions.register(s)
+    NativeFunctions.register(s)
     s
   }
 

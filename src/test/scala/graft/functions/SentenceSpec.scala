@@ -20,7 +20,7 @@ class SentenceSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    UnicodeExpressions.register(s)
+    NativeFunctions.register(s)
     s
   }
 

@@ -16,7 +16,7 @@ class TextExpressionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    TextExpressions.register(s)
+    NativeFunctions.register(s)
     s
   }
 

@@ -18,7 +18,7 @@ class UnicodeExpressionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    UnicodeExpressions.register(s)
+    NativeFunctions.register(s)
     s
   }
 

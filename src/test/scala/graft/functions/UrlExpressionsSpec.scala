@@ -16,7 +16,7 @@ class UrlExpressionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    UrlExpressions.register(s)
+    NativeFunctions.register(s)
     s
   }
 

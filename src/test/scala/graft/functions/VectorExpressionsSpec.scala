@@ -13,7 +13,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    VectorExpressions.register(s)
+    NativeFunctions.register(s)
     s
   }
 

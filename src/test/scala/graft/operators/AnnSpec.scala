@@ -79,7 +79,7 @@ class AnnSpec extends AnyFunSuite {
         .select("pid", "rank", "cid").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     // exact oracle: brute-force cosine top-3 (same sim formula, no routing)
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val p = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
     val brute = e.select(col("vec_id").as("cid"), col("embedding").as("ce2"))

@@ -54,7 +54,7 @@ class BloomSketchSpec extends AnyFunSuite {
 
   test("codegen'd bloom_might_contain equals the interpreted reference") {
     import spark.implicits._
-    graft.functions.BloomExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val keys = (0L until 300L).map(BloomSketch.splitmix64)
     val bloom = jvmBloom(keys)
     // half members, half non-members, through the SQL surface. The

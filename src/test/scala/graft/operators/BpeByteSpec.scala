@@ -25,7 +25,7 @@ class BpeByteSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.BpeByteExpressions.register(s)
+    graft.functions.NativeFunctions.register(s)
     s
   }
 

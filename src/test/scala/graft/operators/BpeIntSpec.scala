@@ -21,7 +21,7 @@ class BpeIntSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.BpeIntExpressions.register(s)
+    graft.functions.NativeFunctions.register(s)
     s
   }
 

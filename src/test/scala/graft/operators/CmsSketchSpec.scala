@@ -56,7 +56,7 @@ class CmsSketchSpec extends AnyFunSuite {
 
   test("codegen'd cms_estimate equals the interpreted reference") {
     import spark.implicits._
-    graft.functions.CmsExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val keys = zipfKeys
     val cms = jvmCms(keys)
     // members and non-members through the SQL surface; the repartition

@@ -38,7 +38,7 @@ class RobotsSpec extends AnyFunSuite {
     // '*' backtracking across '/' (RFC: star crosses segments)
     assert(RobotsKit.matchesJava("/a/*/c", "/a/b1/b2/c-tail"))
     // SQL registration + codegen path
-    graft.functions.RobotsExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val r = spark.sql("select robots_match('/*.zip$', '/x/y.zip'), robots_match('/q', '/x')").head()
     assert(r.getBoolean(0) && !r.getBoolean(1))
   }

@@ -60,7 +60,7 @@ class TokenizationDisciplineSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.UnicodeExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     import spark.implicits._
     // real corpus rows: the degeneracy must hold on actual fixture text
     val rows = Tables.table(spark, "/root/testdata/sf0.001", "documents")

@@ -132,7 +132,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("writePackedManifest: verified delivery, per-shard files, tamper detection") {
-    graft.functions.UnicodeExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val docs = graft.queries.Tables.table(spark, Sf, "documents")
       .selectExpr("doc_id", "cast(size(tokenize_text(text)) as long) as n_tok")
     val packed = graft.operators.Packer

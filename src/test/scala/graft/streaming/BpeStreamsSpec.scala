@@ -73,7 +73,7 @@ class BpeStreamsSpec extends AnyFunSuite {
     // frozen spec string is the shipped artifact — bpe_encode is a
     // stateless foldable-constant expression, so the streaming plan IS
     // the batch plan (no stream-static join even needed)
-    graft.functions.BpeIntExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val units = graft.operators.BpeInt.fourgramCounts(docs, "text")
     val merges = graft.operators.BpeInt.fitBlocked(
       spark, units, "w", "wcnt", nMerges = 512, maxRounds = 64)

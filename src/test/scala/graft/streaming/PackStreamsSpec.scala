@@ -43,7 +43,7 @@ class PackStreamsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     // train once, batch-side — the frozen production artifact; the
     // stream encodes under the spec STRING (stateless expression)
-    graft.functions.BpeByteExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val units = graft.operators.BpeByte.pretokenCounts(
       docs.withColumnRenamed("text", "t"), "t").localCheckpoint(true)
     val m = graft.operators.BpeByte.fitBlocked(spark, units, "w", "wcnt",
