@@ -11,7 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * Shared executor-side file cursor for both bi5 readers (row + columnar):
  * walks/iterates a partition's candidate files, prunes by path metadata and
  * pushed filters (planning-time and runtime alike), opens the LZMA stream,
- * and applies the skip-corrupt rule: a NonFatal failure opening a file
+ * drops the rows the exact filters reject ([[Bi5FilePruner.exact]]), and
+ * applies the skip-corrupt rule: a NonFatal failure opening a file
  * silently advances to the next (reference BI5DataSource.scala:149-159); an
  * interrupt or a fatal JVM error propagates and fails the task.
  *
@@ -36,9 +37,11 @@ final class Bi5FileCursor(
 
   private[this] val walks = scala.collection.mutable.ArrayBuffer.empty[Bi5Store.FileWalk]
 
+  private[this] val checks = new Bi5FilePruner.Checks(filters)
+
   private[this] val files: Iterator[String] =
     if (partition.walk) {
-      val enterDir = Bi5FilePruner.dirFilter(opts.monthOffset, filters)
+      val enterDir = checks.dirFilter(opts.monthOffset)
       partition.roots.iterator.filter(enterDir).flatMap { root =>
         val w = store.walkBi5Files(root, enterDir)
         walks += w
@@ -56,11 +59,11 @@ final class Bi5FileCursor(
     while (files.hasNext) {
       val path = files.next()
       Bi5PathMeta.parse(path, opts.monthOffset) match {
-        case Some(meta) if Bi5FilePruner.mayMatchMeta(meta, filters) =>
+        case Some(meta) if checks.mayMatchMeta(meta) =>
           Bi5Codec.openLzma(store, path) match {
             case Some(in) =>
               currentIn = in
-              return Some(OpenFile(meta, UTF8String.fromString(meta.ticker), Bi5Codec.ticks(in)))
+              return Some(OpenFile(meta, UTF8String.fromString(meta.ticker), kept(meta, Bi5Codec.ticks(in))))
             case None => // corrupt: skip
           }
         case _ => // non-matching layout (reference throws+swallows) or pruned
@@ -68,6 +71,14 @@ final class Bi5FileCursor(
     }
     None
   }
+
+  /** The file's ticks less the rows the exact filters reject. With no exact
+    * filter the readers iterate the decoder directly. The check reads the
+    * path's ticker and the record's own offset, so it holds whichever
+    * columns the scan emits. */
+  private[this] def kept(meta: Bi5PathMeta, ticks: Iterator[Bi5Codec.Tick]): Iterator[Bi5Codec.Tick] =
+    if (checks.rowsNeedNoCheck) ticks
+    else ticks.filter(t => checks.rowPasses(meta.ticker, meta.tsMicros(t.msOffset)))
 
   private[this] def closeCurrent(): Unit = {
     if (currentIn != null) {

@@ -63,14 +63,16 @@ class Bi5MicroBatchStream(
     * tail re-lists the frontier, not the archive. Files whose path doesn't
     * parse can't produce rows (skip-corrupt) and carry no event time, so
     * they are excluded from the stream. */
-  private def listSorted(minBaseMicros: Long): Vector[(Long, String)] =
+  private def listSorted(minBaseMicros: Long): Vector[(Long, String)] = {
+    val checks = new Bi5FilePruner.Checks(filters)
     Bi5FileLister.listBi5FilesSince(store, opts.path, minBaseMicros, opts.monthOffset)
-      .filter { case (p, _) => Bi5FilePruner.mayMatch(p, opts.monthOffset, filters) }
+      .filter { case (p, _) => checks.mayMatch(p, opts.monthOffset) }
       .flatMap { case (p, _) =>
         Bi5PathMeta.parse(p, opts.monthOffset).map(m => (m.baseEpochMicros, p))
       }
       .sorted
       .toVector
+  }
 
   private def key(o: Offset): (Long, String) = {
     val s = o.asInstanceOf[Bi5StreamOffset]

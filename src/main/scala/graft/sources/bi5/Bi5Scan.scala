@@ -7,6 +7,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -23,10 +24,12 @@ import org.apache.spark.sql.types.StructType
  *    listing bin-packed into ~maxPartitionBytes partitions, so a root with 2
  *    year-dirs but millions of hour files fans out over the whole cluster
  *    instead of 2 tasks.
- *  - Column pruning (SupportsPushDownRequiredColumns) and file-level filter
- *    pushdown (SupportsPushDownFilters on `ticker`/`ts` against path-derived
- *    metadata — the moral equivalent of Hive partition pruning) are new; the
- *    reference decodes all 6 columns of every file unconditionally.
+ *  - Column pruning (SupportsPushDownRequiredColumns) and filter pushdown
+ *    (SupportsPushDownFilters on `ticker`/`ts`) are new; the reference
+ *    decodes all 6 columns of every file unconditionally. Pushed filters
+ *    prune directories and files against path-derived metadata (the moral
+ *    equivalent of Hive partition pruning), and the exact ones are checked
+ *    on every row the readers emit, so Spark plans no Filter for them.
  *  - Skip-corrupt semantics are preserved exactly: any failure opening or
  *    mid-file silently truncates that file's contribution
  *    (reference :149-186, asserted by its tests on garbage/empty fixtures).
@@ -49,11 +52,12 @@ class Bi5ScanBuilder(opts: Bi5Options)
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     // Metadata-answerable aggregates only — COUNT(*) (lzma headers) and
     // MIN/MAX(ts) (boundary-hour decode) — with no grouping, only when the
-    // user opted into trusting file metadata, and only with no filters
-    // (Spark already refuses to push aggregates unless every filter was
-    // fully consumed — ours never are, since pushFilters returns them all
-    // as residual — but belt and braces). Partial pushdown: each partition
-    // emits one row of partials; Spark runs the final aggregation.
+    // user opted into trusting file metadata, and only with no filters.
+    // Spark offers aggregates only when every filter was consumed, which
+    // exact ticker/ts filters are, but the header count and the
+    // boundary-hour bounds ignore filters, so any pushed filter refuses.
+    // Partial pushdown: each partition emits one row of partials; Spark
+    // runs the final aggregation.
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
     import org.apache.spark.sql.connector.expressions.NamedReference
     if (!opts.trustHeaders || pushed.nonEmpty) return false
@@ -82,12 +86,11 @@ class Bi5ScanBuilder(opts: Bi5Options)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(Bi5FilePruner.supported)
-    // Return everything: Spark re-evaluates all predicates row-level. File
-    // pruning itself rests on the layout invariant that a file's rows fall
-    // in its path-derived hour window (msOffset in [0, 1h)) — see
-    // Bi5FilePruner's scaladoc; rows of a malformed file violating that
-    // invariant could be pruned away with a ts filter present.
-    filters
+    // Every supported filter prunes; the exact ones are also checked on each
+    // row by the readers (Bi5FileCursor), so Spark plans no Filter for them
+    // and re-evaluates only the rest. Both rest on the layout invariant that
+    // a file's rows fall in its path-derived hour (see Bi5FilePruner).
+    filters.filterNot(Bi5FilePruner.exact)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -146,8 +149,9 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
     * single partition and run the whole scan on one core (observed: a 53 MB
     * tree decoding single-threaded under the 128 MiB default). */
   private def planFileBins(): Array[InputPartition] = {
+    val runtime = new Bi5FilePruner.Checks(runtimeFilters)
     val files = listedFiles
-      .filter { case (p, _) => Bi5FilePruner.mayMatch(p, opts.monthOffset, runtimeFilters) }
+      .filter { case (p, _) => runtime.mayMatch(p, opts.monthOffset) }
       .sortBy { case (_, size) => -size }
     val totalBytes = files.map(_._2).sum
     val parallelism =
@@ -200,9 +204,9 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
           val perShard = sc.parallelize(roots, math.min(opts.listShards, roots.size))
             .mapPartitions { rs =>
               // shard roots sit below the load root, so they are judged too
-              val enterDir = Bi5FilePruner.dirFilter(monthOffset, filtersLocal)
-              val files = rs.filter(enterDir)
-                .flatMap(r => Bi5FileLister.listPruned(storeLocal, r, monthOffset, filtersLocal))
+              val checks = new Bi5FilePruner.Checks(filtersLocal)
+              val files = rs.filter(checks.dirFilter(monthOffset))
+                .flatMap(r => Bi5FileLister.listPruned(storeLocal, r, monthOffset, checks))
                 .toArray.sortBy { case (_, size) => -size }
               Iterator.single((Bi5Scan.packBins(files, targetBytes), files.map(_._2).sum))
             }
@@ -238,7 +242,7 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
   // can only narrow it, so planning applies them per file on top. Matches
   // the stock file source's load()-time index snapshot semantics.
   private lazy val listedFiles: Seq[(String, Long)] =
-    Bi5FileLister.listPruned(store, opts.path, opts.monthOffset, filters)
+    Bi5FileLister.listPruned(store, opts.path, opts.monthOffset, new Bi5FilePruner.Checks(filters))
 
   /** listShards-mode statistics: the pruned compressed byte total from the
     * shared sharded job (memoized — see [[shardedListing]]). Stats must not
@@ -466,7 +470,7 @@ object Bi5FileLister {
     out.result()
   }
 
-  /** Candidate files under `root` for `filters`, strict: subtrees the
+  /** Candidate files under `root` for `checks`, strict: subtrees the
     * filters rule out are never listed, and every listed file passed the
     * file-level check. `root` itself is not judged (see
     * [[Bi5Store.walkBi5Files]]). */
@@ -474,9 +478,9 @@ object Bi5FileLister {
       store: Bi5Store,
       root: String,
       monthOffset: Int,
-      filters: Array[Filter]): Seq[(String, Long)] =
-    store.listBi5Files(root, Bi5FilePruner.dirFilter(monthOffset, filters))
-      .filter { case (p, _) => Bi5FilePruner.mayMatch(p, monthOffset, filters) }
+      checks: Bi5FilePruner.Checks): Seq[(String, Long)] =
+    store.listBi5Files(root, checks.dirFilter(monthOffset))
+      .filter { case (p, _) => checks.mayMatch(p, monthOffset) }
 
   /** All candidate .bi5 files of a partition, strict (streams closed). */
   def partitionFiles(partition: Bi5Partition, store: Bi5Store): Seq[String] =
@@ -498,7 +502,10 @@ object Bi5FileLister {
  * directory covers one ticker and a bounded time span
  * ([[Bi5FileLister.subtreeBounds]]), and a walk never lists a directory
  * whose span no filter admits. A file's check is the one-hour case of the
- * same interval test.
+ * same interval test, and a row's check ([[Checks.rowPasses]]) is its
+ * one-point case, which is exact for the filters [[exact]] accepts. The
+ * readers check every row of every file they read whenever an exact filter
+ * is present.
  *
  * Layout contract. Pruning, at both levels, relies on every file sitting at
  * `<ticker>/<YYYY>/<mm>/<dd>/<hh>h_ticks.bi5` with its rows inside that
@@ -507,7 +514,9 @@ object Bi5FileLister {
  * outer date directory is pruned — by a filter in a batch scan, or by the
  * committed hour in a stream. The load root itself is never
  * judged by its name. Rows of a malformed file whose offsets leave its hour
- * can likewise be pruned away with a ts filter present.
+ * can likewise be pruned away with a ts filter present; since every row
+ * read is checked, the contract can only drop rows, never return ones a
+ * filter rejects.
  */
 object Bi5FilePruner {
 
@@ -525,45 +534,122 @@ object Bi5FilePruner {
     case _                        => false
   }
 
+  /** True when the readers decide `f` exactly on every row, so Spark need
+    * not evaluate it again: a [[supported]] shape whose every literal is a
+    * `String` (ticker) or a `java.sql.Timestamp` / `java.time.Instant` (ts).
+    * A `LocalDateTime` only ever prunes, conservatively. */
+  def exact(f: Filter): Boolean = compile(f).exact
+
+  /** One-off file check, converting `filters` on each call. A listing or a
+    * reader builds one [[Checks]] and reuses it. */
   def mayMatch(path: String, monthOffset: Int, filters: Array[Filter]): Boolean =
-    Bi5PathMeta.parse(path, monthOffset) match {
-      case Some(meta) => mayMatchMeta(meta, filters)
-      case None       => true // undecodable path: let the reader's own skip logic decide
-    }
+    new Checks(filters).mayMatch(path, monthOffset)
 
-  def mayMatchMeta(meta: Bi5PathMeta, filters: Array[Filter]): Boolean =
-    mayMatchSpan(meta.ticker, meta.baseEpochMicros, meta.baseEpochMicros + HourMicros - 1, filters)
-
-  /** true = some row of `ticker` with ts in `[lo, hi]` may pass every filter. */
-  private def mayMatchSpan(ticker: String, lo: Long, hi: Long, filters: Array[Filter]): Boolean =
-    filters.forall(f => eval(ticker, lo, hi, f))
-
-  /** The directory predicate of a walk pruned by `filters`: false only when
-    * the directory's name proves no file below it can match. */
+  /** One-off form of [[Checks.dirFilter]]. */
   def dirFilter(monthOffset: Int, filters: Array[Filter]): String => Boolean =
-    if (filters.isEmpty) Bi5Store.EveryDir
-    else dir => Bi5FileLister.subtreeBounds(dir, monthOffset).forall {
-      case (ticker, lo, hi) => mayMatchSpan(ticker, lo, hi, filters)
-    }
+    new Checks(filters).dirFilter(monthOffset)
 
-  private def toMicros(v: Any): Option[Long] = v match {
-    case t: java.sql.Timestamp  => Some(t.getTime * 1000L + (t.getNanos / 1000) % 1000)
-    case i: java.time.Instant   => Some(i.getEpochSecond * 1000000L + i.getNano / 1000)
-    case l: java.time.LocalDateTime =>
-      Some(l.toInstant(java.time.ZoneOffset.UTC).getEpochSecond * 1000000L + l.getNano / 1000)
-    case _ => None
+  /** `filters` with their literals converted once, for the checks a walk or
+    * a reader makes per directory, per file and per row. */
+  final class Checks(filters: Array[Filter]) {
+    private[this] val conds = filters.map(compile)
+    private[this] val exactConds = conds.filter(_.exact)
+
+    /** true = some row of `ticker` with ts in `[lo, hi]` may pass every filter. */
+    private def mayMatchSpan(ticker: String, lo: Long, hi: Long): Boolean =
+      conds.forall(_.mayMatch(ticker, lo, hi))
+
+    def mayMatch(path: String, monthOffset: Int): Boolean =
+      Bi5PathMeta.parse(path, monthOffset) match {
+        case Some(meta) => mayMatchMeta(meta)
+        case None       => true // undecodable path: let the reader's own skip logic decide
+      }
+
+    def mayMatchMeta(meta: Bi5PathMeta): Boolean =
+      mayMatchSpan(meta.ticker, meta.baseEpochMicros, meta.baseEpochMicros + HourMicros - 1)
+
+    /** The directory predicate of a walk pruned by the filters: false only
+      * when the directory's name proves no file below it can match. */
+    def dirFilter(monthOffset: Int): String => Boolean =
+      if (conds.isEmpty) Bi5Store.EveryDir
+      else dir => Bi5FileLister.subtreeBounds(dir, monthOffset).forall {
+        case (ticker, lo, hi) => mayMatchSpan(ticker, lo, hi)
+      }
+
+    /** No exact filter, so the readers emit every row unchecked. */
+    def rowsNeedNoCheck: Boolean = exactConds.isEmpty
+
+    /** The row of `ticker` at `tsMicros` passes every exact filter. */
+    def rowPasses(ticker: String, tsMicros: Long): Boolean =
+      exactConds.forall(_.mayMatch(ticker, tsMicros, tsMicros))
   }
 
-  private def eval(ticker: String, lo: Long, hi: Long, f: Filter): Boolean = f match {
-    case EqualTo("ticker", v)        => v == ticker
-    case In("ticker", vs)            => vs.contains(ticker)
-    case EqualTo("ts", v)            => toMicros(v).forall(m => m >= lo && m <= hi)
-    case GreaterThan("ts", v)        => toMicros(v).forall(m => hi > m)
-    case GreaterThanOrEqual("ts", v) => toMicros(v).forall(m => hi >= m)
-    case LessThan("ts", v)           => toMicros(v).forall(m => lo < m)
-    case LessThanOrEqual("ts", v)    => toMicros(v).forall(m => lo <= m)
-    case And(l, r)                   => eval(ticker, lo, hi, l) && eval(ticker, lo, hi, r)
-    case Or(l, r)                    => eval(ticker, lo, hi, l) || eval(ticker, lo, hi, r)
-    case _                           => true
+  /** One filter with its literals converted: the (ticker, ts) points it
+    * admits. `exact` is false when a literal was converted conservatively
+    * or not at all. */
+  private sealed trait Cond {
+    def exact: Boolean
+    /** Some point of `ticker` x `[lo, hi]` passes; exact when `lo == hi`. */
+    def mayMatch(ticker: String, lo: Long, hi: Long): Boolean
+  }
+
+  private final case class Tickers(names: Set[String], exact: Boolean) extends Cond {
+    def mayMatch(ticker: String, lo: Long, hi: Long): Boolean = names.contains(ticker)
+  }
+
+  /** `ts` in `[from, to]` (µs, inclusive); empty when `from > to`. */
+  private final case class TsRange(from: Long, to: Long, exact: Boolean) extends Cond {
+    def mayMatch(ticker: String, lo: Long, hi: Long): Boolean = math.max(from, lo) <= math.min(to, hi)
+  }
+
+  private final case class Both(l: Cond, r: Cond) extends Cond {
+    val exact: Boolean = l.exact && r.exact
+    def mayMatch(ticker: String, lo: Long, hi: Long): Boolean =
+      l.mayMatch(ticker, lo, hi) && r.mayMatch(ticker, lo, hi)
+  }
+
+  private final case class OneOf(l: Cond, r: Cond) extends Cond {
+    val exact: Boolean = l.exact && r.exact
+    def mayMatch(ticker: String, lo: Long, hi: Long): Boolean =
+      l.mayMatch(ticker, lo, hi) || r.mayMatch(ticker, lo, hi)
+  }
+
+  /** A filter the source cannot judge: it may match anything. */
+  private case object Anything extends Cond {
+    def exact: Boolean = false
+    def mayMatch(ticker: String, lo: Long, hi: Long): Boolean = true
+  }
+
+  private final val Empty = (1L, 0L)
+
+  private def compile(f: Filter): Cond = f match {
+    case EqualTo("ticker", v)        => tickers(Array(v))
+    case In("ticker", vs)            => tickers(vs)
+    case EqualTo("ts", v)            => ts(v, m => (m, m))
+    case GreaterThan("ts", v)        => ts(v, m => if (m == Long.MaxValue) Empty else (m + 1, Long.MaxValue))
+    case GreaterThanOrEqual("ts", v) => ts(v, m => (m, Long.MaxValue))
+    case LessThan("ts", v)           => ts(v, m => if (m == Long.MinValue) Empty else (Long.MinValue, m - 1))
+    case LessThanOrEqual("ts", v)    => ts(v, m => (Long.MinValue, m))
+    case And(l, r)                   => Both(compile(l), compile(r))
+    case Or(l, r)                    => OneOf(compile(l), compile(r))
+    case _                           => Anything
+  }
+
+  /** A value that is not a `String` equals no ticker. */
+  private def tickers(vs: Array[Any]): Cond =
+    Tickers(vs.collect { case s: String => s }.toSet, exact = vs.forall(_.isInstanceOf[String]))
+
+  /** The range a `ts` comparison admits, its literal converted to µs the way
+    * Spark converts it, so the rows kept are the rows Spark's own `Filter`
+    * would keep. A `LocalDateTime` is read as UTC and never exact. */
+  private def ts(v: Any, range: Long => (Long, Long)): Cond = {
+    def cond(m: Long, exact: Boolean) = { val (from, to) = range(m); TsRange(from, to, exact) }
+    v match {
+      case t: java.sql.Timestamp => cond(DateTimeUtils.fromJavaTimestamp(t), exact = true)
+      case i: java.time.Instant  => cond(DateTimeUtils.instantToMicros(i), exact = true)
+      case l: java.time.LocalDateTime =>
+        cond(l.toInstant(java.time.ZoneOffset.UTC).getEpochSecond * 1000000L + l.getNano / 1000, exact = false)
+      case _ => Anything
+    }
   }
 }

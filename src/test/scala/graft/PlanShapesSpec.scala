@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{ExplainMode, FilterExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.bi5.Bi5TreeFixture
 
 /**
  * Locks the SCALE-critical physical-plan shapes: these assertions fail if a
@@ -425,6 +429,44 @@ class PlanShapesSpec extends AnyFunSuite {
     assert(p.contains("pushed=[EqualTo(ticker,EURUSD)]"), p)
     // pruned output: volumes not materialized by the scan
     assert(!p.contains("ask_volume"), p)
+  }
+
+  test("bi5 scan on a generated tree: pruned columns, pushed filters, no Filter for ticker/ts") {
+    val root = java.nio.file.Files.createTempDirectory("bi5plans")
+    try {
+      for (t <- Seq("EURUSD", "GBPUSD"); d <- 1 to 2; h <- 0 to 3)
+        Bi5TreeFixture.putHour(root, s"$t/2020/0/$d/${h}h_ticks.bi5", d * 10 + h)
+      def load = spark.read.format("bi5").option("digits", 5).load(root.toString)
+      def formatted(df: DataFrame) = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      def filteredScans(df: DataFrame) = df.queryExecution.sparkPlan.collect {
+        case f: FilterExec if f.exists(_.isInstanceOf[BatchScanExec]) => f
+      }
+      // the reference-fixture test's assertions, on the generated tree
+      val p = formatted(load.filter("ticker = 'EURUSD'").select("ts", "ask"))
+      assert(p.contains("BatchScan bi5"), p)
+      assert(p.contains("pushed=[EqualTo(ticker,EURUSD)]"), p)
+      assert(!p.contains("ask_volume"), p)
+      // a ticker/ts read: every filter is pushed and none is left to Spark
+      def lookup(minute: Int) = load.where("ticker = 'EURUSD' AND " +
+        f"ts >= timestamp'2020-01-01 00:$minute%02d:00' AND ts < timestamp'2020-01-01 02:$minute%02d:00'")
+      val lp = formatted(lookup(10))
+      assert(lp.contains("pushed=[EqualTo(ticker,EURUSD), GreaterThanOrEqual(ts,") &&
+        lp.contains("LessThan(ts,"), lp)
+      assert(filteredScans(lookup(10)).isEmpty, lp)
+      val either = load.where("ticker IN ('EURUSD', 'GBPUSD') OR ts = timestamp'2020-01-01 00:30:00'")
+      assert(filteredScans(either).isEmpty, formatted(either))
+      // what the source cannot evaluate stays with Spark
+      for (residual <- Seq("ask > 1", "ticker LIKE 'EUR%'", "ticker = 'X' OR ask > 1")) {
+        val df = load.where(residual)
+        assert(formatted(df).contains("pushed=[]"), formatted(df))
+        assert(filteredScans(df).nonEmpty, s"$residual:\n${formatted(df)}")
+      }
+      // a new window is no new generated code: the plan carries no literal
+      assert(lookup(0).collect().length === 6)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      for (minute <- 1 to 20) assert(lookup(minute).collect().length === 6)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0)
+    } finally Bi5TreeFixture.deleteTree(root)
   }
 
   test("q92 flagged-shingle join is never FORCED to broadcast") {

@@ -6,7 +6,8 @@ import java.sql.Timestamp
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.{InputPartition, Scan}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.sources._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,6 +52,19 @@ class Bi5PruningSpec extends AnyFunSuite {
   }
 
   private def keys(df: DataFrame): Seq[String] = df.collect().map(key).toSeq.sorted
+
+  /** The rows of `df.filter(pred)` in four shapes: every column; `ask`
+    * alone, so the scan emits no `ts`; a bare count, so it emits no column;
+    * `ticker` and `bid`. */
+  private def shapes(df: DataFrame, pred: String): Seq[(String, Any)] = {
+    val f = df.filter(pred)
+    Seq(
+      "all columns" -> keys(f),
+      "select(ask)" -> f.select("ask").collect().map(_.getDouble(0)).toSeq.sorted,
+      "count()" -> f.count(),
+      "select(ticker, bid)" -> f.select("ticker", "bid").collect()
+        .map(r => s"${r.getString(0)}|${r.getDouble(1)}").toSeq.sorted)
+  }
 
   private def read(path: String, january: Int, extra: Map[String, String] = Map.empty): DataFrame =
     spark.read.format("bi5").option("digits", 5).option("january", january).options(extra).load(path)
@@ -143,11 +157,12 @@ class Bi5PruningSpec extends AnyFunSuite {
           spark.sparkContext.parallelize(allRows.toSeq), Bi5Schema.schema)
         var nonTrivial = 0
         for (pred <- Predicates) {
-          val expected = keys(unfiltered.filter(pred))
-          if (expected.nonEmpty && expected.size < allRows.length) nonTrivial += 1
-          for ((path, extra) <- modes) {
-            assert(keys(read(path, january, extra).filter(pred)) === expected,
-              s"january=$january path=$path $extra: $pred")
+          val expected = shapes(unfiltered, pred)
+          val rows = unfiltered.filter(pred).count()
+          if (rows > 0 && rows < allRows.length) nonTrivial += 1
+          for ((path, extra) <- modes;
+               ((shape, got), (_, want)) <- shapes(read(path, january, extra), pred).zip(expected)) {
+            assert(got === want, s"january=$january path=$path $extra: $pred, $shape")
           }
         }
         assert(nonTrivial >= 8, s"january=$january: too few predicates select a proper subset")
@@ -172,6 +187,103 @@ class Bi5PruningSpec extends AnyFunSuite {
         scan.filter(runtime)
         assert(scanKeys(scan) === expected, s"$extra")
       }
+    } finally Bi5TreeFixture.deleteTree(root)
+  }
+
+  test("exact filters: supported shapes whose literals are Strings, Timestamps or Instants") {
+    val at = sqlTs("2019-12-31 15:00:00")
+    val exact = Seq[Filter](
+      EqualTo("ticker", "EURUSD"),
+      In("ticker", Array("EURUSD", "GBPUSD")),
+      EqualTo("ts", at),
+      GreaterThan("ts", at.toInstant),
+      LessThanOrEqual("ts", at),
+      Or(EqualTo("ticker", "USDJPY"), And(GreaterThanOrEqual("ts", at), LessThan("ts", at.toInstant))))
+    val residual = Seq[Filter](
+      GreaterThan("ask", 1.0),
+      StringStartsWith("ticker", "EUR"),
+      In("ticker", Array[Any]("EURUSD", null)),
+      EqualTo("ticker", 1),
+      GreaterThan("ts", java.time.LocalDateTime.parse("2019-12-31T15:00:00")),
+      LessThan("ts", "2019-12-31 15:00:00"),
+      Or(EqualTo("ticker", "USDJPY"), GreaterThan("ask", 1.0)),
+      And(EqualTo("ticker", "USDJPY"), EqualTo("ts", java.time.LocalDateTime.parse("2019-12-31T15:00:00"))))
+    exact.foreach(f => assert(Bi5FilePruner.exact(f), f))
+    residual.foreach(f => assert(!Bi5FilePruner.exact(f), f))
+    val tmp = System.getProperty("java.io.tmpdir")
+    val builder = new Bi5ScanBuilder(Bi5Options.from(Map("path" -> tmp, "digits" -> "5").get))
+    val all = (exact ++ residual).toArray
+    assert(builder.pushFilters(all).toSeq === residual)
+    assert(builder.pushedFilters().toSeq === all.filter(Bi5FilePruner.supported).toSeq)
+  }
+
+  test("both readers drop the rows partial-hour filters reject, whatever columns they emit") {
+    val (root, _) = equivalenceTree()
+    try {
+      val allRows = read(root.toString, 0).collect().toSeq
+      val from = micros("2019-12-31 15:30:00")
+      val until = micros("2019-12-31 23:30:00")
+      val filters = Array[Filter](
+        GreaterThanOrEqual("ts", sqlTs("2019-12-31 15:30:00")),
+        Or(EqualTo("ticker", "GBPUSD"), LessThan("ts", java.time.Instant.parse("2019-12-31T23:30:00Z"))))
+      val expected = allRows.map(key).map(_.split('|')).filter { f =>
+        f(1).toLong >= from && (f(0) == "GBPUSD" || f(1).toLong < until)
+      }
+      // ticks at :00, :30 and :59:59.999 of each hour: Dec 31 15h keeps two of
+      // three for every ticker, 23h keeps one (GBPUSD all three), and
+      // GBPUSD's four 2020 hours pass whole
+      assert(expected.size === 23)
+      val store = Bi5Store.forPath(root.toString)
+      val opts = Bi5Options.from(Map("path" -> root.toString, "digits" -> "5", "january" -> "0").get)
+      val partitions = Bi5Scan.perChildPartitions(root.toString, store).map(_.asInstanceOf[Bi5Partition])
+      for (names <- Seq(Bi5Schema.schema.fieldNames.toSeq, Seq("ask"), Seq.empty, Seq("ticker", "bid"))) {
+        val required = org.apache.spark.sql.types.StructType(names.map(n => Bi5Schema.schema(n)))
+        val ids = Bi5FileCursor.columnIds(required)
+        val want = expected.map(f => ids.map(f(_)).mkString("|")).sorted
+        def value(i: Int, str: => Any, long: => Any, dbl: => Any): Any =
+          ids(i) match { case 0 => str; case 1 => long; case _ => dbl }
+        val viaRows = partitions.toSeq.flatMap { p =>
+          val r = new Bi5PartitionReader(p, opts, required, filters, store)
+          val out = mutable.Buffer.empty[String]
+          try while (r.next()) {
+            val g = r.get()
+            out += ids.indices.map(i => value(i, g.getUTF8String(i), g.getLong(i), g.getDouble(i))).mkString("|")
+          } finally r.close()
+          out
+        }
+        val viaBatches = partitions.toSeq.flatMap { p =>
+          val r = new Bi5ColumnarReader(p, opts, required, filters, store)
+          val out = mutable.Buffer.empty[String]
+          try while (r.next()) {
+            val b = r.get()
+            for (row <- 0 until b.numRows()) out += ids.indices.map { i =>
+              val c = b.column(i)
+              value(i, c.getUTF8String(row), c.getLong(row), c.getDouble(row))
+            }.mkString("|")
+          } finally r.close()
+          out
+        }
+        assert(viaRows.sorted === want, s"row reader, columns $names")
+        assert(viaBatches.sorted === want, s"columnar reader, columns $names")
+      }
+    } finally Bi5TreeFixture.deleteTree(root)
+  }
+
+  test("trustHeaders: a filtered count is decode-exact, never answered from the headers") {
+    val (root, _) = equivalenceTree()
+    try {
+      val window = "ts >= timestamp'2019-12-31 15:30:00' AND ts < timestamp'2020-01-01 00:30:00'"
+      val allRows = read(root.toString, 0).collect().toSeq
+      val exact = spark.createDataFrame(spark.sparkContext.parallelize(allRows), Bi5Schema.schema)
+        .where(window).count()
+      val trusted = read(root.toString, 0, Map("trustHeaders" -> "true"))
+      def scans(df: DataFrame): Seq[Scan] =
+        df.groupBy().count().queryExecution.optimizedPlan.collect { case r: DataSourceV2ScanRelation => r.scan }
+      assert(scans(trusted).exists(_.isInstanceOf[Bi5AggScan]), "an unfiltered count uses the headers")
+      val filtered = trusted.where(window)
+      assert(scans(filtered).nonEmpty && !scans(filtered).exists(_.isInstanceOf[Bi5AggScan]))
+      assert(exact > 0 && exact < allRows.size)
+      assert(filtered.count() === exact)
     } finally Bi5TreeFixture.deleteTree(root)
   }
 
@@ -366,6 +478,27 @@ class Bi5PruningSpec extends AnyFunSuite {
       val listed = Bi5FileLister.listBi5FilesSince(
         NioBi5Store, root.toString, micros("2019-12-05 10:00:00"), 0).map(_._1)
       assert(listed.toSet === Set("05", "06").map(d => s"$root/EURUSD/2019/11/$d/10h_ticks.bi5"))
+    } finally Bi5TreeFixture.deleteTree(root)
+  }
+
+  test("layout contract: a malformed file's out-of-hour rows may be pruned, never wrongly kept") {
+    val root = Files.createTempDirectory("bi5offsets")
+    try {
+      // a 15h file whose fourth record claims 16:30, outside its hour
+      val ticks = Bi5TreeFixture.hourTicks(1) :+ Bi5Codec.Tick(5400000, 100100, 99100, 1f, 1f)
+      Bi5TreeFixture.put(root, "EURUSD/2019/11/31/15h_ticks.bi5", Bi5TreeFixture.lzma(ticks))
+      Bi5TreeFixture.putHour(root, "EURUSD/2019/11/31/16h_ticks.bi5", 2)
+      val df = read(root.toString, 0)
+      assert(df.count() === 7)
+      // every row of a file read is checked: 15h's 16:30 row is dropped, as
+      // Spark's own filter over an unfiltered read drops it
+      assert(df.where("ts < timestamp'2019-12-31 16:00:00'").count() === 3)
+      // 15h's hour fails, so the file is pruned and 16:30 goes with it
+      // (Spark's own filter keeps 4)
+      assert(df.where("ts >= timestamp'2019-12-31 16:00:00'").count() === 3)
+      // both files are read and every row is checked: 15:30, 15:59:59.999, 16:00
+      assert(df.where("ts >= timestamp'2019-12-31 15:30:00' AND ts < timestamp'2019-12-31 16:15:00'")
+        .count() === 3)
     } finally Bi5TreeFixture.deleteTree(root)
   }
 
