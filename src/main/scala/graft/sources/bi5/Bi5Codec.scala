@@ -1,6 +1,6 @@
 package graft.sources.bi5
 
-import java.io.{BufferedInputStream, InputStream}
+import java.io.InputStream
 import java.util.{Calendar, TimeZone}
 
 import scala.util.control.NonFatal
@@ -17,6 +17,14 @@ import scala.util.control.NonFatal
  * Volumes are IEEE f32 read then widened to f64 — the widening artifacts
  * (e.g. 0.19f -> 0.1899999976158142) are part of the observable contract
  * (reference test suite BI5DataSourceTestSuite.scala:115).
+ *
+ * Fault model (reference BI5DataSource.scala:149-159,166-186): a file that
+ * cannot be read, or whose LZMA header is invalid, yields no records; a
+ * file that is corrupt or truncated mid-stream yields every complete record
+ * decoded before the fault; a trailing partial record is dropped. The
+ * reference reads field by field, so it loses only the records the fault
+ * cuts, and [[decodeFile]] loses no more. Only NonFatal failures count as
+ * corrupt: an interrupt or a fatal JVM error propagates.
  */
 object Bi5Codec {
 
@@ -26,99 +34,63 @@ object Bi5Codec {
   /** One decoded tick, still relative to its file's hour base. */
   final case class Tick(msOffset: Int, askRaw: Int, bidRaw: Int, askVol: Float, bidVol: Float)
 
-  /** Decode buffer: ~64 KiB, a whole number of records. */
-  private final val ChunkRecords = 3276
+  // The record parser: the fields of the record at byte `p` of a decoded
+  // buffer. Every reader goes through these.
+  def msOffset(b: Array[Byte], p: Int): Int = be32(b, p)
+  def askRaw(b: Array[Byte], p: Int): Int = be32(b, p + 4)
+  def bidRaw(b: Array[Byte], p: Int): Int = be32(b, p + 8)
+  def askVol(b: Array[Byte], p: Int): Float = java.lang.Float.intBitsToFloat(be32(b, p + 12))
+  def bidVol(b: Array[Byte], p: Int): Float = java.lang.Float.intBitsToFloat(be32(b, p + 16))
+
+  def tick(b: Array[Byte], p: Int): Tick = Tick(msOffset(b, p), askRaw(b, p), bidRaw(b, p), askVol(b, p), bidVol(b, p))
+
+  private def be32(b: Array[Byte], p: Int): Int =
+    ((b(p) & 0xff) << 24) | ((b(p + 1) & 0xff) << 16) | ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
+
+  /** The complete records of `decoded(0 until length)`. */
+  def ticks(decoded: Array[Byte], length: Int): Iterator[Tick] =
+    Iterator.range(0, length / RecordBytes).map(i => tick(decoded, i * RecordBytes))
 
   /**
-   * Streaming record decode over an (already decompression-wrapped) input stream.
-   *
-   * Fault model (must match reference BI5DataSource.scala:166-186):
-   *  - clean EOF at a record boundary ends the iterator;
-   *  - a trailing partial record is silently dropped;
-   *  - ANY exception mid-stream (LZMA corruption, truncation) ends the
-   *    iterator silently — records decoded before the fault are kept.
-   *
-   * Reads the stream in ~64 KiB chunks and parses big-endian fields from the
-   * byte buffer directly. Field-at-a-time DataInputStream reads would issue
-   * four 1-byte read() calls per int THROUGH the LZMA decoder (~240x more
-   * virtual calls) and measure ~25x slower end to end. Memory stays O(chunk).
+   * The records of an already decompression-wrapped stream: the stream is
+   * read to its end in 4 KiB calls, then parsed as one decoded buffer. A
+   * clean end drops a trailing partial record; an exception ends the read
+   * silently, and the records of the calls that returned before it are
+   * kept. The scan itself does not use this: it decodes whole files with
+   * [[decodeFile]].
    */
-  def ticks(in: InputStream): Iterator[Tick] = new Iterator[Tick] {
-    private[this] val buf = new Array[Byte](RecordBytes * ChunkRecords)
-    private[this] var len = 0 // valid bytes in buf
-    private[this] var pos = 0 // read cursor
-    private[this] var done = false
-
-    private[this] def refill(): Unit = {
-      val rem = len - pos
-      if (rem > 0) System.arraycopy(buf, pos, buf, 0, rem)
-      len = rem
-      pos = 0
-      try {
-        // Read in 4 KiB slices: when LZMA hits corruption mid-read() it
-        // discards bytes decoded within THAT call, so the slice size bounds
-        // how many records a corrupt tail can lose (~200 here vs ~3275 for
-        // whole-buffer reads; the reference's field-at-a-time reads lose at
-        // most one record, at a 25x throughput cost). Slicing is free: the
-        // decoder amortizes internally, only the call count changes.
-        var n = 0
-        while (len < buf.length &&
-          { n = in.read(buf, len, math.min(4096, buf.length - len)); n > 0 }) {
-          len += n
-        }
-      } catch {
-        case NonFatal(_) => done = true // corrupt tail: keep complete records read so far
-      }
-      if (len < RecordBytes) done = true // clean EOF / partial trailing record dropped
+  def ticks(in: InputStream): Iterator[Tick] = {
+    var buf = new Array[Byte](1 << 16)
+    var len = 0
+    try {
+      var n = 0
+      while ({
+        if (len == buf.length) buf = java.util.Arrays.copyOf(buf, len * 2)
+        n = in.read(buf, len, math.min(4096, buf.length - len))
+        n > 0
+      }) len += n
+    } catch {
+      case NonFatal(_) => // corrupt tail: keep what was read
     }
-
-    private[this] def be32(p: Int): Int =
-      ((buf(p) & 0xff) << 24) | ((buf(p + 1) & 0xff) << 16) |
-        ((buf(p + 2) & 0xff) << 8) | (buf(p + 3) & 0xff)
-
-    override def hasNext: Boolean = {
-      if (len - pos < RecordBytes && !done) refill()
-      len - pos >= RecordBytes
-    }
-
-    override def next(): Tick = {
-      if (!hasNext) throw new NoSuchElementException("end of bi5 stream")
-      val p = pos
-      pos = p + RecordBytes
-      Tick(
-        be32(p),
-        be32(p + 4),
-        be32(p + 8),
-        java.lang.Float.intBitsToFloat(be32(p + 12)),
-        java.lang.Float.intBitsToFloat(be32(p + 16)))
-    }
+    ticks(buf, len)
   }
 
-  /** Decoder memory cap (KiB): above every xz preset's dictionary (64 MiB at
-    * preset 9). A garbage header can name a dictionary of up to 2 GiB, which
-    * the decoder would allocate before reading a byte; with the cap it fails
-    * as a corrupt file instead. */
-  private final val LzmaMemoryLimitKiB = 128 << 10
-
   /**
-   * Open one `.bi5` file as a decompressed stream (buffered — the decoder
-   * issues many small reads against its source), or None when it cannot be
-   * opened: bad LZMA header, empty file, missing file. That is the
-   * skip-corrupt rule for opening. Only NonFatal failures count as corrupt;
-   * an interrupt or a fatal JVM error propagates. The LZMA constructor
-   * throws before the caller holds the stream, so the raw stream is closed
-   * here, or its descriptor would leak until GC.
+   * One `.bi5` file's decoded bytes ([[Bi5Lzma.decode]]): the file is read
+   * whole, in one call, and decoded into one array. A file that cannot be
+   * opened or read decodes to nothing. At most [[Bi5Lzma.MaxBytes]] of it
+   * are read, and the decoded bytes are capped the same way, so a reader
+   * holds at most one file's compressed and decoded bytes.
    */
-  def openLzma(store: Bi5Store, path: String): Option[InputStream] = {
-    var raw: InputStream = null
-    try {
-      raw = store.open(path)
-      Some(new org.tukaani.xz.LZMAInputStream(new BufferedInputStream(raw, 1 << 16), LzmaMemoryLimitKiB))
-    } catch {
-      case NonFatal(_) =>
-        if (raw != null) { try raw.close() catch { case NonFatal(_) => } }
-        None
-    }
+  def decodeFile(store: Bi5Store, path: String): Array[Byte] = {
+    val bytes =
+      try {
+        val in = store.open(path)
+        try in.readNBytes(Bi5Lzma.MaxBytes) finally in.close()
+      } catch {
+        case NonFatal(_) => return Array.emptyByteArray
+      }
+    Bi5Lzma.decode(bytes)
   }
 
   /** `10^digits` divisor for fixed-point price scaling (reference BI5DataSource.scala:100). */

@@ -15,7 +15,8 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
  * pulling one InternalRow per record through an iterator.
  *
  * This is the piece that makes the scan survive scale: per-record cost drops
- * to the LZMA decode plus a handful of primitive array writes.
+ * to the LZMA decode plus a handful of primitive array writes, read in place
+ * from the decoded file.
  */
 object Bi5ColumnarReader {
   final val BatchRows = 4096
@@ -49,7 +50,22 @@ class Bi5ColumnarReader(
     var i = 0
     while (i < numFields) { vectors(i).reset(); i += 1 }
     while (row < BatchRows) {
-      if (current == null || !current.ticks.hasNext) {
+      if (current != null && current.next()) {
+        val f = current
+        var c = 0
+        while (c < numFields) {
+          colIds(c) match {
+            case 0 => vectors(c).putByteArray(row, tickerBytes)
+            case 1 => vectors(c).putLong(row, f.tsMicros)
+            case 2 => vectors(c).putDouble(row, f.askRaw / divisor)
+            case 3 => vectors(c).putDouble(row, f.bidRaw / divisor)
+            case 4 => vectors(c).putDouble(row, f.askVol.toDouble)
+            case 5 => vectors(c).putDouble(row, f.bidVol.toDouble)
+          }
+          c += 1
+        }
+        row += 1
+      } else {
         cursor.nextFile() match {
           case Some(f) =>
             current = f
@@ -58,22 +74,6 @@ class Bi5ColumnarReader(
             batch.setNumRows(row)
             return row > 0
         }
-      }
-      while (row < BatchRows && current.ticks.hasNext) {
-        val t = current.ticks.next()
-        var c = 0
-        while (c < numFields) {
-          colIds(c) match {
-            case 0 => vectors(c).putByteArray(row, tickerBytes)
-            case 1 => vectors(c).putLong(row, current.meta.tsMicros(t.msOffset))
-            case 2 => vectors(c).putDouble(row, t.askRaw / divisor)
-            case 3 => vectors(c).putDouble(row, t.bidRaw / divisor)
-            case 4 => vectors(c).putDouble(row, t.askVol.toDouble)
-            case 5 => vectors(c).putDouble(row, t.bidVol.toDouble)
-          }
-          c += 1
-        }
-        row += 1
       }
     }
     batch.setNumRows(row)

@@ -1,7 +1,5 @@
 package graft.sources.bi5
 
-import java.io.DataInputStream
-
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -84,37 +82,30 @@ class Bi5AggReader(partition: Bi5Partition, opts: Bi5Options, aggs: Seq[Bi5Agg],
 
   private[this] var emitted = false
 
-  /** Uncompressed size from the 13-byte lzma-alone header, or -1 when the
-    * header is implausible (garbage bytes would otherwise parse as a huge
-    * bogus size — e.g. ASCII text yields ~4e17). Sanity gates: valid lzma
-    * props byte, whole 20-byte records, and a sane compression ratio. */
+  /** Uncompressed size from the 13-byte lzma-alone header ([[Bi5Lzma.header]]),
+    * or -1 when it is unknown or implausible (garbage bytes would otherwise
+    * parse as a huge bogus size — e.g. ASCII text yields ~4e17). Sanity
+    * gates: a header the decoder accepts, whole 20-byte records, and a sane
+    * compression ratio. */
   private def headerSize(path: String): Long = {
-    val in = new DataInputStream(store.open(path))
-    try {
-      val header = new Array[Byte](13)
-      in.readFully(header)
-      if ((header(0) & 0xff) >= 225) return -1L // props = lc + lp*9 + pb*45 < 225
-      var size = 0L
-      var i = 12
-      while (i >= 5) { size = (size << 8) | (header(i) & 0xffL); i -= 1 }
-      val compressed = store.fileSize(path)
-      val plausible = size >= 0 &&
-        size % Bi5Codec.RecordBytes == 0 &&
-        size <= compressed * 2000 // LZMA ratios stay far below this
-      if (plausible) size else -1L
-    } finally in.close()
+    val in = store.open(path)
+    val head = try in.readNBytes(Bi5Lzma.HeaderBytes) finally in.close()
+    Bi5Lzma.header(head) match {
+      case Some(h) if h.size >= 0 &&
+          h.size % Bi5Codec.RecordBytes == 0 &&
+          h.size <= store.fileSize(path) * 2000 => // LZMA ratios stay far below this
+        h.size
+      case _ => -1L
+    }
   }
 
   /** Decode one file's tick timestamps (micros); empty when it cannot be
-    * opened. Materialized so the stream closes here (boundary files are
-    * small). */
-  private def decodeTs(path: String, meta: Bi5PathMeta): Iterator[Long] =
-    Bi5Codec.openLzma(store, path) match {
-      case Some(in) =>
-        try Bi5Codec.ticks(in).map(t => meta.baseEpochMicros + t.msOffset * 1000L).toArray.iterator
-        finally try in.close() catch { case NonFatal(_) => }
-      case None => Iterator.empty
-    }
+    * read. */
+  private def decodeTs(path: String, meta: Bi5PathMeta): Iterator[Long] = {
+    val decoded = Bi5Codec.decodeFile(store, path)
+    Iterator.range(0, decoded.length / Bi5Codec.RecordBytes)
+      .map(i => meta.tsMicros(Bi5Codec.msOffset(decoded, i * Bi5Codec.RecordBytes)))
+  }
 
   private lazy val metaFiles: Seq[(String, Bi5PathMeta)] =
     Bi5FileLister.partitionFiles(partition, store)
@@ -128,11 +119,8 @@ class Bi5AggReader(partition: Bi5Partition, opts: Bi5Options, aggs: Seq[Bi5Agg],
         total += size / Bi5Codec.RecordBytes
       } else {
         // unknown/unreadable size: decode-count this one file exactly
-        // (a file that cannot be opened is corrupt and contributes 0)
-        Bi5Codec.openLzma(store, path).foreach { in =>
-          try total += Bi5Codec.ticks(in).size
-          finally try in.close() catch { case NonFatal(_) => }
-        }
+        // (a file that cannot be read is corrupt and contributes 0)
+        total += Bi5Codec.decodeFile(store, path).length / Bi5Codec.RecordBytes
       }
     }
     total

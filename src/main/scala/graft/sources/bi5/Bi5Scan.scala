@@ -334,8 +334,8 @@ class Bi5PartitionReaderFactory(
  * Executor-side row reader (the columnar reader handles the default path;
  * this one serves engines/paths that ask for row output). Shares the file
  * walk/prune/open/skip-corrupt logic with the columnar reader via
- * [[Bi5FileCursor]]. Memory per task: the cursor's one decompressor plus the
- * codec's ~64 KiB chunk buffer.
+ * [[Bi5FileCursor]]. Memory per task: the cursor's decoded file (see
+ * [[Bi5FileCursor]]) plus one row.
  */
 class Bi5PartitionReader(
     partition: Bi5Partition,
@@ -354,23 +354,23 @@ class Bi5PartitionReader(
   private[this] var row: InternalRow = _
 
   override def next(): Boolean = {
-    while (current == null || !current.ticks.hasNext) {
+    while (current == null || !current.next()) {
       cursor.nextFile() match {
         case Some(f) => current = f
         case None    => return false
       }
     }
-    val t = current.ticks.next()
+    val f = current
     val r = new GenericInternalRow(numFields)
     var i = 0
     while (i < numFields) {
       colIds(i) match {
-        case 0 => r.update(i, current.tickerUtf8)
-        case 1 => r.setLong(i, current.meta.tsMicros(t.msOffset))
-        case 2 => r.setDouble(i, t.askRaw / divisor)
-        case 3 => r.setDouble(i, t.bidRaw / divisor)
-        case 4 => r.setDouble(i, t.askVol.toDouble)
-        case 5 => r.setDouble(i, t.bidVol.toDouble)
+        case 0 => r.update(i, f.tickerUtf8)
+        case 1 => r.setLong(i, f.tsMicros)
+        case 2 => r.setDouble(i, f.askRaw / divisor)
+        case 3 => r.setDouble(i, f.bidRaw / divisor)
+        case 4 => r.setDouble(i, f.askVol.toDouble)
+        case 5 => r.setDouble(i, f.bidVol.toDouble)
       }
       i += 1
     }
@@ -544,10 +544,6 @@ object Bi5FilePruner {
     * reader builds one [[Checks]] and reuses it. */
   def mayMatch(path: String, monthOffset: Int, filters: Array[Filter]): Boolean =
     new Checks(filters).mayMatch(path, monthOffset)
-
-  /** One-off form of [[Checks.dirFilter]]. */
-  def dirFilter(monthOffset: Int, filters: Array[Filter]): String => Boolean =
-    new Checks(filters).dirFilter(monthOffset)
 
   /** `filters` with their literals converted once, for the checks a walk or
     * a reader makes per directory, per file and per row. */

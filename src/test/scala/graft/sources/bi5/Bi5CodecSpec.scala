@@ -36,6 +36,9 @@ class Bi5CodecSpec extends AnyFunSuite {
     bv <- Gen.chooseNum(0f, 1000f)
   } yield Bi5Codec.Tick(ms, ask, bid, av, bv)
 
+  private def listOf(n: Int, seed: Long): List[Bi5Codec.Tick] =
+    Gen.listOfN(n, tickGen).apply(Gen.Parameters.default, Seed(seed)).get
+
   test("roundtrip: encode -> lzma -> decode recovers every record") {
     val listGen = Gen.chooseNum(0, 200).flatMap(n => Gen.listOfN(n, tickGen))
     (0 until 40).foreach { i =>
@@ -130,5 +133,52 @@ class Bi5CodecSpec extends AnyFunSuite {
       assert((t.bidRaw & 0xffffffffL) === bid)
       assert(t.askVol === av && t.bidVol === bv)
     }
+  }
+
+  test("Bi5Lzma agrees with Python's lzma and struct.unpack('>3I2f') on a generated tree") {
+    // The hermetic form of the check above: python3's standard lzma module
+    // (liblzma, independent of xz-java) and the reference script's struct
+    // format decode files written here, in both header forms and with
+    // several lc/lp/pb settings.
+    val python = scala.util.Try(new ProcessBuilder("python3", "-c", "import lzma, struct").start().waitFor())
+    assume(python.toOption.contains(0), "python3 with lzma not available")
+    val root = java.nio.file.Files.createTempDirectory("bi5pyxcheck")
+    try {
+      val rnd = new scala.util.Random(11)
+      val files = (0 until 6).map { i =>
+        val ticks = listOf(50 + rnd.nextInt(2000), 100L + i)
+        val o = new LZMA2Options(i)
+        o.setLcLp(i % 4, (i + 1) % 2)
+        o.setPb(i % 3)
+        val out = new ByteArrayOutputStream()
+        val bytes = encode(ticks)
+        val z = new LZMAOutputStream(out, o, if (i % 2 == 0) bytes.length.toLong else -1L)
+        z.write(bytes); z.close()
+        Bi5TreeFixture.put(root, s"EURUSD/2020/0/1/${i}h_ticks.bi5", out.toByteArray)
+      }
+      val script =
+        """import lzma, struct, sys
+          |for p in sys.argv[1:]:
+          |    raw = lzma.decompress(open(p, 'rb').read(), format=lzma.FORMAT_ALONE)
+          |    for r in struct.iter_unpack('>3I2f', raw):
+          |        print(p, *map(repr, r))
+          |""".stripMargin
+      val proc = new ProcessBuilder((Seq("python3", "-c", script) ++ files.map(_.toString)): _*).start()
+      val lines = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toVector
+      assert(proc.waitFor() === 0, new String(proc.getErrorStream.readAllBytes()))
+      val py = lines.map { l =>
+        val f = l.split(" ")
+        (f(0), f(1).toLong, f(2).toLong, f(3).toLong, f(4).toDouble, f(5).toDouble)
+      }
+      val ours = files.flatMap { f =>
+        val decoded = Bi5Lzma.decode(java.nio.file.Files.readAllBytes(f))
+        Bi5Codec.ticks(decoded, decoded.length).map { t =>
+          (f.toString, t.msOffset & 0xffffffffL, t.askRaw & 0xffffffffL, t.bidRaw & 0xffffffffL,
+            t.askVol.toDouble, t.bidVol.toDouble)
+        }
+      }
+      assert(ours.nonEmpty)
+      assert(ours === py)
+    } finally Bi5TreeFixture.deleteTree(root)
   }
 }

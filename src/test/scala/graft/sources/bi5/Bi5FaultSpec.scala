@@ -58,4 +58,42 @@ class Bi5FaultSpec extends AnyFunSuite {
       }
     } finally Bi5TreeFixture.deleteTree(root)
   }
+
+  test("a truncated hour keeps every complete record before the cut: both readers and the decode-count") {
+    val root = Files.createTempDirectory("bi5trunc")
+    try {
+      val rnd = new scala.util.Random(7)
+      val ticks = (0 until 3000).map { i =>
+        Bi5Codec.Tick(i * 1000, rnd.nextInt(1 << 30), rnd.nextInt(1 << 30), rnd.nextFloat(), rnd.nextFloat())
+      }
+      // an unknown size in the header, so the count decodes the file
+      val full = Bi5TreeFixture.lzma(ticks, knownSize = false)
+      val cut = full.take(full.length * 2 / 3)
+      val path = Bi5TreeFixture.put(root, "EURUSD/2020/0/1/0h_ticks.bi5", cut).toString
+
+      // the reference reads field by field, so it loses at most the record
+      // the cut splits: LZMAInputStream read one byte per call
+      val referenceRecords = {
+        val in = new org.tukaani.xz.LZMAInputStream(new java.io.ByteArrayInputStream(cut))
+        var n = 0L
+        try { while (in.read() >= 0) n += 1 } catch { case scala.util.control.NonFatal(_) => }
+        (n / Bi5Codec.RecordBytes).toInt
+      }
+      val kept = Bi5Lzma.decode(cut).length / Bi5Codec.RecordBytes
+      assert(kept >= referenceRecords && referenceRecords > 0 && kept < ticks.length)
+
+      val opts = Bi5Options.from(Map("path" -> root.toString, "digits" -> "5").get)
+      val p = Bi5Partition(Array(path), walk = false)
+      val meta = Bi5PathMeta.parse(path, 0).get
+      val want = ticks.take(kept).map(t => (meta.tsMicros(t.msOffset), t.askVol.toDouble))
+      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+      drain(new Bi5PartitionReader(p, opts, Bi5Schema.schema, Array.empty, NioBi5Store)) { r =>
+        rows += ((r.getLong(1), r.getDouble(4)))
+        1
+      }
+      assert(rows === want)
+      assert(drain(new Bi5ColumnarReader(p, opts, Bi5Schema.schema, Array.empty, NioBi5Store))(_.numRows()) === kept)
+      assert(new Bi5AggReader(p, opts, Seq(Bi5Agg.Count), NioBi5Store).get().getLong(0) === kept)
+    } finally Bi5TreeFixture.deleteTree(root)
+  }
 }

@@ -300,7 +300,7 @@ class Bi5PruningSpec extends AnyFunSuite {
           GreaterThanOrEqual("ts", sqlTs("2019-12-31 23:00:00")),
           LessThan("ts", sqlTs("2020-01-01 01:00:00"))))
       for (january <- Seq(0, 1); fs <- filterSets) {
-        val enter = Bi5FilePruner.dirFilter(january, fs)
+        val enter = new Bi5FilePruner.Checks(fs).dirFilter(january)
         val nio = NioBi5Store.listBi5Files(root.toString, enter).toSet
         val viaHadoop = hadoop.listBi5Files(s"file://$root", enter)
           .map { case (p, n) => (p.stripPrefix("file:"), n) }.toSet
@@ -308,7 +308,7 @@ class Bi5PruningSpec extends AnyFunSuite {
       }
       // the walk really pruned: a ticker filter never lists another ticker
       val one = NioBi5Store.listBi5Files(root.toString,
-        Bi5FilePruner.dirFilter(0, Array[Filter](EqualTo("ticker", "GBPUSD"))))
+        new Bi5FilePruner.Checks(Array[Filter](EqualTo("ticker", "GBPUSD"))).dirFilter(0))
       assert(one.nonEmpty && one.forall(_._1.contains("/GBPUSD/")))
     } finally Bi5TreeFixture.deleteTree(root)
   }

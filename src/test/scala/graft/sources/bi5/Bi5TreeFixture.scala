@@ -16,7 +16,10 @@ object Bi5TreeFixture {
       Bi5Codec.Tick(ms, 100000 + seed * 10 + i, 99000 + seed * 10 + i, 1.5f + i, 0.25f * (i + 1))
     }
 
-  def lzma(ticks: Seq[Bi5Codec.Tick]): Array[Byte] = {
+  /** The records of `ticks` as one LZMA-alone stream; with `knownSize`
+    * false the header's size is unknown and the stream ends with an end
+    * marker. */
+  def lzma(ticks: Seq[Bi5Codec.Tick], knownSize: Boolean = true): Array[Byte] = {
     val raw = new ByteArrayOutputStream()
     val d = new DataOutputStream(raw)
     ticks.foreach { t =>
@@ -26,7 +29,7 @@ object Bi5TreeFixture {
     d.flush()
     val bytes = raw.toByteArray
     val out = new ByteArrayOutputStream()
-    val z = new LZMAOutputStream(out, new LZMA2Options(), bytes.length.toLong)
+    val z = new LZMAOutputStream(out, new LZMA2Options(), if (knownSize) bytes.length.toLong else -1L)
     z.write(bytes)
     z.close()
     out.toByteArray
