@@ -54,7 +54,7 @@ case class BpeEncodeBytes(left: Expression, right: Expression) extends BinaryExp
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (StringType, StringType) =>
-        BpeByteKit.checkSpecArg("bpe_encode_bytes", right)
+        BpeIntKit.checkSpecArg("bpe_encode_bytes", right, BpeByteKit.IdBase)
       case other =>
         TypeCheckResult.TypeCheckFailure(s"bpe_encode_bytes expects (string, string), got $other")
     }
@@ -82,7 +82,7 @@ case class BpeDecodeBytes(left: Expression, right: Expression) extends BinaryExp
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(IntegerType, _), StringType) =>
-        BpeByteKit.checkSpecArg("bpe_decode_bytes", right)
+        BpeIntKit.checkSpecArg("bpe_decode_bytes", right, BpeByteKit.IdBase)
       case other =>
         TypeCheckResult.TypeCheckFailure(
           s"bpe_decode_bytes expects (array<int>, string), got $other")
@@ -111,7 +111,7 @@ case class BpeSegmentBytes(left: Expression, right: Expression) extends BinaryEx
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (StringType, StringType) =>
-        BpeByteKit.checkSpecArg("bpe_segment_bytes", right)
+        BpeIntKit.checkSpecArg("bpe_segment_bytes", right, BpeByteKit.IdBase)
       case other =>
         TypeCheckResult.TypeCheckFailure(s"bpe_segment_bytes expects (string, string), got $other")
     }
@@ -137,10 +137,6 @@ object BpeByteKit {
   /** First merge id: one above the last byte value — the GPT-2 id layout
     * (bytes 0–255, merge k at 256 + k - 1). */
   val IdBase: Int = 256
-
-  /** Same packed-pair-key bound as [[BpeIntKit.SymLimit]] (shared replay
-    * core): bounds the model at ~2M merges — loud if ever hit. */
-  val SymLimit: Int = BpeIntKit.SymLimit
 
   /** The published GPT-2 printable byte remap (openai/gpt-2 encoder.py's
     * bytes_to_unicode, public knowledge): the 188 bytes in
@@ -212,69 +208,10 @@ object BpeByteKit {
     }
   }
 
-  /** Analysis-time foldable-spec validation shared by the three
-    * expressions (the [[BpeEncode]] contract). */
-  private[functions] def checkSpecArg(fn: String, right: Expression): TypeCheckResult =
-    if (!right.foldable) {
-      TypeCheckResult.TypeCheckFailure(
-        s"$fn: spec must be a foldable literal (the trained merge list is " +
-          "model configuration, not data)")
-    } else {
-      val s = right.eval(null)
-      if (s == null) TypeCheckResult.TypeCheckFailure(s"$fn: spec must be non-null")
-      else parseError(s.toString) match {
-        case null => TypeCheckResult.TypeCheckSuccess
-        case err => TypeCheckResult.TypeCheckFailure(s"$fn: $err")
-      }
-    }
-
-  /** Null when `spec` parses, else a loud description (analysis-time).
-    * Same grammar as [[BpeIntKit.parseError]] with the byte id base:
-    * entry i defines id 256 + i and may only reference already-defined
-    * ids (training order). */
-  def parseError(spec: String): String = {
-    if (spec.isEmpty) return null
-    val entries = spec.split(";", -1)
-    var i = 0
-    while (i < entries.length) {
-      val e = entries(i)
-      val c = e.indexOf(':')
-      if (c <= 0 || c == e.length - 1) return s"malformed entry '$e' (want 'a:b')"
-      var j = 0
-      while (j < e.length) {
-        val ch = e.charAt(j)
-        if (ch != ':' && (ch < '0' || ch > '9')) return s"non-numeric entry '$e'"
-        j += 1
-      }
-      val a = java.lang.Long.parseLong(e.substring(0, c))
-      val b = java.lang.Long.parseLong(e.substring(c + 1))
-      if (a >= SymLimit || b >= SymLimit || a < 0 || b < 0)
-        return s"symbol out of range in '$e' (limit $SymLimit)"
-      if (a >= IdBase + i || b >= IdBase + i)
-        return s"forward merge-id reference in '$e' (entry ${i + 1})"
-      i += 1
-    }
-    if (entries.length + IdBase >= SymLimit) return s"too many merges (${entries.length})"
-    null
-  }
-
+  /** [[BpeIntKit.parsePairs]] as a byte-level [[Spec]]. */
   def parse(spec: String): Spec = {
-    val m = new java.util.HashMap[Long, Integer]()
-    if (spec.isEmpty) return new Spec(m, Array.empty, Array.empty, 0)
-    val entries = spec.split(";", -1)
-    val as = new Array[Int](entries.length)
-    val bs = new Array[Int](entries.length)
-    var i = 0
-    while (i < entries.length) {
-      val e = entries(i)
-      val c = e.indexOf(':')
-      val a = Integer.parseInt(e.substring(0, c))
-      val b = Integer.parseInt(e.substring(c + 1))
-      as(i) = a; bs(i) = b
-      m.putIfAbsent(a.toLong * SymLimit + b, i + 1)
-      i += 1
-    }
-    new Spec(m, as, bs, entries.length)
+    val (m, as, bs) = BpeIntKit.parsePairs(spec)
+    new Spec(m, as, bs, as.length)
   }
 
   def encode(u: UTF8String, spec: Spec): ArrayData = {
@@ -423,7 +360,7 @@ case class BpeEncodeGpt2(left: Expression, right: Expression) extends BinaryExpr
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (StringType, StringType) =>
-        BpeByteKit.checkSpecArg("bpe_encode_gpt2", right)
+        BpeIntKit.checkSpecArg("bpe_encode_gpt2", right, BpeByteKit.IdBase)
       case other =>
         TypeCheckResult.TypeCheckFailure(s"bpe_encode_gpt2 expects (string, string), got $other")
     }

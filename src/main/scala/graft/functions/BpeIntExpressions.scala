@@ -46,21 +46,7 @@ case class BpeEncode(left: Expression, right: Expression) extends BinaryExpressi
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (StringType, StringType) =>
-        if (!right.foldable) {
-          TypeCheckResult.TypeCheckFailure(
-            "bpe_encode: spec must be a foldable literal (the trained merge " +
-              "list is model configuration, not data)")
-        } else {
-          val s = right.eval(null)
-          if (s == null) {
-            TypeCheckResult.TypeCheckFailure("bpe_encode: spec must be non-null")
-          } else {
-            BpeIntKit.parseError(s.toString) match {
-              case null => TypeCheckResult.TypeCheckSuccess
-              case err => TypeCheckResult.TypeCheckFailure(s"bpe_encode: $err")
-            }
-          }
-        }
+        BpeIntKit.checkSpecArg("bpe_encode", right, BpeIntKit.IdBase)
       case other =>
         TypeCheckResult.TypeCheckFailure(s"bpe_encode expects (string, string), got $other")
     }
@@ -97,21 +83,7 @@ case class BpeSegment(left: Expression, right: Expression) extends BinaryExpress
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (StringType, StringType) =>
-        if (!right.foldable) {
-          TypeCheckResult.TypeCheckFailure(
-            "bpe_segment: spec must be a foldable literal (the trained merge " +
-              "list is model configuration, not data)")
-        } else {
-          val s = right.eval(null)
-          if (s == null) {
-            TypeCheckResult.TypeCheckFailure("bpe_segment: spec must be non-null")
-          } else {
-            BpeIntKit.parseError(s.toString) match {
-              case null => TypeCheckResult.TypeCheckSuccess
-              case err => TypeCheckResult.TypeCheckFailure(s"bpe_segment: $err")
-            }
-          }
-        }
+        BpeIntKit.checkSpecArg("bpe_segment", right, BpeIntKit.IdBase)
       case other =>
         TypeCheckResult.TypeCheckFailure(s"bpe_segment expects (string, string), got $other")
     }
@@ -172,8 +144,33 @@ object BpeIntKit {
       else spellings(sym - IdBase)
   }
 
+  /** Analysis-time foldable-spec validation shared by every expression
+    * that takes a spec — code-point and byte-level alike: the spec is
+    * model configuration, not data, so it must be a non-null foldable
+    * literal that parses over the symbol space whose first merge id is
+    * `idBase`. */
+  private[functions] def checkSpecArg(
+      fn: String, right: Expression, idBase: Int): TypeCheckResult =
+    if (!right.foldable) {
+      TypeCheckResult.TypeCheckFailure(
+        s"$fn: spec must be a foldable literal (the trained merge list is " +
+          "model configuration, not data)")
+    } else {
+      val s = right.eval(null)
+      if (s == null) TypeCheckResult.TypeCheckFailure(s"$fn: spec must be non-null")
+      else parseError(s.toString, idBase) match {
+        case null => TypeCheckResult.TypeCheckSuccess
+        case err => TypeCheckResult.TypeCheckFailure(s"$fn: $err")
+      }
+    }
+
   /** Null when `spec` parses, else a loud description (analysis-time). */
-  def parseError(spec: String): String = {
+  def parseError(spec: String): String = parseError(spec, IdBase)
+
+  /** The spec grammar over a symbol space whose first merge id is
+    * `idBase` (the code-point space here, the byte space in
+    * [[BpeByteKit]]): entry i defines id `idBase + i`. */
+  private[functions] def parseError(spec: String, idBase: Int): String = {
     if (spec.isEmpty) return null
     val entries = spec.split(";", -1)
     var i = 0
@@ -191,21 +188,28 @@ object BpeIntKit {
       val b = java.lang.Long.parseLong(e.substring(c + 1))
       if (a >= SymLimit || b >= SymLimit || a < 0 || b < 0)
         return s"symbol out of range in '$e' (limit $SymLimit)"
-      // entry i (0-based) defines id IdBase + i; it may only reference
+      // entry i (0-based) defines id idBase + i; it may only reference
       // ALREADY-DEFINED ids (training order) — a forward reference could
       // never fire in encode and would leave segment spellings ungrounded
-      if (a >= IdBase + i || b >= IdBase + i)
+      if (a >= idBase + i || b >= idBase + i)
         return s"forward merge-id reference in '$e' (entry ${i + 1})"
       i += 1
     }
-    if (entries.length + IdBase >= SymLimit) return s"too many merges (${entries.length})"
+    if (entries.length + idBase >= SymLimit) return s"too many merges (${entries.length})"
     null
   }
 
   def parse(spec: String): Spec = {
+    val (m, as, bs) = parsePairs(spec)
+    new Spec(m, as, bs, as.length)
+  }
+
+  /** A spec that [[parseError]] accepts as (pair key -> 1-based rank, left
+    * symbols, right symbols) — the parse behind both kits' `Spec`s. */
+  private[functions] def parsePairs(
+      spec: String): (java.util.HashMap[Long, Integer], Array[Int], Array[Int]) = {
     val m = new java.util.HashMap[Long, Integer]()
-    if (spec.isEmpty) return new Spec(m, Array.empty, Array.empty, 0)
-    val entries = spec.split(";", -1)
+    val entries = if (spec.isEmpty) Array.empty[String] else spec.split(";", -1)
     val as = new Array[Int](entries.length)
     val bs = new Array[Int](entries.length)
     var i = 0
@@ -220,7 +224,7 @@ object BpeIntKit {
       m.putIfAbsent(a.toLong * SymLimit + b, i + 1)
       i += 1
     }
-    new Spec(m, as, bs, entries.length)
+    (m, as, bs)
   }
 
   def encode(u: UTF8String, spec: Spec): ArrayData = {

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /**
  * Byte-pair-encoding TRAINER and APPLIER at arbitrary merge count — the
  * generalization of q156's 3 unrolled rounds into a driver-loop operator
- * (the `Ann.kmeansFit` pattern: per-round 1-row elections stay DataFrames,
- * `localCheckpoint` pins each round so round r+1 never recomputes rounds
- * 1..r; the driver never sees corpus data).
+ * (the `Ann.kmeansFit` pattern: `localCheckpoint` pins each round so round
+ * r+1 never recomputes rounds 1..r; the driver sees model-sized election
+ * rows, never corpus data).
  *
  * Model: the classic word-level BPE of Sennrich et al. 2016 ("Neural
  * Machine Translation of Rare Words with Subword Units") restricted to the
@@ -33,9 +33,11 @@ import org.apache.spark.sql.functions._
  *
  * The 100 TB shape: one corpus scan builds the (word, count) table — the
  * only corpus-sized shuffle; every training round then runs over the
- * vocab-sized table (pair explode ~ avg word length x vocab), elects a
- * 1-row winner via `TakeOrderedAndProject`, and broadcasts it back into
- * `replace()`. Application to new text is map-only: the trained merge
+ * vocab-sized table (pair explode ~ avg word length x vocab), collects
+ * its top candidates via `TakeOrderedAndProject`, and folds the elected
+ * pairs back in as literal `replace()`s. All trainers share one election
+ * ([[elect]]); sequential [[fit]] is its one-pair batch. Application to
+ * new text is map-only: the trained merge
  * table collapses to ONE array-of-struct row broadcast to every task and
  * folded per word with the `aggregate` HOF — and because it is a
  * stream-static broadcast, [[applyMerges]]/[[tokenCounts]] run UNCHANGED
@@ -100,17 +102,18 @@ object Bpe {
   }
 
   /**
-   * Train `nMerges` BPE merge rounds over a `(wordCol, countCol)` table.
-   * Returns the merge table `(round int, pair string, sym string, n bigint)`
-   * in training order; `pair` is spelled in the CURRENT symbol alphabet of
-   * its round (earlier placeholders may appear inside it), `sym` is the
-   * single placeholder character the pair merged into. Stops early (fewer
-   * than `nMerges` rows) if the vocabulary runs out of adjacent pairs —
-   * real trainers stop, they don't loop on an empty election.
+   * Train `nMerges` BPE merge rounds over a `(wordCol, countCol)` table —
+   * the exact Sennrich sequence, one pair per round. Returns the merge
+   * table `(round int, pair string, sym string, n bigint)` in training
+   * order; `pair` is spelled in the CURRENT symbol alphabet of its round
+   * (earlier placeholders may appear inside it), `sym` is the single
+   * placeholder character the pair merged into. Stops early (fewer than
+   * `nMerges` rows) if the vocabulary runs out of adjacent pairs — real
+   * trainers stop, they don't loop on an empty election.
    *
-   * Control plane: one 1-row `localCheckpoint` + one `isEmpty` probe per
-   * round (the bounded per-round driver reads `Dedup.clusters` documents);
-   * corpus/vocab data never reaches the driver.
+   * This IS [[fitBlocked]] with a one-pair batch: with `candCap = 1` the
+   * walk sees only the round's top pair (n desc, pair asc), which the L/R
+   * rule always accepts, so each round merges exactly that pair.
    */
   def fit(
       spark: SparkSession,
@@ -118,72 +121,9 @@ object Bpe {
       wordCol: String,
       countCol: String,
       nMerges: Int,
-      baseCp: Int = DefaultBaseCp): DataFrame = {
-    require(nMerges >= 1, s"nMerges ($nMerges) must be positive")
-    requirePlaceholderRange(baseCp, nMerges)
-    val reserved = Set("w", "wcnt", "pair", "sym", "n", "round", "__bp")
-    // the training frame is rebuilt with exactly (w, wcnt); only name
-    // collisions on the INPUT columns we read matter
-    require(words.columns.contains(wordCol) && words.columns.contains(countCol),
-      s"words must carry $wordCol and $countCol")
-    // loud precondition INSIDE the projected column (the kmeansFit/GlobalRank
-    // pattern — pruning can never drop it): no word may already contain a
-    // placeholder code point, and words/counts must be non-null
-    val guarded = when(
-      col(wordCol).isNull || col(countCol).isNull ||
-        col(wordCol).rlike(placeholderClass(baseCp, nMerges)),
-      raise_error(concat(
-        lit(s"Bpe.fit: $wordCol/$countCol must be non-null and contain no " +
-          s"placeholder code points in [$baseCp, ${baseCp + nMerges}); got word "),
-        coalesce(col(wordCol), lit("null")))).cast("string"))
-      .otherwise(col(wordCol))
-    var wc = words
-      .select(guarded.as("w"), col(countCol).cast("long").as("wcnt"))
-      .localCheckpoint(true)
-    // Size-adaptive dispatch (optimization round r11 — the BpeInt.fitLocal
-    // discipline): a vocab-sized word table runs the IDENTICAL election
-    // locally over one collect instead of 2 Spark jobs per merge round
-    // (the guard already executed during the checkpoint). Same counts
-    // (adjacent code-point pairs, overlap-inclusive, wcnt-weighted), same
-    // (n desc, pair asc in UTF-8 byte order) top-1, same replace
-    // semantics — locked by BpeLocalFitSpec.
-    if (localFitFits(spark, wc)) {
-      val units = wc.collect().map(r => (r.getString(0), r.getLong(1)))
-      return fitLocalSeq(spark, units, nMerges, baseCp)
-    }
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var r = 1
-    var exhausted = false
-    while (r <= nMerges && !exhausted) {
-      val sym = placeholderSym(baseCp, r)
-      // this round's election: every adjacent 2-char pair, wcnt-weighted,
-      // top-1 by (n desc, pair asc) — TakeOrderedAndProject, 1 row
-      val top = wc.filter(length(col("w")) >= 2)
-        .select(col("wcnt"), explode(expr(
-          "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"))
-          .as("pair"))
-        .groupBy("pair").agg(sum("wcnt").as("n"))
-        .orderBy(col("n").desc, col("pair"))
-        .limit(1)
-        .select(lit(r).as("round"), col("pair"), lit(sym).as("sym"), col("n"))
-        .localCheckpoint(true)
-      if (top.isEmpty) {
-        exhausted = true
-      } else {
-        rounds += top
-        // merge the winner everywhere; Column-API replace keeps the control
-        // character out of any SQL text that would need parsing
-        wc = wc.crossJoin(broadcast(top.select(col("pair").as("__bp"))))
-          .withColumn("w", replace(col("w"), col("__bp"), lit(sym)))
-          .select("w", "wcnt")
-          .localCheckpoint(true)
-        r += 1
-      }
-    }
-    require(rounds.nonEmpty,
-      "Bpe.fit: vocabulary has no adjacent pairs — nothing to train on")
-    rounds.reduce(_.unionByName(_))
-  }
+      baseCp: Int = DefaultBaseCp): DataFrame =
+    fitBlocked(spark, words, wordCol, countCol, nMerges, maxRounds = nMerges,
+      candCap = 1, acceptCap = 1, baseCp)
 
   /** [[fit]] straight from a corpus text column. */
   def fitOnText(
@@ -195,36 +135,31 @@ object Bpe {
     fit(spark, wordCounts(df, textCol), "w", "wcnt", nMerges, baseCp)
 
   /**
-   * BATCHED BPE trainer for production merge counts — `fit` elects one
-   * pair per round (the exact Sennrich sequence: 512 merges = 512 driver
-   * rounds), this variant elects a whole GREEDY BATCH per round under
-   * the LEFT/RIGHT acceptance rule (the [[BpeInt.fitBlocked]]
-   * discipline): rank this round's pair counts (count desc, pair asc),
-   * walk the top `candCap` in rank order accepting pair `ab` iff `a` is
-   * not the RIGHT char of an already-accepted pair and `b` is not the
-   * LEFT char of one (a self-pair `aa` needs `a` on neither side), stop
-   * at `min(acceptCap, nMerges - merged)`. Two occurrences of accepted
-   * pairs can only overlap when one's right char is the other's left
-   * char, so batch members never overlap — applying them together (or
-   * as a literal replace fold in any order) equals applying them
-   * one-by-one, each accepted merge is real, and none records a stale
-   * count (unlike the unrestricted top-k heuristic). Same-left and
-   * same-right pairs batch together, so 512 merges train in ~8 rounds
-   * where the char-disjoint rule took ~20 and sequential fit takes 512.
+   * BATCHED BPE trainer for production merge counts — [[fit]] elects one
+   * pair per round (512 merges = 512 driver rounds), this variant elects
+   * a whole GREEDY BATCH per round: the LEFT/RIGHT walk of [[elect]] over
+   * the round's top `candCap` pairs (count desc, pair asc), a pair `ab`
+   * being its two code points. Batch members never overlap, so the batch
+   * applies as a literal replace fold in any order; 512 merges train in
+   * ~8 rounds.
    *
    * The election itself is a bounded driver step: the top-`candCap`
    * (pair, count) rows — aggregate MODEL data, the `Logit.fit` gradient-
-   * row discipline, never corpus rows — are collected, the greedy walk
-   * runs driver-side, and the accepted batch returns to the plan as
-   * `candCap`-bounded literal `replace()` folds (codegen'd; no HOF on
-   * the training path). Rounds are `localCheckpoint`-pinned like `fit`.
+   * row discipline, never corpus rows — are collected, the walk runs
+   * driver-side, and the accepted batch returns to the plan as literal
+   * `replace()` folds (codegen'd; no HOF on the training path), each
+   * round `localCheckpoint`-pinned. A vocab-sized word table skips the
+   * per-round jobs: it is collected once and trained by the int-symbol
+   * incremental election ([[BpeInt.fitLocal]], code points as symbols,
+   * placeholder `baseCp + k - 1` as merge id k) — the same rows, locked by
+   * BpeLocalFitSpec.
    *
-   * Output schema = `fit`'s (`round` = GLOBAL merge index in election
-   * order, `pair` in the current alphabet of its round, `sym`, `n`), so
-   * [[applyMerges]]/[[decodeSpellings]]/[[tokenCounts]] work unchanged.
-   * Training stops early when the vocabulary runs out of pairs or
-   * `maxRounds` is hit (both engines of an oracle replay see the same
-   * bound, so a fixed-round generated twin stays exact).
+   * Output: `round` = GLOBAL merge index in election order, `pair` in the
+   * current alphabet of its round, `sym`, `n`, so [[applyMerges]]/
+   * [[decodeSpellings]]/[[tokenCounts]] apply it. Training stops early
+   * when the vocabulary runs out of pairs or `maxRounds` is hit (both
+   * engines of an oracle replay see the same bound, so a fixed-round
+   * generated twin stays exact).
    */
   def fitBlocked(
       spark: SparkSession,
@@ -236,232 +171,139 @@ object Bpe {
       candCap: Int = 512,
       acceptCap: Int = 64,
       baseCp: Int = DefaultBaseCp): DataFrame = {
+    val who = "Bpe.fitBlocked"
+    requireKnobs(nMerges, maxRounds, candCap, acceptCap)
+    requirePlaceholderRange(baseCp, nMerges)
+    // no word may already contain a placeholder code point
+    var wc = unitTable(words, wordCol, countCol, who,
+      col(wordCol).rlike(placeholderClass(baseCp, nMerges)),
+      "must be non-null and contain no placeholder code points in " +
+        s"[$baseCp, ${baseCp + nMerges}); got word ")
+    def pair(m: Merge): String =
+      new String(Character.toChars(m.a)) + new String(Character.toChars(m.b))
+    val merges = localUnits(spark, wc) match {
+      case Some(units) =>
+        BpeInt.fitLocal(units, nMerges, maxRounds, candCap, acceptCap, baseCp,
+          byteLevel = false, who)
+      case None =>
+        elect(nMerges, maxRounds, acceptCap, who) { () =>
+          wc.filter(length(col("w")) >= 2)
+            .select(col("wcnt"), explode(expr(
+              "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"))
+              .as("pair"))
+            .groupBy("pair").agg(sum("wcnt").as("n"))
+            .orderBy(col("n").desc, col("pair"))
+            .limit(candCap)
+            .collect().map { r =>
+              // a pair is two code points; UTF-8 byte order of the pair is
+              // (a, b) code-point order
+              val p = r.getString(0)
+              val a = p.codePointAt(0)
+              (a, p.codePointAt(Character.charCount(a)), r.getLong(1))
+            }
+        } { batch =>
+          // no-overlap => the sequential literal fold IS the batch apply
+          wc = batch.foldLeft(wc) { (df, m) =>
+            df.withColumn("w",
+              replace(col("w"), lit(pair(m)), lit(placeholderSym(baseCp, m.midx))))
+          }.select("w", "wcnt").localCheckpoint(true)
+        }
+    }
+    import spark.implicits._
+    merges.map(m => (m.midx, pair(m), placeholderSym(baseCp, m.midx), m.n))
+      .toDF("round", "pair", "sym", "n")
+  }
+
+  /** One elected merge: global 1-based index, election round, the pair's
+    * two symbols, and the count it was elected at. */
+  private[operators] final case class Merge(midx: Int, rnd: Int, a: Int, b: Int, n: Long)
+
+  private[operators] def requireKnobs(
+      nMerges: Int, maxRounds: Int, candCap: Int, acceptCap: Int): Unit = {
     require(nMerges >= 1, s"nMerges ($nMerges) must be positive")
     require(maxRounds >= 1 && candCap >= 1 && acceptCap >= 1,
       s"maxRounds ($maxRounds), candCap ($candCap), acceptCap ($acceptCap) must be positive")
-    requirePlaceholderRange(baseCp, nMerges)
+  }
+
+  /** The checkpointed `(w, wcnt)` training table. Null words or counts and
+    * `bad` words fail loudly INSIDE the projected column (the kmeansFit/
+    * GlobalRank pattern — pruning can never drop the check). */
+  private[operators] def unitTable(
+      words: DataFrame,
+      wordCol: String,
+      countCol: String,
+      who: String,
+      bad: Column,
+      badMsg: String): DataFrame = {
     require(words.columns.contains(wordCol) && words.columns.contains(countCol),
       s"words must carry $wordCol and $countCol")
-    val guarded = when(
-      col(wordCol).isNull || col(countCol).isNull ||
-        col(wordCol).rlike(placeholderClass(baseCp, nMerges)),
-      raise_error(concat(
-        lit(s"Bpe.fitBlocked: $wordCol/$countCol must be non-null and contain no " +
-          s"placeholder code points in [$baseCp, ${baseCp + nMerges}); got word "),
+    val guarded = when(col(wordCol).isNull || col(countCol).isNull || bad,
+      raise_error(concat(lit(s"$who: $wordCol/$countCol $badMsg"),
         coalesce(col(wordCol), lit("null")))).cast("string"))
       .otherwise(col(wordCol))
-    var wc = words
-      .select(guarded.as("w"), col(countCol).cast("long").as("wcnt"))
+    words.select(guarded.as("w"), col(countCol).cast("long").as("wcnt"))
       .localCheckpoint(true)
-    // Size-adaptive dispatch (r11): identical batched election locally
-    // when the word table is vocab-sized — see [[fit]]'s dispatch note.
-    if (localFitFits(spark, wc)) {
-      val units = wc.collect().map(r => (r.getString(0), r.getLong(1)))
-      return fitBlockedLocal(spark, units, nMerges, maxRounds, candCap,
-        acceptCap, baseCp)
-    }
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var merged = 0
-    var round = 0
-    var exhausted = false
-    while (merged < nMerges && round < maxRounds && !exhausted) {
-      round += 1
-      // bounded model-sized collect: top-candCap (pair, n), rank order
-      val cand = wc.filter(length(col("w")) >= 2)
-        .select(col("wcnt"), explode(expr(
-          "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"))
-          .as("pair"))
-        .groupBy("pair").agg(sum("wcnt").as("n"))
-        .orderBy(col("n").desc, col("pair"))
-        .limit(candCap)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      if (cand.isEmpty) exhausted = true
-      else {
-        // greedy L/R walk (rank-1 is never blocked => progress): reject
-        // pair ab iff a is an accepted pair's RIGHT or b is an accepted
-        // pair's LEFT — accepted occurrences then never overlap
-        val cap = math.min(acceptCap, nMerges - merged)
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        val usedL = scala.collection.mutable.Set.empty[Char]
-        val usedR = scala.collection.mutable.Set.empty[Char]
-        var j = 0
-        while (j < cand.length && accepted.length < cap) {
-          val (p, n) = cand(j)
-          if (!usedR.contains(p.charAt(0)) && !usedL.contains(p.charAt(1))) {
-            accepted += ((p, n)); usedL += p.charAt(0); usedR += p.charAt(1)
-          }
-          j += 1
-        }
-        val batch = accepted.toSeq.zipWithIndex.map { case ((p, n), i) =>
-          (merged + i + 1, p, placeholderSym(baseCp, merged + i + 1), n)
-        }
-        rows ++= batch
-        // no-overlap => the sequential literal fold IS the batch apply
-        wc = batch.foldLeft(wc) { case (df, (_, p, sym, _)) =>
-          df.withColumn("w", replace(col("w"), lit(p), lit(sym)))
-        }.select("w", "wcnt").localCheckpoint(true)
-        merged += batch.size
-      }
-    }
-    require(rows.nonEmpty,
-      "Bpe.fitBlocked: vocabulary has no adjacent pairs — nothing to train on")
-    import spark.implicits._
-    rows.toSeq.toDF("round", "pair", "sym", "n")
   }
 
-  /** r11 dispatch probe: true when the (already-checkpointed) word table's
-    * char volume fits `spark.graft.bpe.localFitMaxChars` (default 32M —
-    * the BpeInt.fitLocal threshold; 0 forces the distributed path). */
-  private def localFitFits(spark: SparkSession, wc: DataFrame): Boolean = {
+  /** Size-adaptive dispatch shared by every trainer: the collected
+    * `(w, wcnt)` units when the checkpointed table's char volume fits
+    * `spark.graft.bpe.localFitMaxChars` (default 32M; 0 forces the
+    * distributed path), else None. The unit table is model-class data
+    * (distinct words / n-grams with counts); at 100 TB a table that
+    * outgrows the threshold takes the distributed per-round path. */
+  private[operators] def localUnits(
+      spark: SparkSession, wc: DataFrame): Option[Array[(String, Long)]] = {
     val maxChars = spark.conf.getOption("spark.graft.bpe.localFitMaxChars")
       .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val szRow = wc.agg(count(lit(1)).as("n"),
-      coalesce(sum(length(col("w"))), lit(0L)).as("chars")).collect()(0)
-    szRow.getLong(1) <= maxChars
+    val chars = wc.agg(coalesce(sum(length(col("w"))), lit(0L))).collect()(0).getLong(0)
+    if (chars <= maxChars) Some(wc.collect().map(r => (r.getString(0), r.getLong(1))))
+    else None
   }
 
-  /** Spark's string ORDER BY is UTF-8 byte order; Java's compareTo is
-    * UTF-16 unit order — they differ for supplementary characters, so the
-    * local elections compare encoded bytes. */
-  private val utf8Order: Ordering[String] = new Ordering[String] {
-    def compare(x: String, y: String): Int = {
-      val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val c = (a(i) & 0xff) - (b(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      a.length - b.length
-    }
-  }
-
-  /** Adjacent 2-code-point pair counts (overlap-inclusive, wcnt-weighted)
-    * over the current local words — the distributed round's
-    * `explode(substring(w, i, 2)) groupBy sum(wcnt)` exactly. */
-  private def localPairCounts(
-      ws: Array[String], cs: Array[Long]): java.util.HashMap[String, Long] = {
-    val m = new java.util.HashMap[String, Long]()
-    var u = 0
-    while (u < ws.length) {
-      val w = ws(u)
-      val c = cs(u)
-      if (w.codePointCount(0, w.length) >= 2) {
-        var i = 0 // UTF-16 index of the pair's first code point
-        var next = w.offsetByCodePoints(0, 1)
-        while (next < w.length) {
-          val end = w.offsetByCodePoints(next, 1)
-          m.merge(w.substring(i, end), c, (x, y) => x + y)
-          i = next
-          next = end
-        }
-      }
-      u += 1
-    }
-    m
-  }
-
-  /** Driver-local [[fit]]: one top-1 election per merge round over the
-    * collected vocab-sized table — identical output rows. */
-  private def fitLocalSeq(
-      spark: SparkSession,
-      units: Array[(String, Long)],
-      nMerges: Int,
-      baseCp: Int): DataFrame = {
-    val ws = units.map(_._1)
-    val cs = units.map(_._2)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= nMerges && !exhausted) {
-      val m = localPairCounts(ws, cs)
-      if (m.isEmpty) exhausted = true
-      else {
-        var bestP: String = null
-        var bestN = Long.MinValue
-        val it = m.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getValue > bestN ||
-            (e.getValue == bestN && utf8Order.compare(e.getKey, bestP) < 0)) {
-            bestP = e.getKey; bestN = e.getValue
-          }
-        }
-        val sym = placeholderSym(baseCp, r)
-        rows += ((r, bestP, sym, bestN))
-        var u = 0
-        while (u < ws.length) { ws(u) = ws(u).replace(bestP, sym); u += 1 }
-        r += 1
-      }
-    }
-    require(rows.nonEmpty,
-      "Bpe.fit: vocabulary has no adjacent pairs — nothing to train on")
-    import spark.implicits._
-    rows.toSeq.toDF("round", "pair", "sym", "n")
-  }
-
-  /** Driver-local [[fitBlocked]]: the identical L/R batched election over
-    * the collected vocab-sized table — identical output rows. */
-  private def fitBlockedLocal(
-      spark: SparkSession,
-      units: Array[(String, Long)],
-      nMerges: Int,
-      maxRounds: Int,
-      candCap: Int,
-      acceptCap: Int,
-      baseCp: Int): DataFrame = {
-    val ws = units.map(_._1)
-    val cs = units.map(_._2)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var merged = 0
+  /**
+   * The election loop every trainer runs, local or distributed. Each
+   * round `ranked()` yields this round's top-`candCap` candidate pairs
+   * `(a, b, n)` ranked (n desc, a asc, b asc) — empty once the vocabulary
+   * runs out of pairs. The L/R walk accepts pair (a, b) iff `a` is no
+   * accepted pair's RIGHT symbol and `b` is no accepted pair's LEFT symbol
+   * (a self-pair (a, a) needs `a` on neither side), stopping at
+   * `min(acceptCap, nMerges - merged)`. Two occurrences of accepted pairs
+   * can only overlap when one's right symbol is the other's left symbol,
+   * so batch members never overlap: applying the batch together equals
+   * applying it one pair at a time in rank order, and no accepted count
+   * is stale. Rank-1 is never blocked, so every round with candidates
+   * makes progress. `apply(batch)` merges the accepted batch into the
+   * caller's state before the next round.
+   */
+  private[operators] def elect(nMerges: Int, maxRounds: Int, acceptCap: Int, who: String)(
+      ranked: () => Array[(Int, Int, Long)])(apply: Seq[Merge] => Unit): Seq[Merge] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var round = 0
     var exhausted = false
-    while (merged < nMerges && round < maxRounds && !exhausted) {
+    while (out.length < nMerges && round < maxRounds && !exhausted) {
       round += 1
-      val m = localPairCounts(ws, cs)
-      if (m.isEmpty) exhausted = true
+      val cand = ranked()
+      if (cand.isEmpty) exhausted = true
       else {
-        val cand = new Array[(String, Long)](m.size())
-        val it = m.entrySet().iterator()
-        var k = 0
-        while (it.hasNext) { val e = it.next(); cand(k) = (e.getKey, e.getValue); k += 1 }
-        // (n desc, pair asc in UTF-8 byte order), truncated to candCap —
-        // the distributed round's orderBy + limit
-        java.util.Arrays.sort(cand, new java.util.Comparator[(String, Long)] {
-          def compare(x: (String, Long), y: (String, Long)): Int =
-            if (x._2 != y._2) java.lang.Long.compare(y._2, x._2)
-            else utf8Order.compare(x._1, y._1)
-        })
-        val lim = math.min(candCap, cand.length)
-        val cap = math.min(acceptCap, nMerges - merged)
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        val usedL = scala.collection.mutable.Set.empty[Char]
-        val usedR = scala.collection.mutable.Set.empty[Char]
+        val cap = math.min(acceptCap, nMerges - out.length)
+        val batch = scala.collection.mutable.ArrayBuffer.empty[Merge]
+        val usedL = scala.collection.mutable.Set.empty[Int]
+        val usedR = scala.collection.mutable.Set.empty[Int]
         var j = 0
-        while (j < lim && accepted.length < cap) {
-          val (p, n) = cand(j)
-          if (!usedR.contains(p.charAt(0)) && !usedL.contains(p.charAt(1))) {
-            accepted += ((p, n)); usedL += p.charAt(0); usedR += p.charAt(1)
+        while (j < cand.length && batch.length < cap) {
+          val (a, b, n) = cand(j)
+          if (!usedR.contains(a) && !usedL.contains(b)) {
+            batch += Merge(out.length + batch.length + 1, round, a, b, n)
+            usedL += a; usedR += b
           }
           j += 1
         }
-        val batch = accepted.toSeq.zipWithIndex.map { case ((p, n), i) =>
-          (merged + i + 1, p, placeholderSym(baseCp, merged + i + 1), n)
-        }
-        rows ++= batch
-        batch.foreach { case (_, p, sym, _) =>
-          var u = 0
-          while (u < ws.length) { ws(u) = ws(u).replace(p, sym); u += 1 }
-        }
-        merged += batch.size
+        apply(batch.toSeq)
+        out ++= batch
       }
     }
-    require(rows.nonEmpty,
-      "Bpe.fitBlocked: vocabulary has no adjacent pairs — nothing to train on")
-    import spark.implicits._
-    rows.toSeq.toDF("round", "pair", "sym", "n")
+    require(out.nonEmpty, s"$who: vocabulary has no adjacent pairs — nothing to train on")
+    out.toSeq
   }
 
   /** The trained model as ONE broadcastable row: `__ms`, the merge structs

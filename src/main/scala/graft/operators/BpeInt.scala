@@ -15,26 +15,12 @@ import org.apache.spark.sql.functions._
  * trainer's replace-fold was O(nMerges). 8192-merge GPT-class
  * vocabularies train in ~52 rounds on the fixture corpus.
  *
- * Election per round (the [[Bpe.fitBlocked]] discipline in the int
- * domain, with the tighter LEFT/RIGHT acceptance rule): rank this
- * round's adjacent-pair counts (count desc, then (a, b) asc — int
- * order), walk the top `candCap` in rank order accepting pair (a, b)
- * iff `a` is not the RIGHT symbol of an already-accepted pair and `b`
- * is not the LEFT symbol of one (for a self-pair (a, a) this reduces
- * to "a appears on neither side"), stop at
- * `min(acceptCap, nMerges - merged)`. Two occurrences of accepted
- * pairs can only overlap when one's right symbol is the other's left
- * symbol, so under this rule batch members never overlap — applying
- * the batch together equals applying its members one at a time in
- * rank order, every accepted merge is real, and none records a stale
- * count (same-left pairs (a,b)/(a,d) and same-right pairs (a,b)/(c,b)
- * are now batchable: their occurrences are position-disjoint by
- * construction). Consecutive matched positions still only occur inside
- * (a, a) self-pair runs — any other adjacency would put a symbol on
- * both sides — so greedy left-to-right application remains the
- * odd-parity-of-run rule the oracle replays. Rank-1 is never blocked,
- * so every round with candidates makes progress; the wider batches cut
- * the 8192-merge round count roughly 3x vs the symbol-disjoint rule.
+ * Election per round: [[Bpe.elect]], the L/R batch walk every trainer
+ * shares, over int symbols ranked (count desc, then (a, b) asc). Batch
+ * members never overlap, and consecutive matched positions only occur
+ * inside (a, a) self-pair runs — any other adjacency would put a symbol
+ * on both sides — so greedy left-to-right application is the
+ * odd-parity-of-run rule the oracle replays.
  *
  * The per-round state is the trained spec itself: each round re-derives
  * the working vocabulary as `bpe_encode(w, spec-so-far)` over the
@@ -43,7 +29,8 @@ import org.apache.spark.sql.functions._
  * mutable state is a driver-side string and the plan never grows with
  * rounds. The election is a bounded MODEL-sized collect (top-candCap
  * (a, b, n) rows — the `Logit.fit` gradient-row discipline; corpus rows
- * never reach the driver).
+ * never reach the driver). A unit table that fits the driver trains
+ * locally instead ([[fitLocal]]), producing the same rows.
  *
  * Output: one row per merge, `(midx, rnd, a, b, id, n)` — global merge
  * index, the election round it came from (the logged round count), the
@@ -90,10 +77,9 @@ object BpeInt {
       acceptCap, IdBase, "bpe_encode", "BpeInt.fitBlocked")
   }
 
-  /** The shared int-symbol election loop — [[fitBlocked]] parameterized
-    * by the encode function and id base so the byte-level trainer
-    * ([[BpeByte]]) runs the IDENTICAL election (L/R rule, tie-breaks,
-    * per-round re-derivation) over its own symbol space. */
+  /** [[fitBlocked]] parameterized by the encode function and id base, so
+    * the byte-level trainer ([[BpeByte]]) runs the same [[Bpe.elect]] over
+    * its own symbol space. */
   private[operators] def fitCore(
       spark: SparkSession,
       words: DataFrame,
@@ -106,111 +92,62 @@ object BpeInt {
       idBase: Int,
       encodeFn: String,
       who: String): DataFrame = {
-    require(nMerges >= 1, s"nMerges ($nMerges) must be positive")
+    Bpe.requireKnobs(nMerges, maxRounds, candCap, acceptCap)
     require(nMerges + idBase < graft.functions.BpeIntKit.SymLimit,
       s"nMerges ($nMerges) exceeds the packed-symbol limit")
-    require(maxRounds >= 1 && candCap >= 1 && acceptCap >= 1,
-      s"maxRounds ($maxRounds), candCap ($candCap), acceptCap ($acceptCap) must be positive")
-    require(words.columns.contains(wordCol) && words.columns.contains(countCol),
-      s"words must carry $wordCol and $countCol")
-    // loud null contract INSIDE the projected column (pruning-proof); no
-    // placeholder-collision guard is needed — merge ids live above the
+    // no placeholder-collision guard is needed — merge ids live above the
     // base alphabet by construction (above Unicode / above byte 255)
-    val guarded = when(col(wordCol).isNull || col(countCol).isNull,
-      raise_error(lit(s"$who: $wordCol/$countCol must be non-null"))
-        .cast("string"))
-      .otherwise(col(wordCol))
-    val wc = words
-      .select(guarded.as("w"), col(countCol).cast("long").as("wcnt"))
-      .localCheckpoint(true)
-    // Size-adaptive dispatch (optimization round r11, guide §1.2 step 1):
-    // the unit table is model-class data (distinct pre-tokens / n-gram
-    // vocabulary with counts), and when it fits the driver the WHOLE
-    // election can run locally over one collect — the per-round
-    // Spark-job loop (one full re-encode + explode + aggregate + top-K
-    // job per round, 16-52 rounds) collapses into one job plus a
-    // driver-side incremental pair-count election producing the
-    // IDENTICAL merge table (same counts, same (n desc, a, b) ranking,
-    // same L/R acceptance — locked by BpeLocalFitSpec). The threshold is
-    // the broadcast-join discipline: configurable, char-volume-based, and
-    // at 100 TB a corpus whose unit table outgrows it takes the existing
-    // distributed per-round path unchanged.
-    val maxChars = spark.conf.getOption("spark.graft.bpe.localFitMaxChars")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val szRow = wc.agg(count(lit(1)).as("n"),
-      coalesce(sum(length(col("w"))), lit(0L)).as("chars")).collect()(0)
-    if (szRow.getLong(1) <= maxChars) {
-      val units = wc.collect().map(r => (r.getString(0), r.getLong(1)))
-      return fitLocal(spark, units, nMerges, maxRounds, candCap, acceptCap,
-        idBase, encodeFn == "bpe_encode_bytes", who)
-    }
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Int, Int, Long)]
-    val specSb = new java.lang.StringBuilder
-    var merged = 0
-    var round = 0
-    var exhausted = false
-    while (merged < nMerges && round < maxRounds && !exhausted) {
-      round += 1
-      // spec is pure digits/':'/';' — safe to splice into SQL text
-      val cand = wc
-        .withColumn("syms", expr(s"$encodeFn(w, '${specSb.toString}')"))
-        .filter(size(col("syms")) >= 2)
-        .select(col("wcnt"), explode(expr(
-          """transform(sequence(1, size(syms) - 1),
-               i -> named_struct('a', element_at(syms, i), 'b', element_at(syms, i + 1)))"""))
-          .as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b")).agg(sum("wcnt").as("n"))
-        .orderBy(col("n").desc, col("a"), col("b"))
-        .limit(candCap)
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-      if (cand.isEmpty) exhausted = true
-      else {
-        val cap = math.min(acceptCap, nMerges - merged)
-        // L/R rule: reject (a, b) iff a is some accepted pair's RIGHT or b
-        // is some accepted pair's LEFT (self-pairs land in both sets) —
-        // occurrences of the accepted batch then never overlap, so batch
-        // application == sequential application in rank order
-        val usedL = scala.collection.mutable.Set.empty[Int]
-        val usedR = scala.collection.mutable.Set.empty[Int]
-        var taken = 0
-        var j = 0
-        while (j < cand.length && taken < cap) {
-          val (a, b, n) = cand(j)
-          if (!usedR.contains(a) && !usedL.contains(b)) {
-            taken += 1
-            val midx = merged + taken
-            rows += ((midx, round, a, b, idBase + midx - 1, n))
-            usedL += a; usedR += b
+    val wc = Bpe.unitTable(words, wordCol, countCol, who, lit(false),
+      "must be non-null; got word ")
+    val merges = Bpe.localUnits(spark, wc) match {
+      case Some(units) =>
+        fitLocal(units, nMerges, maxRounds, candCap, acceptCap, idBase,
+          encodeFn == "bpe_encode_bytes", who)
+      case None =>
+        // the per-round state is the spec so far: each round re-derives
+        // the working vocabulary as encodeFn(w, spec) over the checkpointed
+        // table, so the plan never grows with rounds
+        val specSb = new java.lang.StringBuilder
+        Bpe.elect(nMerges, maxRounds, acceptCap, who) { () =>
+          // spec is pure digits/':'/';' — safe to splice into SQL text
+          wc.withColumn("syms", expr(s"$encodeFn(w, '${specSb.toString}')"))
+            .filter(size(col("syms")) >= 2)
+            .select(col("wcnt"), explode(expr(
+              """transform(sequence(1, size(syms) - 1),
+                   i -> named_struct('a', element_at(syms, i), 'b', element_at(syms, i + 1)))"""))
+              .as("p"))
+            .groupBy(col("p.a").as("a"), col("p.b").as("b")).agg(sum("wcnt").as("n"))
+            .orderBy(col("n").desc, col("a"), col("b"))
+            .limit(candCap)
+            .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+        } { batch =>
+          batch.foreach { m =>
             if (specSb.length > 0) specSb.append(';')
-            specSb.append(a).append(':').append(b)
+            specSb.append(m.a).append(':').append(m.b)
           }
-          j += 1
         }
-        merged += taken
-      }
     }
-    require(rows.nonEmpty,
-      s"$who: vocabulary has no adjacent pairs — nothing to train on")
     import spark.implicits._
-    rows.toSeq.toDF("midx", "rnd", "a", "b", "id", "n")
+    merges.map(m => (m.midx, m.rnd, m.a, m.b, idBase + m.midx - 1, m.n))
+      .toDF("midx", "rnd", "a", "b", "id", "n")
   }
 
-  /** Driver-local election over a collected unit table — the IDENTICAL
-    * election [[fitCore]]'s distributed loop runs (same positional
-    * adjacent-pair counts weighted by `wcnt`, same (n desc, a asc, b asc)
-    * candidate ranking and `candCap` truncation, same L/R batch
-    * acceptance, same per-round ids), computed incrementally: pair counts
-    * are maintained under merge application (subtract an affected unit's
-    * adjacencies, apply the round's accepted batch min-rank-first via the
-    * shared [[graft.functions.BpeIntKit.replayMinRank]] kernel, re-add),
-    * so each round touches only units containing an accepted pair. A
-    * merge never makes two PRE-EXISTING symbols adjacent (it replaces two
-    * symbols by one), so new pairs always involve a new id and the
-    * pair->units index stays complete by construction; stale entries
-    * (unit no longer carries the pair) are harmless — the
-    * subtract/apply/re-add cycle is a no-op on them. */
+  /** Driver-local [[Bpe.elect]] over a collected unit table — the
+    * election the distributed loops run (same positional adjacent-pair
+    * counts weighted by `wcnt`, same (n desc, a asc, b asc) ranking and
+    * `candCap` truncation, merge k = id `idBase + k - 1`), computed
+    * incrementally: pair counts are maintained under merge application
+    * (subtract an affected unit's adjacencies, apply the round's accepted
+    * batch min-rank-first via the shared
+    * [[graft.functions.BpeIntKit.replayMinRank]] kernel, re-add), so each
+    * round touches only units containing an accepted pair. A merge never
+    * makes two PRE-EXISTING symbols adjacent (it replaces two symbols by
+    * one), so new pairs always involve a new id and the pair->units index
+    * stays complete by construction; stale entries (unit no longer
+    * carries the pair) are harmless — the subtract/apply/re-add cycle is
+    * a no-op on them. Symbols are code points, or UTF-8 bytes when
+    * `byteLevel`. */
   private[operators] def fitLocal(
-      spark: SparkSession,
       units: Array[(String, Long)],
       nMerges: Int,
       maxRounds: Int,
@@ -218,7 +155,7 @@ object BpeInt {
       acceptCap: Int,
       idBase: Int,
       byteLevel: Boolean,
-      who: String): DataFrame = {
+      who: String): Seq[Bpe.Merge] = {
     val nU = units.length
     val syms = new Array[Array[Int]](nU)
     val lens = new Array[Int](nU)
@@ -227,23 +164,8 @@ object BpeInt {
     while (i < nU) {
       val (w, c) = units(i)
       syms(i) =
-        if (byteLevel) {
-          val b = w.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val a = new Array[Int](b.length)
-          var k = 0
-          while (k < b.length) { a(k) = b(k) & 0xff; k += 1 }
-          a
-        } else {
-          val a = new Array[Int](w.length)
-          var n = 0
-          var j = 0
-          while (j < w.length) {
-            val cp = w.codePointAt(j)
-            a(n) = cp; n += 1
-            j += Character.charCount(cp)
-          }
-          if (n == a.length) a else java.util.Arrays.copyOf(a, n)
-        }
+        if (byteLevel) w.getBytes(java.nio.charset.StandardCharsets.UTF_8).map(_ & 0xff)
+        else w.codePoints().toArray
       lens(i) = syms(i).length
       wcnts(i) = c
       i += 1
@@ -252,17 +174,18 @@ object BpeInt {
     def key(a: Int, b: Int): Long = a.toLong * Lim + b
     val counts = new java.util.HashMap[Long, Long]()
     val index = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]()
-    // indexFloor: index only pairs with a symbol >= indexFloor — on
-    // re-add after a round's merges, pairs of two OLDER symbols can never
-    // be new (a merge replaces two symbols by one; it never makes two
-    // pre-existing symbols adjacent), so they are already indexed.
-    def addPairs(u: Int, indexFloor: Int): Unit = {
+    // index only pairs with a symbol in [lo, hi) — on re-add after a
+    // round's merges that range holds the round's new ids: pairs of two
+    // OLDER symbols can never be new (a merge replaces two symbols by one;
+    // it never makes two pre-existing symbols adjacent), so they are
+    // already indexed
+    def addPairs(u: Int, lo: Int, hi: Int): Unit = {
       val s = syms(u); val n = lens(u); val c = wcnts(u)
       var j = 0
       while (j < n - 1) {
         val k = key(s(j), s(j + 1))
         counts.merge(k, c, (x, y) => x + y)
-        if (s(j) >= indexFloor || s(j + 1) >= indexFloor) {
+        if ((s(j) >= lo && s(j) < hi) || (s(j + 1) >= lo && s(j + 1) < hi)) {
           val lst = index.computeIfAbsent(k, _ => scala.collection.mutable.ArrayBuffer.empty[Int])
           if (lst.isEmpty || lst(lst.length - 1) != u) lst += u
         }
@@ -285,85 +208,48 @@ object BpeInt {
       }
     }
     i = 0
-    while (i < nU) { addPairs(i, indexFloor = 0); i += 1 }
+    while (i < nU) { addPairs(i, 0, Int.MaxValue); i += 1 }
 
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Int, Int, Long)]
-    val specSb = new java.lang.StringBuilder
     val stamp = new Array[Int](nU) // round-visited marks for affected dedup
-    var merged = 0
-    var round = 0
-    var exhausted = false
-    while (merged < nMerges && round < maxRounds && !exhausted) {
-      round += 1
-      if (counts.isEmpty) exhausted = true
-      else {
-        // candidate frame: every live pair, ranked (n desc, a asc, b asc),
-        // truncated to candCap — the distributed loop's orderBy + limit
-        val it = counts.entrySet().iterator()
-        val cand = new Array[(Int, Int, Long)](counts.size())
-        var m = 0
-        while (it.hasNext) {
-          val e = it.next()
-          cand(m) = ((e.getKey / Lim).toInt, (e.getKey % Lim).toInt, e.getValue)
-          m += 1
+    Bpe.elect(nMerges, maxRounds, acceptCap, who) { () =>
+      // every live pair, ranked (n desc, a asc, b asc), truncated to
+      // candCap — the distributed loop's orderBy + limit
+      val it = counts.entrySet().iterator()
+      val cand = new Array[(Int, Int, Long)](counts.size())
+      var m = 0
+      while (it.hasNext) {
+        val e = it.next()
+        cand(m) = ((e.getKey / Lim).toInt, (e.getKey % Lim).toInt, e.getValue)
+        m += 1
+      }
+      java.util.Arrays.sort(cand, new java.util.Comparator[(Int, Int, Long)] {
+        def compare(x: (Int, Int, Long), y: (Int, Int, Long)): Int = {
+          if (x._3 != y._3) java.lang.Long.compare(y._3, x._3)
+          else if (x._1 != y._1) Integer.compare(x._1, y._1)
+          else Integer.compare(x._2, y._2)
         }
-        java.util.Arrays.sort(cand, new java.util.Comparator[(Int, Int, Long)] {
-          def compare(x: (Int, Int, Long), y: (Int, Int, Long)): Int = {
-            if (x._3 != y._3) java.lang.Long.compare(y._3, x._3)
-            else if (x._1 != y._1) Integer.compare(x._1, y._1)
-            else Integer.compare(x._2, y._2)
-          }
-        })
-        val lim = math.min(candCap, cand.length)
-        val cap = math.min(acceptCap, nMerges - merged)
-        val usedL = scala.collection.mutable.Set.empty[Int]
-        val usedR = scala.collection.mutable.Set.empty[Int]
-        val batch = new java.util.HashMap[Long, Integer]()
-        var taken = 0
-        var j = 0
-        while (j < lim && taken < cap) {
-          val (a, b, n) = cand(j)
-          if (!usedR.contains(a) && !usedL.contains(b)) {
-            taken += 1
-            val midx = merged + taken
-            rows += ((midx, round, a, b, idBase + midx - 1, n))
-            usedL += a; usedR += b
-            // replayMinRank reads GLOBAL ranks: id = idBase + rank - 1
-            batch.put(key(a, b), Integer.valueOf(midx))
-            if (specSb.length > 0) specSb.append(';')
-            specSb.append(a).append(':').append(b)
-          }
-          j += 1
+      })
+      cand.take(candCap)
+    } { batch =>
+      // replayMinRank reads GLOBAL ranks: id = idBase + rank - 1
+      val ranks = new java.util.HashMap[Long, Integer]()
+      batch.foreach(m => ranks.put(key(m.a, m.b), Integer.valueOf(m.midx)))
+      val round = batch.head.rnd
+      // apply the batch to every unit listed under an accepted pair
+      val affected = scala.collection.mutable.ArrayBuffer.empty[Int]
+      batch.foreach { m =>
+        val lst = index.get(key(m.a, m.b))
+        if (lst != null) lst.foreach { u =>
+          if (stamp(u) != round) { stamp(u) = round; affected += u }
         }
-        // apply the batch to every unit listed under an accepted pair
-        val affected = scala.collection.mutable.ArrayBuffer.empty[Int]
-        val bit = batch.keySet().iterator()
-        while (bit.hasNext) {
-          val lst = index.get(bit.next())
-          if (lst != null) {
-            var p = 0
-            while (p < lst.length) {
-              val u = lst(p)
-              if (stamp(u) != round) { stamp(u) = round; affected += u }
-              p += 1
-            }
-          }
-        }
-        var q = 0
-        while (q < affected.length) {
-          val u = affected(q)
-          subPairs(u)
-          lens(u) = graft.functions.BpeIntKit.replayMinRank(syms(u), lens(u), batch, idBase)
-          addPairs(u, indexFloor = idBase + merged)
-          q += 1
-        }
-        merged += taken
+      }
+      val lo = idBase + batch.head.midx - 1
+      affected.foreach { u =>
+        subPairs(u)
+        lens(u) = graft.functions.BpeIntKit.replayMinRank(syms(u), lens(u), ranks, idBase)
+        addPairs(u, lo, lo + batch.length)
       }
     }
-    require(rows.nonEmpty,
-      s"$who: vocabulary has no adjacent pairs — nothing to train on")
-    import spark.implicits._
-    rows.toSeq.toDF("midx", "rnd", "a", "b", "id", "n")
   }
 
   /** The trained model as a [[graft.functions.BpeEncode]] spec string —

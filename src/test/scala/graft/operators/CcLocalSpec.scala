@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TestConf.withConf
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -34,11 +35,10 @@ class CcLocalSpec extends AnyFunSuite {
 
   private def both(pairs: org.apache.spark.sql.DataFrame,
       maxIters: Int = 10): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-    val dist = labelsOf(Dedup.clusters(pairs, maxIters = maxIters))
-    spark.conf.set("spark.graft.cc.localMaxEdges", Long.MaxValue.toString)
-    val local = labelsOf(Dedup.clusters(pairs, maxIters = maxIters))
-    spark.conf.unset("spark.graft.cc.localMaxEdges")
+    val key = "spark.graft.cc.localMaxEdges"
+    val dist = withConf(spark, key, "0")(labelsOf(Dedup.clusters(pairs, maxIters = maxIters)))
+    val local = withConf(spark, key, Long.MaxValue.toString)(
+      labelsOf(Dedup.clusters(pairs, maxIters = maxIters)))
     (dist, local)
   }
 

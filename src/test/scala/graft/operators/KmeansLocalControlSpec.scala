@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TestConf.withConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,11 +36,9 @@ class KmeansLocalControlSpec extends AnyFunSuite {
   private def both(k: Int, iters: Int): (Seq[(Long, Seq[Float])], Seq[(Long, Seq[Float])]) = {
     val e = graft.queries.Tables.table(spark, Sf, "embeddings")
       .select("vec_id", "embedding")
-    spark.conf.set("spark.graft.kmeans.localControl", "false")
-    val dist = centsOf(Ann.kmeansFit(spark, e, "vec_id", "embedding", k, iters, 64))
-    spark.conf.set("spark.graft.kmeans.localControl", "true")
-    val local = centsOf(Ann.kmeansFit(spark, e, "vec_id", "embedding", k, iters, 64))
-    spark.conf.unset("spark.graft.kmeans.localControl")
+    def fit = centsOf(Ann.kmeansFit(spark, e, "vec_id", "embedding", k, iters, 64))
+    val dist = withConf(spark, "spark.graft.kmeans.localControl", "false")(fit)
+    val local = withConf(spark, "spark.graft.kmeans.localControl", "true")(fit)
     (dist, local)
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TestConf.withConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,6 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class LogitLocalFitSpec extends AnyFunSuite {
 
   private val Sf = "/root/testdata/sf0.001"
+  private val Key = "spark.graft.logit.localFitMaxCells"
 
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -55,11 +57,8 @@ class LogitLocalFitSpec extends AnyFunSuite {
 
   private def both(f: org.apache.spark.sql.DataFrame, xs: Seq[String],
       iters: Int, lr: Double): (Array[Double], Array[Double]) = {
-    spark.conf.set("spark.graft.logit.localFitMaxCells", "0")
-    val dist = Logit.fit(f, xs, "y", iters, lr)
-    spark.conf.set("spark.graft.logit.localFitMaxCells", Long.MaxValue.toString)
-    val local = Logit.fit(f, xs, "y", iters, lr)
-    spark.conf.unset("spark.graft.logit.localFitMaxCells")
+    val dist = withConf(spark, Key, "0")(Logit.fit(f, xs, "y", iters, lr))
+    val local = withConf(spark, Key, Long.MaxValue.toString)(Logit.fit(f, xs, "y", iters, lr))
     (dist, local)
   }
 
@@ -82,11 +81,9 @@ class LogitLocalFitSpec extends AnyFunSuite {
     val f = Seq((1.0, 0.5), (0.0, Double.NaN), (1.0, 0.25))
       .toDF("y", "x1")
       .withColumn("x1", when(col("x1").isNaN, lit(null)).otherwise(col("x1")))
-    spark.conf.set("spark.graft.logit.localFitMaxCells", Long.MaxValue.toString)
-    val viaDispatch = Logit.fit(f, Seq("x1"), "y", 2, 0.5)
-    spark.conf.set("spark.graft.logit.localFitMaxCells", "0")
-    val dist = Logit.fit(f, Seq("x1"), "y", 2, 0.5)
-    spark.conf.unset("spark.graft.logit.localFitMaxCells")
+    val viaDispatch = withConf(spark, Key, Long.MaxValue.toString)(
+      Logit.fit(f, Seq("x1"), "y", 2, 0.5))
+    val dist = withConf(spark, Key, "0")(Logit.fit(f, Seq("x1"), "y", 2, 0.5))
     assert(viaDispatch.toSeq == dist.toSeq)
   }
 }

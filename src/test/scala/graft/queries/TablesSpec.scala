@@ -1,0 +1,42 @@
+package graft.queries
+
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `Tables.table(…, "events")` sets `spark.sql.legacy.parquet.nanosAsLong`
+  * on the whole session (Spark 4 refuses the file's TIMESTAMP(NANOS)
+  * column otherwise). This spec pins what that costs the other tables:
+  * nothing — each reads with the same schema and row count as in a
+  * session that never loaded `events`. */
+class TablesSpec extends AnyFunSuite {
+
+  private val Sf = "/root/testdata/sf0.001"
+
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .appName("TablesSpec")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  test("loading events leaves every other sf0.001 table reading as in a fresh session") {
+    // both sides get a session of their own: suites share the default one
+    val withEvents = spark.newSession()
+    val fresh = spark.newSession()
+    assert(Tables.table(withEvents, Sf, "events").count() > 0L)
+    val others = new java.io.File(Sf).list().toSeq.sorted
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).filter(_ != "events")
+    assert(others.nonEmpty)
+    others.foreach { name =>
+      val got = Tables.table(withEvents, Sf, name)
+      val want = Tables.table(fresh, Sf, name)
+      assert(got.schema == want.schema, s"$name: schema changed after loading events")
+      assert(got.count() == want.count(), s"$name: row count changed after loading events")
+    }
+  }
+}
