@@ -314,7 +314,20 @@ object Ann {
       vecCol: String,
       k: Int,
       iters: Int,
-      dims: Int): DataFrame = {
+      dims: Int): DataFrame =
+    kmeansFitWith(spark, df, idCol, vecCol, k, iters, dims, localControl = true)
+
+  /** [[kmeansFit]] with the control-plane choice as an argument, so a spec
+    * can run the distributed control plane (`localControl = false`). */
+  private[operators] def kmeansFitWith(
+      spark: SparkSession,
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      iters: Int,
+      dims: Int,
+      localControl: Boolean): DataFrame = {
     graft.functions.NativeFunctions.register(spark)
     require(k >= 1, s"k ($k) must be positive")
     require(iters >= 0, s"iters ($iters) must be non-negative")
@@ -352,11 +365,9 @@ object Ann {
     // codebook join. The arithmetic is replayed EXACTLY (same left-fold
     // double dot, same max/tie ordering, same DECIMAL sums, double divide,
     // float narrowing) — locked bit-identical by KmeansLocalControlSpec.
-    // `spark.graft.kmeans.localControl=false` keeps the legacy distributed
-    // control plane (spec A/B hook; the per-round corpus work is identical
-    // in both).
-    val localControl = spark.conf
-      .getOption("spark.graft.kmeans.localControl").forall(_.toBoolean)
+    // Integral ids take it; any other id type (and `localControl = false`)
+    // keeps the distributed control plane (the per-round corpus work is
+    // identical in both).
     val integralId = {
       import org.apache.spark.sql.types._
       corpus.schema(idCol).dataType match {

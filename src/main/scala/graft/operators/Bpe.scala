@@ -170,7 +170,23 @@ object Bpe {
       maxRounds: Int = 32,
       candCap: Int = 512,
       acceptCap: Int = 64,
-      baseCp: Int = DefaultBaseCp): DataFrame = {
+      baseCp: Int = DefaultBaseCp): DataFrame =
+    fitBlockedWith(spark, words, wordCol, countCol, nMerges, maxRounds, candCap,
+      acceptCap, baseCp, LocalFitMaxChars)
+
+  /** [[fitBlocked]] with the local-fit threshold of [[localUnits]] as an
+    * argument, so a spec can force either path. */
+  private[operators] def fitBlockedWith(
+      spark: SparkSession,
+      words: DataFrame,
+      wordCol: String,
+      countCol: String,
+      nMerges: Int,
+      maxRounds: Int,
+      candCap: Int,
+      acceptCap: Int,
+      baseCp: Int,
+      maxChars: Long): DataFrame = {
     val who = "Bpe.fitBlocked"
     requireKnobs(nMerges, maxRounds, candCap, acceptCap)
     requirePlaceholderRange(baseCp, nMerges)
@@ -181,7 +197,7 @@ object Bpe {
         s"[$baseCp, ${baseCp + nMerges}); got word ")
     def pair(m: Merge): String =
       new String(Character.toChars(m.a)) + new String(Character.toChars(m.b))
-    val merges = localUnits(spark, wc) match {
+    val merges = localUnits(wc, maxChars) match {
       case Some(units) =>
         BpeInt.fitLocal(units, nMerges, maxRounds, candCap, acceptCap, baseCp,
           byteLevel = false, who)
@@ -245,16 +261,18 @@ object Bpe {
       .localCheckpoint(true)
   }
 
+  /** Unit tables up to this many chars train on the driver. */
+  private[operators] val LocalFitMaxChars = 32L * 1024 * 1024
+
   /** Size-adaptive dispatch shared by every trainer: the collected
-    * `(w, wcnt)` units when the checkpointed table's char volume fits
-    * `spark.graft.bpe.localFitMaxChars` (default 32M; 0 forces the
-    * distributed path), else None. The unit table is model-class data
-    * (distinct words / n-grams with counts); at 100 TB a table that
-    * outgrows the threshold takes the distributed per-round path. */
+    * `(w, wcnt)` units when the checkpointed table's char volume is at
+    * most `maxChars` (the public trainers pass [[LocalFitMaxChars]]; 0
+    * takes the distributed path for any non-empty table), else None. The
+    * unit table is model-class data (distinct words / n-grams with
+    * counts); a table that outgrows the threshold takes the distributed
+    * per-round path. */
   private[operators] def localUnits(
-      spark: SparkSession, wc: DataFrame): Option[Array[(String, Long)]] = {
-    val maxChars = spark.conf.getOption("spark.graft.bpe.localFitMaxChars")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
+      wc: DataFrame, maxChars: Long): Option[Array[(String, Long)]] = {
     val chars = wc.agg(coalesce(sum(length(col("w"))), lit(0L))).collect()(0).getLong(0)
     if (chars <= maxChars) Some(wc.collect().map(r => (r.getString(0), r.getLong(1))))
     else None

@@ -57,7 +57,8 @@ object BpeByte {
       acceptCap: Int = 1024): DataFrame = {
     graft.functions.NativeFunctions.register(spark)
     BpeInt.fitCore(spark, words, wordCol, countCol, nMerges, maxRounds,
-      candCap, acceptCap, IdBase, "bpe_encode_bytes", "BpeByte.fitBlocked")
+      candCap, acceptCap, IdBase, "bpe_encode_bytes", "BpeByte.fitBlocked",
+      Bpe.LocalFitMaxChars)
   }
 
   /** The trained model as a `bpe_encode_bytes` spec string — same

@@ -74,12 +74,13 @@ object BpeInt {
       acceptCap: Int = 1024): DataFrame = {
     graft.functions.NativeFunctions.register(spark)
     fitCore(spark, words, wordCol, countCol, nMerges, maxRounds, candCap,
-      acceptCap, IdBase, "bpe_encode", "BpeInt.fitBlocked")
+      acceptCap, IdBase, "bpe_encode", "BpeInt.fitBlocked", Bpe.LocalFitMaxChars)
   }
 
   /** [[fitBlocked]] parameterized by the encode function and id base, so
     * the byte-level trainer ([[BpeByte]]) runs the same [[Bpe.elect]] over
-    * its own symbol space. */
+    * its own symbol space, and by the local-fit threshold of
+    * [[Bpe.localUnits]], so a spec can force either path. */
   private[operators] def fitCore(
       spark: SparkSession,
       words: DataFrame,
@@ -91,7 +92,8 @@ object BpeInt {
       acceptCap: Int,
       idBase: Int,
       encodeFn: String,
-      who: String): DataFrame = {
+      who: String,
+      maxChars: Long): DataFrame = {
     Bpe.requireKnobs(nMerges, maxRounds, candCap, acceptCap)
     require(nMerges + idBase < graft.functions.BpeIntKit.SymLimit,
       s"nMerges ($nMerges) exceeds the packed-symbol limit")
@@ -99,7 +101,7 @@ object BpeInt {
     // base alphabet by construction (above Unicode / above byte 255)
     val wc = Bpe.unitTable(words, wordCol, countCol, who, lit(false),
       "must be non-null; got word ")
-    val merges = Bpe.localUnits(spark, wc) match {
+    val merges = Bpe.localUnits(wc, maxChars) match {
       case Some(units) =>
         fitLocal(units, nMerges, maxRounds, candCap, acceptCap, idBase,
           encodeFn == "bpe_encode_bytes", who)

@@ -170,7 +170,20 @@ object Dedup {
       pairs: DataFrame,
       idA: String = "id_a",
       idB: String = "id_b",
-      maxIters: Int = 10): DataFrame = {
+      maxIters: Int = 10): DataFrame =
+    clustersWith(pairs, idA, idB, maxIters, LocalMaxEdges)
+
+  /** Edge lists up to this size run [[clusters]] on the driver. */
+  private val LocalMaxEdges = 4L * 1024 * 1024
+
+  /** [[clusters]] with the local-path threshold as an argument, so a spec
+    * can force either path (0 = distributed, huge = local). */
+  private[operators] def clustersWith(
+      pairs: DataFrame,
+      idA: String,
+      idB: String,
+      maxIters: Int,
+      localMaxEdges: Long): DataFrame = {
     // undirected edge list, both directions; every member stays present
     // because each round unions the current labels into the propagation
     // (a node with no smaller-labeled neighbor keeps its own row).
@@ -190,11 +203,11 @@ object Dedup {
     // rounds) collapses into one job plus a driver-side replica of the
     // IDENTICAL iteration (same propagate/double updates, same
     // sum-unchanged stopping rule, same maxIters bound — locked by
-    // CcLocalSpec). Threshold conf'd (`spark.graft.cc.localMaxEdges`,
-    // 0 forces distributed); at 100 TB a graph that outgrows it takes the
-    // existing distributed loop unchanged. Integral ids only: the local
-    // min() must reproduce Spark's ordering bit-for-bit, which is trivially
-    // true for longs and not worth proving for strings/decimals.
+    // CcLocalSpec). Graphs above `localMaxEdges` edges (4 Mi from
+    // [[clusters]]) take the distributed loop unchanged. Integral ids
+    // only: the local min() must reproduce Spark's ordering bit-for-bit,
+    // which is trivially true for longs and not worth proving for
+    // strings/decimals.
     val longIds = {
       import org.apache.spark.sql.types._
       edges.schema("src").dataType match {
@@ -202,9 +215,6 @@ object Dedup {
         case _ => false
       }
     }
-    val localMaxEdges = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.localMaxEdges").map(_.toLong)
-      .getOrElse(4L * 1024 * 1024)
     if (longIds && localMaxEdges > 0) {
       // limit(max+1): on an over-threshold graph this short-circuits after
       // max+1 rows instead of paying a full count of a huge edge list

@@ -47,7 +47,21 @@ object Logit {
       xCols: Seq[String],
       yCol: String,
       iters: Int,
-      lr: Double): Array[Double] = {
+      lr: Double): Array[Double] =
+    fitWith(feats, xCols, yCol, iters, lr, LocalFitMaxCells)
+
+  /** Feature frames up to this many cells run [[fit]] on the driver. */
+  private val LocalFitMaxCells = 8L * 1024 * 1024
+
+  /** [[fit]] with the local-path threshold as an argument, so a spec can
+    * force either path (0 = distributed, huge = local). */
+  private[operators] def fitWith(
+      feats: DataFrame,
+      xCols: Seq[String],
+      yCol: String,
+      iters: Int,
+      lr: Double,
+      maxCells: Long): Array[Double] = {
     require(xCols.nonEmpty, "need at least one feature column")
     require(iters >= 0, s"iters ($iters) must be non-negative")
     // Size-adaptive dispatch (optimization round r12, guide §1.2 step 1 —
@@ -59,12 +73,8 @@ object Logit {
     // round(,9)-then-DECIMAL(28,12) exact gradient sums (order-independent,
     // so driver summation order cannot diverge), the same w update
     // expression. Weights are bit-identical (locked by LogitLocalFitSpec).
-    // Threshold conf'd (`spark.graft.logit.localFitMaxCells`, 0 forces
-    // distributed); at 100 TB a corpus-sized feature frame outgrows it and
-    // takes the unchanged per-round distributed path.
-    val maxCells = feats.sparkSession.conf
-      .getOption("spark.graft.logit.localFitMaxCells").map(_.toLong)
-      .getOrElse(8L * 1024 * 1024)
+    // A frame above `maxCells` cells (8 Mi from [[fit]]) takes the
+    // unchanged per-round distributed path.
     if (maxCells > 0 && iters > 0) {
       val nx = xCols.length
       val maxRows = math.min(maxCells / (nx + 1), (Int.MaxValue - 2).toLong)

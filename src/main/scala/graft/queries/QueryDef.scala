@@ -80,9 +80,8 @@ object Tables {
     * map side onto one core. When the file is that small, a round-robin
     * exchange of its rows costs microseconds and un-serializes everything
     * above it; at production scale the condition is false (the scan
-    * already has many splits) and the spread is a no-op. Threshold conf'd
-    * (`spark.graft.scan.spreadMaxBytes`, default maxPartitionBytes;
-    * 0 disables).
+    * already has many splits) and the spread is a no-op. The threshold is
+    * Spark's own `spark.sql.files.maxPartitionBytes`.
     *
     * Applied PER QUERY, only above heavy per-row compute (the JPEG codec
     * map stages, IVF assignment): a library-wide spread in [[table]] was
@@ -92,16 +91,7 @@ object Tables {
     * each, but q189 +9.4 s, q196 +5.2 s, q99 +4.8 s; net +28.6 s). */
   def spreadSmall(spark: SparkSession, dir: String, name: String,
       df: DataFrame): DataFrame = {
-    // r12 (ADVICE): byte confs are suffixed strings ("128MB") — parse with
-    // the same byte-string rules Spark uses, not String.toLong
-    def asBytes(v: String): Long =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
-      catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-    val maxB = spark.conf.getOption("spark.graft.scan.spreadMaxBytes")
-      .map(asBytes)
-      .getOrElse(asBytes(spark.conf.get("spark.sql.files.maxPartitionBytes",
-        (128L * 1024 * 1024).toString)))
-    if (maxB <= 0) return df
+    val maxB = spark.sessionState.conf.filesMaxPartitionBytes
     // r12 (ADVICE): size via the Hadoop FileSystem, not java.io.File — a
     // directory-shaped parquet dataset sums its data files (File.length on
     // a directory returns the ~4 KB inode size, misclassifying any large

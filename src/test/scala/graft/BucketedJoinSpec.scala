@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,31 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
  * as a plan-shape property so the capability (and the config that enables
  * it) stays demonstrably working.
  */
-class BucketedJoinSpec extends AnyFunSuite {
+class BucketedJoinSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val wh = java.nio.file.Files.createTempDirectory("bucketwh").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("BucketedJoinSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   test("bucketed tables join with zero Exchange operators") {
-    // the whole test run shares one session (getOrCreate), so builder confs
-    // may be ignored — set the broadcast kill-switch at RUNTIME (the test
-    // must prove bucketing, not broadcast, removed the shuffle) and restore
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    // broadcast off: the test must prove bucketing, not broadcast, removed
+    // the shuffle
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val docs = spark.read.parquet(s"$Sf/documents.parquet")
       val embs = spark.read.parquet(s"$Sf/embeddings.parquet")
         .selectExpr("vec_id as doc_id", "embedding")
@@ -62,7 +44,6 @@ class BucketedJoinSpec extends AnyFunSuite {
         .explainString(ExplainMode.fromString("formatted"))
       assert(rawPlan.contains("Exchange"), rawPlan)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS bucketspec_docs_b")
       spark.sql("DROP TABLE IF EXISTS bucketspec_embs_b")
     }

@@ -4,7 +4,6 @@ import java.io.FileOutputStream
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,19 +23,7 @@ import graft.sources.warc.WarcCodec
  * contracts between the source schema, the URL election, the curation
  * verdicts and the sink partitioning.
  */
-class CrawlPipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("CrawlPipelineSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CrawlPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private def page(words: Int, seed: Int): String = {
     val vocab = Array("data", "spark", "query", "join", "filter", "table",

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -13,21 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * passes the oracle but drifts across partition counts would give a 1000-
  * executor cluster different answers than the laptop that validated it.
  */
-class DeterminismSpec extends AnyFunSuite {
+class DeterminismSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("DeterminismSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   test("every query returns the identical multiset at 5 vs 32 shuffle partitions") {
     val failures = scala.collection.mutable.ListBuffer[String]()
@@ -35,19 +22,19 @@ class DeterminismSpec extends AnyFunSuite {
     // at both partition counts must not pass the audit by matching its own
     // error sentinel (the '100 identical' claim must mean 100 that RAN)
     val errors = scala.collection.mutable.ListBuffer[String]()
-    def runAll(parts: Int): Map[String, Seq[String]] = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val rows =
-          try fn(spark, Sf).collect().map(_.toString).sorted.toSeq
-          catch {
-            case e: Throwable =>
-              errors += s"$name@$parts: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
-              Seq(s"<error: ${e.getClass.getSimpleName}>")
-          }
-        name -> rows
-      }.toMap
-    }
+    def runAll(parts: Int): Map[String, Seq[String]] =
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+          val rows =
+            try fn(spark, Sf).collect().map(_.toString).sorted.toSeq
+            catch {
+              case e: Throwable =>
+                errors += s"$name@$parts: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+                Seq(s"<error: ${e.getClass.getSimpleName}>")
+            }
+          name -> rows
+        }.toMap
+      }
     val at5 = runAll(5)
     val at32 = runAll(32)
     at5.keys.toSeq.sorted.foreach { name =>
@@ -56,7 +43,6 @@ class DeterminismSpec extends AnyFunSuite {
         failures += s"$name: ${at5(name).size} vs ${at32(name).size} rows; sample diff: ${diff.mkString(" | ")}"
       }
     }
-    spark.conf.set("spark.sql.shuffle.partitions", 4)
     assert(errors.isEmpty, s"queries that crashed during the audit:\n${errors.mkString("\n")}")
     assert(failures.isEmpty,
       s"partition-count-dependent queries:\n${failures.mkString("\n")}")

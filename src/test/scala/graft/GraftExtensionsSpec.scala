@@ -13,17 +13,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
   // create() always builds a new session with a function registry of its
   // own, so what resolves here came from the extension. getOrCreate() would
   // hand back any session an earlier suite made, where the query library
-  // has registered the functions imperatively.
+  // has registered the functions imperatively. The shared session comes
+  // first, so this suite runs on the one SparkContext every spec uses.
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("GraftExtensionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .create()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    SparkSuite.session
+    SparkSession.builder().withExtensions(new GraftExtensions).create()
   }
 
   test("the extension's session has its own function registry") {

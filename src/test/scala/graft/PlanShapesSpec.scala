@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{ExplainMode, FilterExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,21 +14,9 @@ import graft.sources.bi5.Bi5TreeFixture
  * pushed filter, or degrades top-k into a global sort. The plan text is the
  * same evidence `.explain("formatted")` shows a user.
  */
-class PlanShapesSpec extends AnyFunSuite {
+class PlanShapesSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("PlanShapesSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, Sf)
@@ -476,13 +464,11 @@ class PlanShapesSpec extends AnyFunSuite {
     // shuffle join). Lock the degradation: with the threshold disabled
     // the plan must fall back to a hash-partitioned join, which a forced
     // broadcast() would not.
-    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("q92_dup_spans")
       assert(!p.contains("BroadcastHashJoin"), p)
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
+    }
   }
 
   test("q94 BM25 broadcasts the query-term side, corpus joins stay hash-local") {
@@ -509,14 +495,11 @@ class PlanShapesSpec extends AnyFunSuite {
     // tables are far below the 10 GB production default) so a future
     // query-library edit that breaks the equi-join shape Catalyst needs
     // (e.g. wrapping the key in a non-pushable expression) fails loudly.
-    val confs = Seq(
+    withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10GB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = spark.read.parquet(s"$Sf/lineitem.parquet")
       val ord = spark.read.parquet(s"$Sf/orders.parquet")
         .filter("o_orderstatus = 'F' and o_totalprice > 200000")
@@ -525,7 +508,7 @@ class PlanShapesSpec extends AnyFunSuite {
       val p = j.queryExecution.optimizedPlan.toString
       assert(p.contains("might_contain") && p.contains("bloom_filter_agg"),
         s"runtime bloom filter not injected:\n$p")
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("spatial pairs joins on exact grid cells, never a cartesian (q202)") {

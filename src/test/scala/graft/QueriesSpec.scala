@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,21 +10,9 @@ import graft.operators.Multimodal
  * and returns a well-formed result; oracle VALUE parity is checked by the
  * driver's DuckDB gate (replicated locally by tools/check_oracle.py).
  */
-class QueriesSpec extends AnyFunSuite {
+class QueriesSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("QueriesSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)

@@ -1,25 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** blocklist_hits: Aho-Corasick distinct-phrase census — overlapping and
   * nested patterns, fail-chain outputs, duplicates, the foldable-argument
   * contract, a property check vs naive contains, interpreted == codegen. */
-class BlocklistExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("BlocklistExpressionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    NativeFunctions.register(s)
-    s
-  }
+class BlocklistExpressionsSpec extends AnyFunSuite with SparkSuite {
 
   private def hits(text: String, phrases: Seq[String]): Int = {
     val arr = phrases.map(p => s"'${p.replace("'", "''")}'").mkString("array(", ", ", ")")

@@ -1,25 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Hostile-input hardening for the round-7 expressions: random bytes and
   * adversarial strings must never throw, hang, or blow memory — the
   * skip-corrupt philosophy applied to the crawl text stack. Seeded fuzz
   * (deterministic) + hand-built pathological cases. */
-class HostileInputSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("HostileInputSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class HostileInputSpec extends AnyFunSuite with SparkSuite {
 
   test("decode_payload never throws on 2000 seeded-random byte payloads") {
     val rnd = new scala.util.Random(7_2026L)

@@ -1,24 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** strip_html: grammar rule-by-rule, hostile fragments, interpreted ==
   * codegen. */
-class HtmlExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("HtmlExpressionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    NativeFunctions.register(s)
-    s
-  }
+class HtmlExpressionsSpec extends AnyFunSuite with SparkSuite {
 
   private def strip(h: String): String =
     spark.sql(s"select strip_html('${h.replace("'", "''")}')").head().getString(0)

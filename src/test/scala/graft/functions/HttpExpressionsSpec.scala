@@ -1,25 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** http_status / http_body / decode_payload: grammar rule-by-rule,
   * real non-UTF8 charsets (ISO-8859-1, GBK, Shift-JIS, UTF-16), header
   * folding and missing-blank-line edges, interpreted == codegen. */
-class HttpExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("HttpExpressionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    NativeFunctions.register(s)
-    s
-  }
+class HttpExpressionsSpec extends AnyFunSuite with SparkSuite {
 
   private def statusOf(msg: String): Option[Int] = {
     val r = spark.sql(s"select http_status('${msg.replace("'", "''")}')").head()

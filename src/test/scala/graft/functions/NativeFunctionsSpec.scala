@@ -1,25 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** NativeFunctions.register adds only what a session lacks: calling it
   * again, or over a name that is already taken, replaces no builder. */
-class NativeFunctionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("NativeFunctionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class NativeFunctionsSpec extends AnyFunSuite with SparkSuite {
 
   test("every name is declared once") {
     val names = NativeFunctions.all.map(_._1)

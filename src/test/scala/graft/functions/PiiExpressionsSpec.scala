@@ -1,25 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** scrub_pii: rule-by-rule redaction (email, IPv4, Luhn-gated cards,
   * E.164-envelope phones), rule-order interactions, non-matches that
   * MUST survive, idempotency, interpreted == codegen. */
-class PiiExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("PiiExpressionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    NativeFunctions.register(s)
-    s
-  }
+class PiiExpressionsSpec extends AnyFunSuite with SparkSuite {
 
   private def scrub(t: String): String =
     spark.sql(s"select scrub_pii('${t.replace("'", "''")}')").head().getString(0)

@@ -1,28 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** split_sentences: the documented two-pass grammar rule-by-rule, an
   * INDEPENDENT regex twin (the exact two regexp_replace passes the DuckDB
   * oracle runs, via java.util.regex — for these lookaround-free patterns
   * backtracking and RE2 agree) over randomized adversarial inputs, loud
   * null/hostile contracts, and interpreted == codegen. */
-class SentenceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("SentenceSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    NativeFunctions.register(s)
-    s
-  }
+class SentenceSpec extends AnyFunSuite with SparkSuite {
 
   private def split(text: String): Seq[String] = {
     val r = UnicodeKit.splitSentences(UTF8String.fromString(text))

@@ -1,24 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Semantics lock for the native word_ngrams expression: it must match the
   * HOF spelling it replaced byte-for-byte (the DuckDB oracles depend on it).
   */
-class TextExpressionsSpec extends AnyFunSuite {
+class TextExpressionsSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("TextExpressionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    NativeFunctions.register(s)
-    s
-  }
+  /** `body(mode)` under each codegen factory mode, the mode restored after
+    * each run even when an assertion fails. */
+  private def inBothCodegenModes(body: String => Unit): Unit =
+    for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN"))
+      withConf("spark.sql.codegen.factoryMode" -> codegen)(body(codegen))
 
   private val hof3 =
     "transform(sequence(1, size(toks) - 2), i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ', element_at(toks, i + 2)))"
@@ -218,8 +212,7 @@ class TextExpressionsSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StructField("toks",
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.StringType)))))
-    for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", codegen)
+    inBothCodegenModes { codegen =>
       val got = df.selectExpr("max_token_run(toks) as r").collect()
       got.zip(cases).foreach { case (r, (input, want)) =>
         val actual =
@@ -228,7 +221,6 @@ class TextExpressionsSpec extends AnyFunSuite {
         assert(actual === want, s"mode=$codegen input=$input")
       }
     }
-    spark.conf.unset("spark.sql.codegen.factoryMode")
   }
 
   test("token_entropy equals the explode+group relational spelling on real text") {
@@ -276,8 +268,7 @@ class TextExpressionsSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StructField("toks",
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.StringType)))))
-    for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", codegen)
+    inBothCodegenModes { codegen =>
       val got = df.selectExpr("token_entropy(toks) as h").collect()
       got.zip(cases).foreach { case (r, (input, want)) =>
         val actual = if (r.isNullAt(0)) null else r.getDouble(0)
@@ -289,7 +280,6 @@ class TextExpressionsSpec extends AnyFunSuite {
         }
       }
     }
-    spark.conf.unset("spark.sql.codegen.factoryMode")
   }
 
   test("cdc_cuts rolling pass equals the per-position window recompute on real text") {
@@ -321,8 +311,7 @@ class TextExpressionsSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("text",
           org.apache.spark.sql.types.StringType))))
-    for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", codegen)
+    inBothCodegenModes { codegen =>
       val got = df.selectExpr("cdc_cuts(text, 8, 64) as c").collect()
       // shorter than the window -> no cut can exist
       assert(got(0).getSeq[Int](0) === Seq.empty, s"mode=$codegen empty")
@@ -334,7 +323,6 @@ class TextExpressionsSpec extends AnyFunSuite {
       val xs = got(3).getSeq[Int](0)
       assert(xs.isEmpty || xs === (8 to 200).toSeq, s"mode=$codegen constant")
     }
-    spark.conf.unset("spark.sql.codegen.factoryMode")
 
     // LOCALITY (the content-defined property): editing a prefix shifts or
     // changes cuts only until the window re-synchronizes — cuts strictly
@@ -369,8 +357,7 @@ class TextExpressionsSpec extends AnyFunSuite {
   }
 
   test("window_mins edge cases: shorter-than-window, nulls, and interpreted == codegen") {
-    for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", codegen)
+    inBothCodegenModes { codegen =>
       val got = spark.sql(
         """SELECT
              window_mins(array(cast(5 as bigint), 3, 9, 1, 7), 3) as basic,
@@ -387,7 +374,6 @@ class TextExpressionsSpec extends AnyFunSuite {
       assert(got.getSeq[Any](4) === Seq(null), s"mode=$codegen allnull")
       assert(got.isNullAt(5), s"mode=$codegen nullarr")
     }
-    spark.conf.unset("spark.sql.codegen.factoryMode")
   }
 
   // ---------------------------------------------------------- r11 additions
@@ -422,8 +408,7 @@ class TextExpressionsSpec extends AnyFunSuite {
     val hof = (0 until 32).map(j =>
       s"coalesce(cast(size(filter(hs, h -> h = $j)) as double) " +
         s"/ cast(nullif(size(hs), 0) as double), 0.0d)").mkString("array(", ", ", ")")
-    for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", codegen)
+    inBothCodegenModes { codegen =>
       val got = df
         .selectExpr("text",
           "coalesce(char3_bucket_rates(text, 32), array_repeat(0.0d, 32)) as a",
@@ -436,6 +421,5 @@ class TextExpressionsSpec extends AnyFunSuite {
         assert(r.getSeq[Double](0) == r.getSeq[Double](1), s"mode=$codegen row=$r")
       }
     }
-    spark.conf.unset("spark.sql.codegen.factoryMode")
   }
 }

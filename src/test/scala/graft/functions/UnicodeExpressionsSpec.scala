@@ -1,26 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** unicode_normalize / tokenize_text: grammar rule-by-rule (NFC/NFD/NFKC,
   * CJK bigrams, mixed runs, supplementary plane), loud form contract,
   * interpreted == codegen, never-throw on hostile input. */
-class UnicodeExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("UnicodeExpressionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    NativeFunctions.register(s)
-    s
-  }
+class UnicodeExpressionsSpec extends AnyFunSuite with SparkSuite {
 
   private def norm(s: String, form: String): String = {
     import spark.implicits._

@@ -1,24 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** canonical_url: rule-by-rule edge cases, interpreted == codegen, and the
   * UTF-8-byte-order param sort that makes DuckDB replays exact. */
-class UrlExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("UrlExpressionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    NativeFunctions.register(s)
-    s
-  }
+class UrlExpressionsSpec extends AnyFunSuite with SparkSuite {
 
   private def canon(u: String): String =
     spark.sql(s"select canonical_url('${u.replace("'", "''")}')").head().getString(0)

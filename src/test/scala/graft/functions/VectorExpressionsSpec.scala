@@ -1,21 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
-class VectorExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("VectorExpressionsSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    NativeFunctions.register(s)
-    s
-  }
+class VectorExpressionsSpec extends AnyFunSuite with SparkSuite {
 
   test("vec_dot is bit-identical to the interpreted HOF left fold") {
     val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

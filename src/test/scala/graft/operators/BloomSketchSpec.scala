@@ -1,23 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Bloom sketch: JVM roundtrip guarantees, merge = OR determinism, and the
   * codegen'd expression locked against the interpreted reference. */
-class BloomSketchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("BloomSketchSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class BloomSketchSpec extends AnyFunSuite with SparkSuite {
 
   private def jvmBloom(keys: Seq[Long], bits: Int = 4096, k: Int = 7): Array[Byte] = {
     val agg = new BloomAgg(bits, k)

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.BpeByteKit
+import graft.SparkSuite
 
 /** BpeByte + bpe_encode_bytes/bpe_decode_bytes/bpe_segment_bytes: the
   * byte-level grammar rule-by-rule (incl. merges CROSSING UTF-8
@@ -14,20 +14,7 @@ import graft.functions.BpeByteKit
   * against an independent byte-level mutating-table simulation, and the
   * merges.txt/vocab.json artifact round-trip (export -> import ->
   * identical spec and encoding). */
-class BpeByteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("BpeByteSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.NativeFunctions.register(s)
-    s
-  }
+class BpeByteSpec extends AnyFunSuite with SparkSuite {
 
   private val IdBase = BpeByte.IdBase // 256
 

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** BpeInt + bpe_encode: grammar rule-by-rule on toy vocabularies, loud
   * spec contracts, interpreted == codegen, and the trainer locked against
@@ -10,20 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * corpus (the trainer re-encodes from raw words through the spec; the
   * simulation mutates int arrays round by round — agreement proves the
   * re-encode == mutate equivalence the design leans on). */
-class BpeIntSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("BpeIntSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.NativeFunctions.register(s)
-    s
-  }
+class BpeIntSpec extends AnyFunSuite with SparkSuite {
 
   private val IdBase = BpeInt.IdBase
 

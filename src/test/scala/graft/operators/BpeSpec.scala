@@ -1,24 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Bpe trainer/applier: known-corpus merge sequence, train/apply
   * agreement, early stop, and the loud preconditions. */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("BpeSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class BpeSpec extends AnyFunSuite with SparkSuite {
 
   import scala.jdk.CollectionConverters._
   private def wordsDf(rows: (String, Long)*) = {

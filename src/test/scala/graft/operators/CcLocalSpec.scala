@@ -1,33 +1,20 @@
 package graft.operators
 
-import graft.TestConf.withConf
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /**
  * Locks the r12 size-adaptive connected-components dispatch: the
  * driver-local label propagation in [[Dedup.localClusters]] must produce
  * EXACTLY the (id, cluster_id) rows of the distributed per-round loop —
  * same labels, including the partially-converged labels of a chain longer
- * than the loop can finish inside `maxIters` rounds. The dispatch is
- * forced through `spark.graft.cc.localMaxEdges` (0 = always distributed,
- * huge = always local).
+ * than the loop can finish inside `maxIters` rounds. Each path is forced
+ * through [[Dedup.clustersWith]]'s edge threshold (0 = always
+ * distributed, huge = always local).
  */
-class CcLocalSpec extends AnyFunSuite {
+class CcLocalSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("CcLocalSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def labelsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     df.selectExpr("cast(id as long)", "cast(cluster_id as long)")
@@ -35,11 +22,9 @@ class CcLocalSpec extends AnyFunSuite {
 
   private def both(pairs: org.apache.spark.sql.DataFrame,
       maxIters: Int = 10): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
-    val key = "spark.graft.cc.localMaxEdges"
-    val dist = withConf(spark, key, "0")(labelsOf(Dedup.clusters(pairs, maxIters = maxIters)))
-    val local = withConf(spark, key, Long.MaxValue.toString)(
-      labelsOf(Dedup.clusters(pairs, maxIters = maxIters)))
-    (dist, local)
+    def at(maxEdges: Long) =
+      labelsOf(Dedup.clustersWith(pairs, "id_a", "id_b", maxIters, maxEdges))
+    (at(0L), at(Long.MaxValue))
   }
 
   test("local == distributed on the real LSH candidate pair graph") {

@@ -1,22 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Chunker.slidingTokenWindows boundary semantics. */
-class ChunkerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("ChunkerSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class ChunkerSpec extends AnyFunSuite with SparkSuite {
 
   private def chunksOf(text: String, window: Int, stride: Int): Seq[(Long, Int, Long, String)] = {
     import spark.implicits._

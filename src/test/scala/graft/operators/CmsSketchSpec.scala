@@ -1,24 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Count-min sketch: JVM contract (never undercounts, bounded overshoot),
   * merge = addition determinism, and the codegen'd estimate expression
   * locked against the interpreted reference. */
-class CmsSketchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("CmsSketchSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CmsSketchSpec extends AnyFunSuite with SparkSuite {
 
   /** Zipf-ish multiset: key i appears ~1000/i times — heavy heads, long
     * tail, the shape CMS exists for. */

@@ -1,24 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** The Curation pipeline on a planted corpus: one document per drop reason,
   * plus precedence when a document fails several stages at once. */
-class CurationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("CurationSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CurationSpec extends AnyFunSuite with SparkSuite {
 
   // 30 distinct medium-length words, avg length ~5 chars: passes the
   // quality rule (>= 20 tokens, avg token length 2..8) with no repetition

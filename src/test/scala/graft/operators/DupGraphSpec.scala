@@ -1,22 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** DupGraph.kcore: hand-checked cores on tiny graphs, pendant peeling,
   * fixed-round vs converged behavior, input hygiene, loud contracts. */
-class DupGraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("DupGraphSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class DupGraphSpec extends AnyFunSuite with SparkSuite {
 
   private def core(pairs: Seq[(Long, Long)], minDeg: Int = 2, rounds: Int = 3) = {
     import spark.implicits._

@@ -1,25 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Ewma (per-key sequential smoothing fold): reference equality, edge
   * cases, partitioning invariance, contract failures. */
-class EwmaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("EwmaSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is ns
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class EwmaSpec extends AnyFunSuite with SparkSuite {
 
   // Load through the library loader: it owns the nanos-ts rebuild, which a
   // builder-level conf can't guarantee on the shared test-JVM session.

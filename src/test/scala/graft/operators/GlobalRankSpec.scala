@@ -1,27 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, Partial}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** GlobalRank (two-phase bucketed ranking) against the naive
   * Window.partitionBy spelling it replaces at scale. */
-class GlobalRankSpec extends AnyFunSuite {
+class GlobalRankSpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPlanHelper {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("GlobalRankSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   test("withGlobalRank equals the naive per-segment window rank on real data") {
     val c = spark.read.parquet(s"$Sf/customer.parquet")
@@ -90,6 +81,21 @@ class GlobalRankSpec extends AnyFunSuite {
         .withColumn("t", ntile(k).over(Window.orderBy("rn")).cast("long"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === naive, s"ntile arithmetic diverged at n=$n k=$k")
+    }
+  }
+
+  test("lazy bounds (q99, q118): the executed plan computes each sketch once") {
+    // both the bucketing branch and the offsets branch join the unpinned
+    // bounds frame; only exchange reuse makes them one sketch computation
+    for ((name, passes) <- Seq("q99_hybrid_rrf" -> 2, "q118_winsorized" -> 1)) {
+      val df = graft.SparkEntry.queries(name)(spark, Sf)
+      df.collect()
+      val sketches = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+            e.mode == Partial && e.aggregateFunction.isInstanceOf[ApproximatePercentile]) => a
+      }
+      assert(sketches.size === passes, s"$name computes ${sketches.size} sketches:\n" +
+        df.queryExecution.executedPlan)
     }
   }
 }

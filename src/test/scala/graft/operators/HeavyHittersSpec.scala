@@ -1,22 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Misra-Gries bounds against exact counts, on adversarial and real data. */
-class HeavyHittersSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("HeavyHittersSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class HeavyHittersSpec extends AnyFunSuite with SparkSuite {
 
   private def contract(items: Seq[String], k: Int): Unit = {
     import spark.implicits._

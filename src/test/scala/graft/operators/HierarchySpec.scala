@@ -1,23 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Hierarchy.closure: hand-checked forest resolution, chain depth at the
   * doubling boundary, loud contracts (missing parent, depth overflow,
   * cycle, nulls), partitioning independence. */
-class HierarchySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("HierarchySpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class HierarchySpec extends AnyFunSuite with SparkSuite {
 
   /** All messages down the cause chain: Spark wraps task-side raises. */
   private def messages(t: Throwable): Seq[String] =
@@ -82,14 +71,9 @@ class HierarchySpec extends AnyFunSuite {
   test("identical result at 1 vs 7 shuffle partitions") {
     val rows = (0L until 200L).map(i =>
       (i, if (i < 2) null else java.lang.Long.valueOf(i / 2 - 1), i % 13 + 1))
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      val a = closureMap(rows)
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val b = closureMap(rows)
-      assert(a === b)
-      assert(a(199L)._2 === 6L) // 199->98->48->23->10->4->1 depth spot-check
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    val a = withConf("spark.sql.shuffle.partitions" -> "1")(closureMap(rows))
+    val b = withConf("spark.sql.shuffle.partitions" -> "7")(closureMap(rows))
+    assert(a === b)
+    assert(a(199L)._2 === 6L) // 199->98->48->23->10->4->1 depth spot-check
   }
 }

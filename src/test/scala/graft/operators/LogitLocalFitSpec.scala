@@ -1,34 +1,20 @@
 package graft.operators
 
-import graft.TestConf.withConf
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /**
  * Locks the r12 size-adaptive Logit dispatch: the driver-local gradient
  * loop must produce BIT-IDENTICAL weights to the distributed per-round
  * loop on real corpus-shaped feature frames (same Elliott link, same
- * round(,9)-then-DECIMAL exact sums, same update arithmetic). The
- * dispatch is forced through `spark.graft.logit.localFitMaxCells`
- * (0 = always distributed, huge = always local).
+ * round(,9)-then-DECIMAL exact sums, same update arithmetic). Each path
+ * is forced through [[Logit.fitWith]]'s cell threshold (0 = always
+ * distributed, huge = always local).
  */
-class LogitLocalFitSpec extends AnyFunSuite {
+class LogitLocalFitSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-  private val Key = "spark.graft.logit.localFitMaxCells"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("LogitLocalFitSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** q234's real feature frame (min-max-scaled signals + mean-split label). */
   private def feats234 = {
@@ -57,9 +43,8 @@ class LogitLocalFitSpec extends AnyFunSuite {
 
   private def both(f: org.apache.spark.sql.DataFrame, xs: Seq[String],
       iters: Int, lr: Double): (Array[Double], Array[Double]) = {
-    val dist = withConf(spark, Key, "0")(Logit.fit(f, xs, "y", iters, lr))
-    val local = withConf(spark, Key, Long.MaxValue.toString)(Logit.fit(f, xs, "y", iters, lr))
-    (dist, local)
+    (Logit.fitWith(f, xs, "y", iters, lr, 0L),
+      Logit.fitWith(f, xs, "y", iters, lr, Long.MaxValue))
   }
 
   test("local gradient loop == distributed on the real q234 feature frame (bit-identical)") {
@@ -81,9 +66,7 @@ class LogitLocalFitSpec extends AnyFunSuite {
     val f = Seq((1.0, 0.5), (0.0, Double.NaN), (1.0, 0.25))
       .toDF("y", "x1")
       .withColumn("x1", when(col("x1").isNaN, lit(null)).otherwise(col("x1")))
-    val viaDispatch = withConf(spark, Key, Long.MaxValue.toString)(
-      Logit.fit(f, Seq("x1"), "y", 2, 0.5))
-    val dist = withConf(spark, Key, "0")(Logit.fit(f, Seq("x1"), "y", 2, 0.5))
+    val (dist, viaDispatch) = both(f, Seq("x1"), 2, 0.5)
     assert(viaDispatch.toSeq == dist.toSeq)
   }
 }

@@ -1,25 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Logit.fit — the Elliott-link batch-GD trainer. The load-bearing claims:
   * weights are bit-identical under any partitioning (exact-DECIMAL gradient
   * sums), and the descent actually learns a separable boundary. */
-class LogitSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("LogitSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class LogitSpec extends AnyFunSuite with SparkSuite {
 
   private def sepData = {
     import spark.implicits._

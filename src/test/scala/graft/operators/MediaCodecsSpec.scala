@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /**
  * MediaCodecs + RealMediaDecoder on REAL format bytes: golden fixtures
@@ -12,19 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * field), plus round-trips, chunk-walking, padding, and the loud-failure
  * contract on corrupt payloads.
  */
-class MediaCodecsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("MediaCodecsSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class MediaCodecsSpec extends AnyFunSuite with SparkSuite {
 
   private def hex(s: String): Array[Byte] =
     s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray

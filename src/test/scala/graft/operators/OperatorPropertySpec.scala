@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /**
  * Property tests for the two-phase/fold operators against their naive
@@ -13,19 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * can't produce: duplicate-heavy order keys, zero-token runs, skewed
  * histories, tiny inputs vs large bucket counts.
  */
-class OperatorPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("OperatorPropertySpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class OperatorPropertySpec extends AnyFunSuite with SparkSuite {
 
   test("Packer: two-phase offsets equal the naive global window on random data") {
     import spark.implicits._

@@ -1,23 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** PageRank: hand-checked ranks on a tiny graph, rank-mass conservation,
   * partitioning independence, defensive edge handling, loud contracts. */
-class PageRankSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("PageRankSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class PageRankSpec extends AnyFunSuite with SparkSuite {
 
   test("hand-checked ranks on a path graph favor the middle node") {
     import spark.implicits._

@@ -1,23 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Pinned: eager materialization in both modes, and the withPinned scope
   * releasing every recoverable cache entry on exit — success or failure. */
-class PinnedSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("PinnedSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class PinnedSpec extends AnyFunSuite with SparkSuite {
 
   private def cacheEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
 

@@ -1,26 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Quantize (SQ8 scalar quantization): code correctness vs a driver-side
   * reference, reconstruction-error bound, degenerate dims, plan shape. */
-class QuantizeSpec extends AnyFunSuite {
+class QuantizeSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("QuantizeSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def emb = spark.read.parquet(s"$Sf/embeddings.parquet")
     .select("vec_id", "embedding")

@@ -1,26 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** RangeJoin.pointInInterval vs the naive nested-loop spelling, plus the
   * blocking plan shape and floor-div edge cases. */
-class RangeJoinSpec extends AnyFunSuite {
+class RangeJoinSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("RangeJoinSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   test("matches the naive interval-predicate join on real events data") {
     val ev = graft.queries.Tables.table(spark, Sf, "events")

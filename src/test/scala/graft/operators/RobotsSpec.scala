@@ -1,26 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.RobotsKit
+import graft.SparkSuite
 
 /** Robots: RFC 9309 parsing (groups, comments, allow-all idiom), the
   * `*`/`$` pattern matcher, group selection (specific beats `*`), and
   * longest-match/allow-tie verdict election. */
-class RobotsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("RobotsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class RobotsSpec extends AnyFunSuite with SparkSuite {
 
   test("robots_match: prefix, star, end anchor, literals") {
     assert(RobotsKit.matchesJava("/private/", "/private/x"))

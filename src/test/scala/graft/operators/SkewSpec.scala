@@ -1,26 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Skew.saltedJoin must equal the plain inner join and actually spread a
   * hot key across salt partitions. */
-class SkewSpec extends AnyFunSuite {
+class SkewSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("SkewSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   test("equals the plain inner join on real lineitem/orders data") {
     val li = spark.read.parquet(s"$Sf/lineitem.parquet")
@@ -73,7 +61,7 @@ class SkewSpec extends AnyFunSuite {
     // the tiny fixture's hot key trips it, plan shows skew=true after
     // execution. A future edit that wraps join keys in non-equi
     // expressions would silently lose this and fail here.
-    val confs = Seq(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
@@ -81,10 +69,7 @@ class SkewSpec extends AnyFunSuite {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val fact = (1 to 50000).map(i => (if (i % 10 == 0) 7L else 42L, i.toLong))
         .toDF("k", "payload")
       val dim = (1 to 200).flatMap(i => Seq((42L, s"hot$i"), (7L, s"cold$i")))
@@ -96,8 +81,7 @@ class SkewSpec extends AnyFunSuite {
       val p = j.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"),
         s"AQE skew-join did not engage — the equi-join shape may have degraded:\n$p")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   test("invalid arguments are rejected loudly") {

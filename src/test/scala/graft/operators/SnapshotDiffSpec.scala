@@ -1,23 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** SnapshotDiff: all four statuses, NULL-value semantics through the JSON
   * fingerprint, and the loud duplicate-key contract. */
-class SnapshotDiffSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("SnapshotDiffSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class SnapshotDiffSpec extends AnyFunSuite with SparkSuite {
 
   import scala.jdk.CollectionConverters._
   private val schema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -81,18 +70,10 @@ class SnapshotDiffSpec extends AnyFunSuite {
     def statuses(): Map[Long, String] =
       SnapshotDiff.diff(old, nw, Seq("id"), Seq("a", "b"))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val before = spark.conf.getOption("spark.sql.jsonGenerator.ignoreNullFields")
-    try {
-      spark.conf.set("spark.sql.jsonGenerator.ignoreNullFields", "true")
-      val atTrue = statuses()
-      spark.conf.set("spark.sql.jsonGenerator.ignoreNullFields", "false")
-      val atFalse = statuses()
-      assert(atTrue === Map(1L -> "unchanged", 2L -> "changed"))
-      assert(atTrue === atFalse, "a conf flip must not change diff labels")
-    } finally before match {
-      case Some(v) => spark.conf.set("spark.sql.jsonGenerator.ignoreNullFields", v)
-      case None => spark.conf.unset("spark.sql.jsonGenerator.ignoreNullFields")
-    }
+    val atTrue = withConf("spark.sql.jsonGenerator.ignoreNullFields" -> "true")(statuses())
+    val atFalse = withConf("spark.sql.jsonGenerator.ignoreNullFields" -> "false")(statuses())
+    assert(atTrue === Map(1L -> "unchanged", 2L -> "changed"))
+    assert(atTrue === atFalse, "a conf flip must not change diff labels")
   }
 
   test("map-typed compare columns are rejected loudly") {

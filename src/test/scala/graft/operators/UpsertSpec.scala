@@ -1,24 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Upsert (SCD1 latest-wins merge): replacement, append, idempotence,
   * the no-base-shuffle plan shape, and loud contract failures. */
-class UpsertSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("UpsertSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class UpsertSpec extends AnyFunSuite with SparkSuite {
 
   import org.apache.spark.sql.DataFrame
 

@@ -1,28 +1,16 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** `Tables.table(…, "events")` sets `spark.sql.legacy.parquet.nanosAsLong`
   * on the whole session (Spark 4 refuses the file's TIMESTAMP(NANOS)
   * column otherwise). This spec pins what that costs the other tables:
   * nothing — each reads with the same schema and row count as in a
   * session that never loaded `events`. */
-class TablesSpec extends AnyFunSuite {
+class TablesSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("TablesSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   test("loading events leaves every other sf0.001 table reading as in a fresh session") {
     // both sides get a session of their own: suites share the default one

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** The query layer tokenizes CORPUS TEXT through the script-aware
   * `tokenize_text` grammar everywhere (the r8 verdict's split-debt
@@ -16,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * element for element — which is why every carried DuckDB oracle kept
   * its `string_split` twin bit-identically.
   */
-class TokenizationDisciplineSpec extends AnyFunSuite {
+class TokenizationDisciplineSpec extends AnyFunSuite with SparkSuite {
 
   private val queryDir = new java.io.File("src/main/scala/graft/queries")
 
@@ -54,13 +55,6 @@ class TokenizationDisciplineSpec extends AnyFunSuite {
   }
 
   test("tokenize_text degenerates to split-on-space on clean spaced text") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.NativeFunctions.register(spark)
     import spark.implicits._
     // real corpus rows: the degeneracy must hold on actual fixture text
     val rows = Tables.table(spark, "/root/testdata/sf0.001", "documents")

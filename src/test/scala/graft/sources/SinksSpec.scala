@@ -2,31 +2,17 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Sinks: partition-pruned layout, zero-exchange bucketed reads, and
   * size-targeted compaction — asserted on the read-back PLANS, which is
   * where layout decisions pay off. */
-class SinksSpec extends AnyFunSuite {
+class SinksSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val wh = Files.createTempDirectory("sinks_wh").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("SinksSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   test("partitioned layout turns source filters into directory pruning") {
     val out = Files.createTempDirectory("sinks_part").toString + "/docs"
@@ -61,9 +47,7 @@ class SinksSpec extends AnyFunSuite {
       bucketCols = Seq("doc_id"), sortCols = Seq("doc_id"))
     // disable broadcast so the join must rely on the bucket layout — the
     // plan that matters at 100 TB, where neither side broadcasts
-    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val t = spark.table("docs_bkt")
       val joined = t.as("a").join(t.as("b"), "doc_id")
         .select(col("a.doc_id"), col("b.lang"))
@@ -72,7 +56,7 @@ class SinksSpec extends AnyFunSuite {
       assert(!p.contains("Exchange"),
         s"bucketed self-join must read pre-shuffled, no Exchange:\n$p")
       assert(joined.count() === docs.count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
+    }
   }
 
   test("compact rewrites a fragmented directory into the targeted file count") {

@@ -4,27 +4,16 @@ import java.io.FileOutputStream
 import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.bi5.{Bi5Store, NioBi5Store}
 import graft.sources.warc.{WarcCodec, WarcLister, WarcStreamOffset}
+import graft.SparkSuite
 
 /** Listing at bucket scale: committed-subtree pruning never re-walks
   * directories behind the stream frontier, the sharded (Spark-job) listing
   * equals the driver walk, and the offset checkpoint form is real JSON. */
-class WarcListingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("WarcListingSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class WarcListingSpec extends AnyFunSuite with SparkSuite {
 
   private def rec(id: Int): Array[Byte] =
     WarcCodec.encode(Seq(

@@ -4,28 +4,16 @@ import java.io.FileOutputStream
 import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.warc.WarcCodec
+import graft.SparkSuite
 
 /** The warc DSv2 source: golden read-back, gzip multi-member streams,
   * byte-level payload pruning, record_type pushdown, skip-corrupt parity
   * with the bi5 connector, per-file partition planning. */
-class WarcSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("WarcSourceSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class WarcSourceSpec extends AnyFunSuite with SparkSuite {
 
   private def rec(id: Int, typ: String, uri: String, body: String): Array[Byte] =
     WarcCodec.encode(Seq(

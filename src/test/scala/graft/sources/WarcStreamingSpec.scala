@@ -4,27 +4,15 @@ import java.io.FileOutputStream
 import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.warc.WarcCodec
+import graft.SparkSuite
 
 /** Streaming tail of a growing crawl directory: segment files dropped in
   * between triggers appear incrementally, exactly once; pushdown and
   * pruning run identically to the batch scan; admission control paces. */
-class WarcStreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("WarcStreamingSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class WarcStreamingSpec extends AnyFunSuite with SparkSuite {
 
   private def rec(id: Int, typ: String, body: String): Array[Byte] =
     WarcCodec.encode(Seq(

@@ -3,17 +3,18 @@ package graft.sources.bi5
 import java.text.SimpleDateFormat
 import java.util.TimeZone
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.desc
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /**
  * Port of the reference's 13-test suite
  * (reference spark-2.4/src/test/scala/be/salvania/BI5DataSourceTestSuite.scala:164-234)
  * against the read-only golden fixtures shipped with the reference repo.
  */
-class Bi5DataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Bi5DataSourceSpec extends AnyFunSuite with SparkSuite with BeforeAndAfterAll {
 
   private val Fixtures = "/root/reference/spark-2.4/src/test/resources"
   private val TestFile = s"$Fixtures/EURUSD/2019/11/31/15h_ticks.bi5"
@@ -23,14 +24,6 @@ class Bi5DataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val DigitsJpy = 3
 
   private var savedTz: TimeZone = _
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("Bi5DataSourceSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   override def beforeAll(): Unit = {
     savedTz = TimeZone.getDefault

@@ -5,11 +5,12 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.connector.read.{InputPartition, Scan}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.sources._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /**
  * Directory-level pruning of the bi5 file walk: a pruned read returns
@@ -18,19 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * agree, and the layout contract's one exception is pinned. Every tree is
  * generated here with `LZMAOutputStream`.
  */
-class Bi5PruningSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("Bi5PruningSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class Bi5PruningSpec extends AnyFunSuite with SparkSuite {
 
   private def micros(ts: String): Long = {
     val i = java.time.LocalDateTime.parse(ts.replace(' ', 'T')).toInstant(java.time.ZoneOffset.UTC)

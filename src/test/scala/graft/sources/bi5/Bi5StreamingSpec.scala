@@ -2,22 +2,14 @@ package graft.sources.bi5
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Streaming tail of a growing bi5 tree: files copied in between triggers
   * must appear incrementally, exactly once. */
-class Bi5StreamingSpec extends AnyFunSuite {
+class Bi5StreamingSpec extends AnyFunSuite with SparkSuite {
 
   private val Fixtures = "/root/reference/spark-2.4/src/test/resources"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("Bi5StreamingSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("micro-batch stream picks up arriving hour files incrementally") {
     spark.sparkContext.setLogLevel("WARN")

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /**
  * Streaming tokenization under a trained model: Bpe.fit runs on the BATCH
@@ -14,21 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * applies to a streaming frame unchanged; per-document counts must equal
  * the batch counts exactly.
  */
-class BpeStreamsSpec extends AnyFunSuite {
+class BpeStreamsSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("BpeStreamsSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def docs: DataFrame = spark.read
     .parquet(s"$Sf/documents.parquet").select("doc_id", "text")

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /**
  * Streaming LSH near-dup screen == batch q79 on closed batches: the corpus
@@ -13,21 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * the property that lets one dedup definition serve the daily batch
  * backfill and the live ingest tail.
  */
-class DedupStreamsSpec extends AnyFunSuite {
+class DedupStreamsSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("DedupStreamsSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def docs: DataFrame = spark.read
     .parquet(s"$Sf/documents.parquet").select("doc_id", "text")

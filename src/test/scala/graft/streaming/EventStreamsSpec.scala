@@ -1,26 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Drives the streaming pipelines synchronously over the sf0.001 events
   * parquet via memory sinks (processAllAvailable). */
-class EventStreamsSpec extends AnyFunSuite {
+class EventStreamsSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("EventStreamsSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def runToMemory(df: org.apache.spark.sql.DataFrame, name: String, mode: String): Unit = {
     val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()

@@ -1,27 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** EwmaStreams: the streamed recurrence equals the batch Ewma.perKey fold
   * bit-for-bit on closed batches, state carries across micro-batches, and
   * the monotone-ingest contract fails loudly. */
-class EwmaStreamsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("EwmaStreamsSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class EwmaStreamsSpec extends AnyFunSuite with SparkSuite {
 
   // deterministic fixture: 3 keys x 40 observations with irregular values
   private def points: Seq[EwmaPoint] =

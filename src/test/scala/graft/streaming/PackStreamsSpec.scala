@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /**
  * Streaming continuation packing == batch packing, bit for bit: the
@@ -12,22 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
  * seq numbers, same ids, same partial tail — under any batching of the
  * arrival, with the ordering contract enforced loudly.
  */
-class PackStreamsSpec extends AnyFunSuite {
+class PackStreamsSpec extends AnyFunSuite with SparkSuite {
 
   private val Sf = "/root/testdata/sf0.001"
   private val Ctx = 96
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("PackStreamsSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def docs: DataFrame = spark.read
     .parquet(s"$Sf/documents.parquet")

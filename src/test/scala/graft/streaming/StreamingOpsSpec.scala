@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /**
  * The stateless curation operators are streaming-ready AS-IS: Mixture's
@@ -13,19 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * both the daily batch backfill and the live ingest tail. These specs pin
  * it: streaming output == batch output on identical data.
  */
-class StreamingOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("StreamingOpsSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class StreamingOpsSpec extends AnyFunSuite with SparkSuite {
 
   private def docs: DataFrame = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")

@@ -1,27 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
+import graft.sources.bi5.{Bi5Codec, Bi5TreeFixture}
 
 /** Live OHLC bars from the bi5 streaming source must equal the batch bars
   * over the same files — exactly, thanks to deterministic min_by/max_by
-  * tie-breaking. */
-class TickStreamsSpec extends AnyFunSuite {
+  * tie-breaking. The two reference-bound tests have hermetic twins over a
+  * generated tick tree. */
+class TickStreamsSpec extends AnyFunSuite with SparkSuite {
 
   private val Fixtures = "/root/reference/spark-2.4/src/test/resources"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("TickStreamsSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   test("streaming OHLC bars equal batch OHLC bars over the same tick tree") {
     val stream = spark.readStream.format("bi5").option("digits", 5)
@@ -194,5 +186,89 @@ class TickStreamsSpec extends AnyFunSuite {
     assert(bars.head.getAs[Double]("open") === 5.0)  // ts 00:00:10
     assert(bars.head.getAs[Double]("close") === 2.0) // ts 00:00:30
     assert(bars.head.getAs[Double]("high") === 5.0 && bars.head.getAs[Double]("low") === 2.0)
+  }
+
+  /** 200 ticks in the first ~12 minutes of an hour: pairs share an instant
+    * with different asks (the tie-breaks), bars hold several ticks each. */
+  private def pairedTicks(seed: Int): Seq[Bi5Codec.Tick] =
+    (0 until 200).map { i =>
+      Bi5Codec.Tick((i / 2) * 7000, 110000 + (i * 37 + seed) % 101, 109900 + i % 7,
+        1.5f + i % 5, 0.25f * (i % 3 + 1))
+    }
+
+  /** A generated EURUSD tree of two hour files, 2019-12-31 15h and 16h. */
+  private def withTickTree[T](body: Path => T): T = {
+    val root = Files.createTempDirectory("tickstreamtwin")
+    try {
+      Bi5TreeFixture.put(root, "EURUSD/2019/11/31/15h_ticks.bi5", Bi5TreeFixture.lzma(pairedTicks(1)))
+      Bi5TreeFixture.put(root, "EURUSD/2019/11/31/16h_ticks.bi5", Bi5TreeFixture.lzma(pairedTicks(2)))
+      body(root)
+    } finally Bi5TreeFixture.deleteTree(root)
+  }
+
+  test("twin: streaming OHLC bars equal batch OHLC bars over a generated tick tree") {
+    withTickTree { root =>
+      val stream = spark.readStream.format("bi5").option("digits", 5).load(s"$root/EURUSD")
+      val q = TickStreams.ohlcBars(stream, "1 minute")
+        .writeStream.format("memory").queryName("bars_twin").outputMode("complete").start()
+      try q.processAllAvailable() finally q.stop()
+      val streamed = spark.sql("select * from bars_twin")
+      val batch = TickStreams.ohlcBars(
+        spark.read.format("bi5").option("digits", 5).load(s"$root/EURUSD"), "1 minute")
+      assert(streamed.count() === batch.count())
+      assert(streamed.exceptAll(batch).count() === 0 && batch.exceptAll(streamed).count() === 0,
+        "streaming bars must equal batch bars exactly")
+      val bad = batch.filter(
+        col("high") < col("low") || col("open") > col("high") || col("open") < col("low") ||
+          col("close") > col("high") || col("close") < col("low") || col("n_ticks") <= 0)
+      assert(bad.count() === 0)
+      assert(batch.agg(sum("n_ticks")).head.getLong(0) === 400) // every tick in a bar
+    }
+  }
+
+  test("twin: live price-as-of-event equals batch over a generated tick tree") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    withTickTree { root =>
+      val live = spark.readStream.format("bi5").option("digits", 5)
+        .load(s"$root/EURUSD").select("ticker", "ts", "ask")
+      val sentinelIn = MemoryStream[(String, Long, Double)]
+      val sentinels = sentinelIn.toDF().toDF("ticker", "ms", "ask")
+        .select(col("ticker"), timestamp_millis(col("ms")).as("ts"), col("ask"))
+      val evIn = MemoryStream[(String, Long, Long)]
+      val events = evIn.toDF().toDF("ticker", "ms", "event_id")
+        .select(col("ticker"), timestamp_millis(col("ms")).as("ts"), col("event_id"))
+      val base = 1577804400000L // 2019-12-31 15:00, the first file's hour
+      val evRows = Seq(
+        ("EURUSD", base + 60000L, 1L),   // between ticks
+        ("EURUSD", base + 3603500L, 2L), // inside the second file's hour
+        ("EURUSD", base + 7000L, 3L),    // exactly a tied pair's instant
+        ("EURUSD", 1000L, 4L))           // long before any tick -> null
+      val q = TickStreams.asofPrices(spark, live.unionByName(sentinels), events, "10 seconds")
+        .toDF().writeStream.format("memory").queryName("asof_bi5_twin")
+        .outputMode("append").start()
+      try {
+        evIn.addData(evRows: _*)
+        q.processAllAvailable()
+        sentinelIn.addData(("ZZZ", 1700000000000L, 0.0))
+        q.processAllAvailable()
+        sentinelIn.addData(("ZZZ", 1700000001000L, 0.0))
+        q.processAllAvailable()
+      } finally q.stop()
+      val got = spark.sql("select event_id, tick_ms, price from asof_bi5_twin")
+        .collect().map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSet
+      val batchTicks = spark.read.format("bi5").option("digits", 5).load(s"$root/EURUSD")
+        .select(col("ticker"), unix_millis(col("ts")).as("t"), col("ask").as("price"))
+      val want = graft.operators.AsofJoin
+        .backward(evRows.toDF("ticker", "ev_ms", "event_id"), batchTicks, Seq("ticker"),
+          "ev_ms", "t", tieBreak = Seq("price"))
+        .select(col("event_id"), col("asof.t"), col("asof.price"))
+        .collect().map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSet
+      assert(got === want,
+        s"live connector as-of must equal the batch operator\n got=$got\nwant=$want")
+      assert(got.exists { case (id, t, p) => id == 4L && t.isEmpty && p.isEmpty })
+      assert(got.count(_._2.nonEmpty) === 3)
+    }
   }
 }
