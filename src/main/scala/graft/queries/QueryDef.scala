@@ -66,13 +66,6 @@ object SortOut {
 }
 
 object Tables {
-  /**
-   * Load one driver test table. `events.ts` is TIMESTAMP(NANOS) parquet,
-   * which Spark 4 refuses outright (PARQUET_TYPE_ILLEGAL); read it as a raw
-   * nanosecond long (legacy nanosAsLong) and rebuild the micros-precision
-   * TimestampType column — the same truncation DuckDB's `ts::TIMESTAMP`
-   * performs, so oracle comparisons agree.
-   */
   /** r11: spread a SMALL single-split scan across the cores. Parquet scan
     * tasks split at row-group boundaries, and a table below
     * `spark.sql.files.maxPartitionBytes` (or written as one row group —
@@ -110,6 +103,13 @@ object Tables {
     else df
   }
 
+  /**
+   * Load one driver test table. `events.ts` is TIMESTAMP(NANOS) parquet,
+   * which Spark 4 refuses outright (PARQUET_TYPE_ILLEGAL); read it as a raw
+   * nanosecond long (legacy nanosAsLong) and rebuild the micros-precision
+   * TimestampType column — the same truncation DuckDB's `ts::TIMESTAMP`
+   * performs, so oracle comparisons agree.
+   */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // the query layer's one registration: every query loads a table before
     // it names a native function in selectExpr / expr

@@ -28,12 +28,8 @@ import org.apache.spark.sql.types._
  *                      lzma-alone header's uncompressed-size field (exact on
  *                      well-formed Dukascopy files; a corrupt body under a
  *                      valid header would over-count, hence opt-in).
- *  - `listShards=N`  : in `split=files` mode, run the recursive listing as a
- *                      Spark job over the root's child subtrees (N tasks),
- *                      each shard pruning + bin-packing its own files — the
- *                      driver only ever holds the packed partition bins,
- *                      never the flat (path, size) listing. The mode for
- *                      extreme file counts (millions+).
+ *  - `maxFilesPerTrigger`, `backfillLookbackHours` : streaming only — pacing
+ *                      and late-file pickup (see [[Bi5MicroBatchStream]]).
  *
  * Error messages are verbatim observable contract
  * (reference BI5DataSource.scala:34-46, asserted at BI5DataSourceTestSuite.scala:164-214).
@@ -47,8 +43,7 @@ final case class Bi5Options(
     maxPartitionBytesExplicit: Boolean,
     trustHeaders: Boolean,
     maxFilesPerTrigger: Int,
-    backfillLookbackHours: Int = 0,
-    listShards: Int = 0) {
+    backfillLookbackHours: Int = 0) {
   def priceDivisor: Double = Bi5Codec.priceDivisor(digits)
 }
 
@@ -101,22 +96,13 @@ object Bi5Options {
     if (backfill < 0) {
       throw new IllegalArgumentException("backfillLookbackHours cannot be negative")
     }
-    // split=files listing mode: 0 (default) lists on the driver; N > 0 runs
-    // the recursive listing as a Spark job over the root's child subtrees
-    // (the extreme-file-count mode — the driver then only ever holds packed
-    // partition bins, never the flat (path, size) listing)
-    val listShards = get("listshards").map(_.toInt).getOrElse(0)
-    if (listShards < 0) {
-      throw new IllegalArgumentException("listShards cannot be negative")
-    }
     Bi5Options(
       path, digits, january, splitPerFile,
       maxBytesOpt.getOrElse(DefaultMaxPartitionBytes),
       maxPartitionBytesExplicit = maxBytesOpt.isDefined,
       trustHeaders = trustHeaders,
       maxFilesPerTrigger = maxFilesPerTrigger,
-      backfillLookbackHours = backfill,
-      listShards = listShards)
+      backfillLookbackHours = backfill)
   }
 }
 

@@ -139,11 +139,10 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
 
   override def planInputPartitions(): Array[InputPartition] =
     if (!opts.splitPerFile) Bi5Scan.perChildPartitions(opts.path, store)
-    else if (opts.listShards > 0) planFileBinsSharded()
     else planFileBins()
 
   /** Scale mode: list the files on the driver, prune by pushed filters, then
-    * first-fit-decreasing bin-pack by compressed size. With the DEFAULT byte
+    * bin-pack by compressed size ([[Bi5Scan.packBins]]). With the DEFAULT byte
     * cap the bin target also shrinks to totalBytes / (2 * defaultParallelism):
     * a byte cap alone would collapse any dataset smaller than one cap into a
     * single partition and run the whole scan on one core (observed: a 53 MB
@@ -171,69 +170,6 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
     else bins.map(b => Bi5Partition(b, walk = false): InputPartition)
   }
 
-  /** Immediate child subtrees of the load root — the task granularity of
-    * every listShards-mode distributed listing job. */
-  private def shardRoots(): Seq[String] =
-    if (store.isDirectory(opts.path)) store.children(opts.path).map(_.path).sorted
-    else Seq(opts.path)
-
-  /** ONE distributed listing job serves BOTH planning and statistics: each
-    * shard task lists, prunes, bin-packs, and byte-sums its own subtree, and
-    * the (bins, pruned bytes) pair is memoized per pruning-filter set. The
-    * listing is the dominant cost of this mode (millions of files), and
-    * without the cache estimateStatistics (which AQE may consult more than
-    * once) and planInputPartitions would each launch their own full job.
-    * Keyed by the filter set because stats prune with the static pushed
-    * filters while planning also sees runtime (DPP) filters — when the two
-    * sets coincide (the common case) the job runs exactly once. */
-  private val shardedJobCache =
-    scala.collection.mutable.HashMap.empty[Seq[Filter], (Array[Array[String]], Long)]
-
-  private def shardedListing(pruneFilters: Array[Filter]): (Array[Array[String]], Long) =
-    shardedJobCache.synchronized {
-      shardedJobCache.getOrElseUpdate(pruneFilters.toSeq, {
-        val roots = shardRoots()
-        if (roots.isEmpty) (Array.empty[Array[String]], 0L)
-        else {
-          val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-          // locals only in the closure: the Scan itself must not be serialized
-          val storeLocal = store
-          val monthOffset = opts.monthOffset
-          val filtersLocal = pruneFilters
-          val targetBytes = opts.maxPartitionBytes
-          val perShard = sc.parallelize(roots, math.min(opts.listShards, roots.size))
-            .mapPartitions { rs =>
-              // shard roots sit below the load root, so they are judged too
-              val checks = new Bi5FilePruner.Checks(filtersLocal)
-              val files = rs.filter(checks.dirFilter(monthOffset))
-                .flatMap(r => Bi5FileLister.listPruned(storeLocal, r, monthOffset, checks))
-                .toArray.sortBy { case (_, size) => -size }
-              Iterator.single((Bi5Scan.packBins(files, targetBytes), files.map(_._2).sum))
-            }
-            .collect()
-          (perShard.flatMap(_._1), perShard.map(_._2).sum)
-        }
-      })
-    }
-
-  /** Extreme-file-count mode (`listShards=N`): the recursive listing runs as
-    * a SPARK JOB — one task group over the root's immediate child subtrees —
-    * and each task prunes, sorts, and bin-packs ITS OWN files before anything
-    * returns to the driver. The driver therefore only ever holds the packed
-    * partition bins (which planInputPartitions must produce regardless),
-    * never the flat (path, size) listing: at 10M files that is the difference
-    * between ~1 GB of listing pairs plus sort scratch and just the partition
-    * array. Per-shard packing can leave at most one underfull bin per task
-    * (bounded by listShards, not by file count). The bin target is the
-    * explicit maxPartitionBytes, or its 128 MiB default — the small-dataset
-    * parallelism heuristic needs a global byte total the driver deliberately
-    * no longer computes. */
-  private def planFileBinsSharded(): Array[InputPartition] = {
-    val bins = shardedListing(allFilters)._1
-    if (bins.isEmpty) Array(Bi5Partition(Array.empty, walk = false))
-    else bins.map(b => Bi5Partition(b, walk = false): InputPartition)
-  }
-
   override def createReaderFactory(): PartitionReaderFactory =
     new Bi5PartitionReaderFactory(opts, required, allFilters, store)
 
@@ -244,21 +180,12 @@ class Bi5Scan(opts: Bi5Options, required: StructType, filters: Array[Filter], st
   private lazy val listedFiles: Seq[(String, Long)] =
     Bi5FileLister.listPruned(store, opts.path, opts.monthOffset, new Bi5FilePruner.Checks(filters))
 
-  /** listShards-mode statistics: the pruned compressed byte total from the
-    * shared sharded job (memoized — see [[shardedListing]]). Stats must not
-    * fall back to `listedFiles`, or any plan that asks for scan statistics
-    * (AQE join-strategy selection does) would re-materialize the exact flat
-    * driver-side listing the sharded planner exists to avoid. */
-  private def shardedCompressedBytes(): Long = shardedListing(filters)._2
-
   override def estimateStatistics(): Statistics = {
     // No footer/stats exist in bi5 files; estimate from compressed bytes with
     // the ~4.2x LZMA ratio observed on the reference fixtures, 20 B/record.
     // Pushed filters prune the listing first so a ticker/ts-restricted scan
     // reports its actual magnitude (broadcast decisions depend on this).
-    val compressed =
-      if (opts.splitPerFile && opts.listShards > 0) shardedCompressedBytes()
-      else listedFiles.map(_._2).sum
+    val compressed = listedFiles.map(_._2).sum
     val rows = (compressed * 4.2 / Bi5Codec.RecordBytes).toLong
     new Statistics {
       override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(rows * 48L, 1L))
@@ -271,9 +198,8 @@ object Bi5Scan {
 
   /** Sequential packing over a size-DESC-sorted listing into ~targetBytes
     * bins: O(files). First-fit against all open bins would be O(files x
-    * bins) — hours of driver/executor time at the million-file scale, for
-    * near-identical partition quality on size-sorted input. Shared by the
-    * driver-side and sharded (executor-side) split=files planners. */
+    * bins) — hours of driver time at the million-file scale, for
+    * near-identical partition quality on size-sorted input. */
   def packBins(filesBySizeDesc: Seq[(String, Long)], targetBytes: Long): Array[Array[String]] = {
     val bins = ArrayBuffer.empty[Array[String]]
     val bin = ArrayBuffer.empty[String]

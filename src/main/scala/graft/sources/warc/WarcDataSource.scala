@@ -41,22 +41,12 @@ class WarcDataSource extends TableProvider with DataSourceRegister {
 }
 
 /** Validated options: `path` (required), `extensions` (CSV of accepted
-  * file suffixes, default ".warc,.warc.gz"), `maxFilesPerTrigger`
-  * (streaming admission control, 0 = unbounded), `listShards` (N > 0 runs
-  * the batch-planning listing as a Spark job over the root's immediate
-  * child subtrees instead of a serial driver walk — the bi5 source's
-  * extreme-file-count mode, for multi-dump buckets), `memberSplitBytes`
-  * (N > 0 fans each `.gz` file larger than N into multiple partitions of
-  * ~N compressed bytes, split at gzip MEMBER boundaries indexed at
-  * planning time — Common Crawl segments compress each record as its own
-  * member, so one multi-GB file no longer pins one task; 0 = one
-  * partition per file, the plain-`.warc` unit and the default). */
+  * file suffixes, default ".warc,.warc.gz") and `maxFilesPerTrigger`
+  * (streaming admission control, 0 = unbounded). */
 final case class WarcOptions(
     path: String,
     extensions: Seq[String],
-    maxFilesPerTrigger: Int,
-    listShards: Int,
-    memberSplitBytes: Long)
+    maxFilesPerTrigger: Int)
 
 object WarcOptions {
   def from(get: String => Option[String]): WarcOptions = {
@@ -66,19 +56,13 @@ object WarcOptions {
       .split(",").toSeq.map(_.trim.toLowerCase).filter(_.nonEmpty)
     if (exts.isEmpty)
       throw new IllegalArgumentException("'extensions' must name at least one file suffix")
-    def nonNegInt(name: String): Int = get(name).map(_.trim) match {
+    val maxFiles = get("maxFilesPerTrigger").map(_.trim) match {
       case None => 0
       case Some(s) => s.toIntOption.filter(_ >= 0).getOrElse(
         throw new IllegalArgumentException(
-          s"'$name' must be a non-negative integer"))
+          "'maxFilesPerTrigger' must be a non-negative integer"))
     }
-    val split = get("memberSplitBytes").map(_.trim) match {
-      case None => 0L
-      case Some(s) => s.toLongOption.filter(_ >= 0L).getOrElse(
-        throw new IllegalArgumentException(
-          "'memberSplitBytes' must be a non-negative integer"))
-    }
-    WarcOptions(path, exts, nonNegInt("maxFilesPerTrigger"), nonNegInt("listShards"), split)
+    WarcOptions(path, exts, maxFiles)
   }
 }
 

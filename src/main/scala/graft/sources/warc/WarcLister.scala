@@ -3,30 +3,18 @@ package graft.sources.warc
 import graft.sources.bi5.Bi5Store
 
 /**
- * Listing strategies of the warc source — shared by the batch scan, the
- * statistics estimate, and the micro-batch stream, so "which files exist"
- * is computed exactly once per planning decision and with the same rules
- * everywhere.
+ * Listing of the warc source — shared by the batch scan, the statistics
+ * estimate, and the micro-batch stream, so "which files exist" is computed
+ * exactly once per planning decision and with the same rules everywhere.
  *
- * Two 100 TB concerns handled here (neither changes WHAT is listed):
- *
- *  - `sincePath` committed-subtree PRUNING (streaming): WARC stream offsets
- *    are lexicographic path frontiers, so a directory whose entire path
- *    space provably sorts before the frontier can be skipped without
- *    enumerating it. An idle tail over a multi-dump archive then re-lists
- *    only the frontier's own subtree plus genuinely new directories — not
- *    the whole archive every trigger (the bi5 stream's
- *    `listBi5FilesSince` discipline, generalized from date-parsed hours to
- *    the raw path order this source's offsets use).
- *  - `listSharded` DISTRIBUTED listing (batch, `listShards=N`): the
- *    recursive walk runs as one Spark job over the load root's immediate
- *    child subtrees (Common Crawl dumps are exactly such subtrees), so a
- *    100k-segment bucket is listed by executors in parallel instead of one
- *    serial remote walk on the driver. The driver still receives the
- *    matched (path, size) pairs — it must, every file becomes an
- *    InputPartition — but never blocks on a single-threaded object-store
- *    crawl, and the result is memoized per scan so statistics and
- *    planning share one job (the `Bi5Scan.shardedListing` contract).
+ * `sincePath` committed-subtree PRUNING (streaming): WARC stream offsets
+ * are lexicographic path frontiers, so a directory whose entire path space
+ * provably sorts before the frontier can be skipped without enumerating
+ * it. An idle tail over a multi-dump archive then re-lists only the
+ * frontier's own subtree plus genuinely new directories — not the whole
+ * archive every trigger (the bi5 stream's `listBi5FilesSince` discipline,
+ * generalized from date-parsed hours to the raw path order this source's
+ * offsets use). Pruning never changes WHAT is listed.
  */
 object WarcLister {
 
@@ -69,36 +57,5 @@ object WarcLister {
         out += ((root, try store.fileSize(root) catch { case _: Exception => 0L }))
     }
     out.result().sortBy(_._1)
-  }
-
-  /** [[list]] executed as a Spark job: one task group over the root's
-    * immediate child subtrees, each task walking its own subtree. Only the
-    * matched (path, size) pairs return to the driver. Falls back to the
-    * driver walk when the root is a plain file or has no children. */
-  def listSharded(
-      store: Bi5Store,
-      root: String,
-      extensions: Seq[String],
-      listShards: Int): Vector[(String, Long)] = {
-    if (!store.exists(root) || !store.isDirectory(root))
-      return list(store, root, extensions)
-    val children = store.children(root).sortBy(_.path)
-    if (children.isEmpty) return Vector.empty
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    // locals only in the closure — the Scan/Stream must not be serialized
-    val storeLocal = store
-    val extsLocal = extensions
-    val (dirs, files) = children.partition(_.isDir)
-    val rootFiles = files.collect {
-      case e if matches(e.path, extsLocal) => (e.path, e.size)
-    }
-    val shardResults =
-      if (dirs.isEmpty) Array.empty[(String, Long)]
-      else sc.parallelize(dirs.map(_.path), math.min(listShards, dirs.size))
-        .mapPartitions { rs =>
-          rs.flatMap(r => list(storeLocal, r, extsLocal))
-        }
-        .collect()
-    (rootFiles ++ shardResults).toVector.sortBy(_._1)
   }
 }

@@ -79,16 +79,10 @@ class WarcScan(
 
   override def toBatch: Batch = this
 
-  /** ONE listing per scan, shared by statistics and partition planning —
-    * previously each ran its own full walk (and AQE may consult statistics
-    * more than once). `listShards > 0` runs the walk as a Spark job over
-    * the root's immediate child subtrees ([[WarcLister.listSharded]] — the
-    * bi5 source's extreme-file-count mode), so a 100k-segment bucket never
-    * serializes on a driver-side object-store crawl. */
+  /** ONE listing per scan, shared by statistics and partition planning
+    * (AQE may consult statistics more than once). */
   private lazy val listed: Vector[(String, Long)] =
-    if (opts.listShards > 0)
-      WarcLister.listSharded(store, opts.path, opts.extensions, opts.listShards)
-    else WarcLister.list(store, opts.path, opts.extensions)
+    WarcLister.list(store, opts.path, opts.extensions)
 
   /** On-disk (compressed) byte total of the matched files — a deliberate
     * UNDER-estimate for gzip (decompressed rows are larger), which errs
@@ -108,48 +102,9 @@ class WarcScan(
     s"warc(${opts.path}) pushedTypeFilter=[$t]"
   }
 
-  /** One partition per file by default. With `memberSplitBytes = N > 0`,
-    * each `.gz` file larger than N is INDEXED (gzip member boundaries —
-    * [[GzipMembers.memberOffsets]]; one decompression pass at planning,
-    * run as a Spark job when `listShards > 0`, a driver loop otherwise)
-    * and fanned into ranges of ~N compressed bytes, each starting at a
-    * member boundary. A file whose framing fails to index falls back to
-    * one whole-file partition (skip-corrupt: bad segments cost
-    * parallelism, never the job). Plain `.warc` files stay per-file —
-    * uncompressed records carry no self-delimiting member framing. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val target = opts.memberSplitBytes
-    if (target <= 0L)
-      return listed.map { case (f, _) => WarcFilePartition(f, 0L, Long.MaxValue): InputPartition }.toArray
-    val (oversized, whole) = listed.partition { case (f, size) =>
-      f.toLowerCase.endsWith(".gz") && size > target
-    }
-    val storeLocal = store
-    def indexOne(f: String): Vector[(Long, Long)] =
-      try {
-        val in = storeLocal.open(f)
-        val offsets =
-          try GzipMembers.memberOffsets(new java.io.BufferedInputStream(in, 64 * 1024))
-          finally in.close()
-        GzipMembers.ranges(offsets, target)
-      } catch {
-        case scala.util.control.NonFatal(_) => Vector((0L, Long.MaxValue))
-      }
-    val indexed: Seq[(String, Vector[(Long, Long)])] =
-      if (oversized.isEmpty) Seq.empty
-      else if (opts.listShards > 0) {
-        val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-        val paths = oversized.map(_._1)
-        sc.parallelize(paths, math.min(opts.listShards, paths.size))
-          .map(f => (f, indexOne(f))).collect().toSeq
-      } else oversized.map { case (f, _) => (f, indexOne(f)) }
-    val parts =
-      whole.map { case (f, _) => WarcFilePartition(f, 0L, Long.MaxValue) } ++
-        indexed.sortBy(_._1).flatMap { case (f, rs) =>
-          rs.map { case (s, e) => WarcFilePartition(f, s, e) }
-        }
-    parts.map(p => p: InputPartition).toArray
-  }
+  /** One partition per file: gzip streams are not split-points. */
+  override def planInputPartitions(): Array[InputPartition] =
+    listed.map { case (f, _) => WarcFilePartition(f): InputPartition }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new WarcReaderFactory(store, required, typeKeep)
@@ -160,38 +115,17 @@ class WarcScan(
       opts, required, typeKeep, opts.maxFilesPerTrigger, store)
 }
 
-/** `[start, end)` compressed byte range; `(0, Long.MaxValue)` = whole
-  * file. A non-zero `start` is always a gzip member boundary from the
-  * planning index. */
-final case class WarcFilePartition(file: String, start: Long = 0L, end: Long = Long.MaxValue)
-    extends InputPartition
+final case class WarcFilePartition(file: String) extends InputPartition
 
 object WarcFilePartition {
-  /** Open `file` positioned and framed for `p`'s range: whole-file opens
-    * keep the suffix-based codec choice; ranged opens skip to the member
-    * boundary (looped skip — `InputStream.skip` may return short) and
-    * decompress only members starting inside the range. */
+  /** Open `p`'s file for record parsing: `.gz` through the JDK's
+    * GZIPInputStream (which reads concatenated members), anything else
+    * buffered as is. */
   def openRecordStream(store: Bi5Store, p: WarcFilePartition): java.io.InputStream = {
     val raw = store.open(p.file)
     try {
-      if (p.start == 0L && p.end == Long.MaxValue) {
-        if (p.file.toLowerCase.endsWith(".gz"))
-          new GZIPInputStream(raw, 64 * 1024)
-        else new java.io.BufferedInputStream(raw, 64 * 1024)
-      } else {
-        var remaining = p.start
-        while (remaining > 0L) {
-          val skipped = raw.skip(remaining)
-          if (skipped <= 0L) {
-            // skip() can legally return 0; prove progress with a read
-            if (raw.read() < 0) throw new java.io.EOFException(
-              s"range start ${p.start} past EOF of ${p.file}")
-            remaining -= 1
-          } else remaining -= skipped
-        }
-        new GzipMembers.MemberRangeStream(
-          new java.io.BufferedInputStream(raw, 64 * 1024), p.start, p.end)
-      }
+      if (p.file.toLowerCase.endsWith(".gz")) new GZIPInputStream(raw, 64 * 1024)
+      else new java.io.BufferedInputStream(raw, 64 * 1024)
     } catch {
       case e: Throwable =>
         try raw.close() catch { case _: Exception => () }

@@ -41,12 +41,6 @@ object TickStreams {
         col("open"), col("high"), col("low"), col("close"),
         col("n_ticks"), col("volume"))
 
-  /** Watermarked variant for append-mode sinks: bars seal once the watermark
-    * passes their window end, bounding state on an unbounded tail. */
-  def ohlcBarsWatermarked(ticks: DataFrame, width: String = "1 minute",
-      lateness: String = "2 hours"): DataFrame =
-    ohlcBars(ticks.withWatermark("ts", lateness), width)
-
   /** Union-side row of the streaming as-of (kind 0 = tick, 1 = event). */
   final case class AsofIn(
       ticker: String, ts: java.sql.Timestamp, kind: Int, price: Double, event_id: Long)

@@ -84,10 +84,13 @@ class GlobalRankSpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPlanH
     }
   }
 
-  test("lazy bounds (q99, q118): the executed plan computes each sketch once") {
-    // both the bucketing branch and the offsets branch join the unpinned
-    // bounds frame; only exchange reuse makes them one sketch computation
-    for ((name, passes) <- Seq("q99_hybrid_rrf" -> 2, "q118_winsorized" -> 1)) {
+  /** Runs each query at sf0.001 and asserts its executed (AQE) plan,
+    * stages and subqueries included, holds `passes` partial sketch
+    * aggregates: one per rank pass. Every pass joins its unpinned bounds
+    * frame from both the bucketing and the offsets branch; only exchange
+    * reuse makes them one sketch computation. */
+  private def assertOneSketchPerPass(passesByQuery: (String, Int)*): Unit =
+    for ((name, passes) <- passesByQuery) {
       val df = graft.SparkEntry.queries(name)(spark, Sf)
       df.collect()
       val sketches = collectWithSubqueries(df.queryExecution.executedPlan) {
@@ -97,5 +100,13 @@ class GlobalRankSpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPlanH
       assert(sketches.size === passes, s"$name computes ${sketches.size} sketches:\n" +
         df.queryExecution.executedPlan)
     }
+
+  test("lazy bounds (q99, q118): the executed plan computes each sketch once") {
+    assertOneSketchPerPass("q99_hybrid_rrf" -> 2, "q118_winsorized" -> 1)
+  }
+
+  test("lazy bounds (q169, q219, q290): the executed plan computes each sketch once") {
+    assertOneSketchPerPass(
+      "q169_curriculum_stages" -> 1, "q219_psi_drift" -> 1, "q290_epoch_plan" -> 1)
   }
 }

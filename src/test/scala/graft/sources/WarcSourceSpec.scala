@@ -170,87 +170,4 @@ class WarcSourceSpec extends AnyFunSuite with SparkSuite {
     assert(respOnly.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(respOnly.count() === 4)
   }
-
-  /** dir with ONE .warc.gz of `n` members (one record each) — the Common
-    * Crawl per-record layout at miniature scale. */
-  private def manyMemberDir(n: Int): Path = {
-    val dir = Files.createTempDirectory("warcsplit")
-    val gz = new FileOutputStream(dir.resolve("big.warc.gz").toFile)
-    (1 to n).foreach { i =>
-      val m = new GZIPOutputStream(gz)
-      m.write(rec(i, if (i % 3 == 0) "request" else "response",
-        s"http://s.example/$i", s"body-$i " * 20))
-      m.finish()
-    }
-    gz.close()
-    dir
-  }
-
-  test("memberSplitBytes: one multi-member .gz fans into N>1 partitions, rows identical") {
-    val dir = manyMemberDir(40)
-    val cols = Seq("record_id", "record_type", "target_uri", "content_length")
-    val whole = spark.read.format("warc").load(dir.toString)
-    val split = spark.read.format("warc")
-      .option("memberSplitBytes", "500").load(dir.toString)
-    assert(whole.select("record_id").rdd.getNumPartitions === 1)
-    val np = split.select("record_id").rdd.getNumPartitions
-    assert(np > 1, s"a multi-member file above the target must fan out, got $np")
-    val a = whole.selectExpr(cols :+ "cast(payload as string) as body": _*)
-      .collect().map(_.toString).sorted.toSeq
-    val b = split.selectExpr(cols :+ "cast(payload as string) as body": _*)
-      .collect().map(_.toString).sorted.toSeq
-    assert(a === b, "split read must equal the single-partition read exactly")
-    // pushdown + pruning compose with ranged partitions (columnar path too)
-    val pushed = split.filter(col("record_type") === "response")
-      .select("record_id", "target_uri")
-    assert(pushed.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-      "header-only split read stays columnar")
-    assert(pushed.count() === whole.filter(col("record_type") === "response").count())
-    // files at or below the target keep one partition under the option
-    val small = manyMemberDir(2)
-    val smallSplit = spark.read.format("warc")
-      .option("memberSplitBytes", String.valueOf(10L * 1024 * 1024))
-      .load(small.toString)
-    assert(smallSplit.select("record_id").rdd.getNumPartitions === 1)
-    // a garbage .gz larger than the target falls back to one whole-file
-    // partition and zero rows (skip-corrupt), never a planning failure
-    val bad = Files.createTempDirectory("warcsplitbad")
-    Files.write(bad.resolve("fake.warc.gz"), ("x" * 4000).getBytes)
-    val badDf = spark.read.format("warc")
-      .option("memberSplitBytes", "500").load(bad.toString)
-    assert(badDf.count() === 0L)
-  }
-
-  test("GzipMembers: member offsets, ranges, and ranged decompression") {
-    val dir = manyMemberDir(5)
-    val f = dir.resolve("big.warc.gz")
-    val size = Files.size(f)
-    val offsets = {
-      val in = new java.io.BufferedInputStream(Files.newInputStream(f))
-      try graft.sources.warc.GzipMembers.memberOffsets(in) finally in.close()
-    }
-    assert(offsets.length === 5, "one offset per member")
-    assert(offsets.head === 0L)
-    assert(offsets === offsets.sorted && offsets.distinct === offsets)
-    assert(offsets.last < size)
-    // ranges: every range starts at a member boundary and covers the file
-    val rs = graft.sources.warc.GzipMembers.ranges(offsets, 1L)
-    assert(rs.length === 5, "target 1 byte: every member its own range")
-    assert(rs.map(_._1) === offsets)
-    assert(rs.last._2 === Long.MaxValue)
-    val one = graft.sources.warc.GzipMembers.ranges(offsets, Long.MaxValue)
-    assert(one === Vector((0L, Long.MaxValue)))
-    // ranged decompression: the middle member alone yields exactly record 3
-    val mid = {
-      val raw = Files.newInputStream(f)
-      try {
-        var toSkip = offsets(2)
-        while (toSkip > 0) { val s = raw.skip(toSkip); assert(s > 0); toSkip -= s }
-        val mrs = new graft.sources.warc.GzipMembers.MemberRangeStream(
-          new java.io.BufferedInputStream(raw), offsets(2), offsets(3))
-        new String(mrs.readAllBytes(), "UTF-8")
-      }
-    }
-    assert(mid.contains("rec-3") && !mid.contains("rec-2") && !mid.contains("rec-4"))
-  }
 }

@@ -275,87 +275,54 @@ class Bi5DataSourceSpec extends AnyFunSuite with SparkSuite with BeforeAndAfterA
     assert(df.rdd.getNumPartitions >= 2) // 3 decodable files bin-packed at 50 kB
   }
 
-  test("listShards: sharded listing plans >10k files, same coverage, no driver walk") {
-    // 10 ticker subtrees x 1000 hour files: big enough that a driver holding
-    // the flat (path, size) listing is exactly what this mode exists to avoid
-    val root = java.nio.file.Files.createTempDirectory("bi5shard").toFile
-    val paths = for {
+  test("split=files: the driver planner packs >10k files once each and plans from one listing") {
+    // 10 ticker subtrees x 1000 hour files of 64-73 B each
+    val root = java.nio.file.Files.createTempDirectory("bi5bins").toFile
+    for {
       t <- 0 until 10; m <- 1 to 5; d <- 1 to 10; h <- 0 until 20
-    } yield {
+    } {
       val dir = new java.io.File(root, s"T$t/2020/$m/$d")
       dir.mkdirs()
-      val f = new java.io.File(dir, s"${h}h_ticks.bi5")
-      java.nio.file.Files.write(f.toPath, Array.fill[Byte](64 + t)(1))
-      f.getAbsolutePath
+      java.nio.file.Files.write(
+        new java.io.File(dir, s"${h}h_ticks.bi5").toPath, Array.fill[Byte](64 + t)(1))
     }
     try {
-      def plan(extra: Map[String, String]): Array[Bi5Partition] = {
-        // lowercase keys: Bi5Options.from takes the case-normalized lookup
-        // the DSv2 CaseInsensitiveStringMap provides in real reads
-        val optMap = Map("path" -> root.getAbsolutePath, "digits" -> "5",
-          "split" -> "files", "maxpartitionbytes" -> "4096") ++ extra
-        val opts = Bi5Options.from(k => optMap.get(k))
-        new Bi5ScanBuilder(opts).build().asInstanceOf[Bi5Scan]
-          .toBatch.planInputPartitions().map(_.asInstanceOf[Bi5Partition])
+      // lowercase keys: Bi5Options.from takes the case-normalized lookup
+      // the DSv2 CaseInsensitiveStringMap provides in real reads
+      def scan(): Bi5Scan = {
+        val m = Map("path" -> root.getAbsolutePath, "digits" -> "5",
+          "split" -> "files", "maxpartitionbytes" -> "4096")
+        new Bi5ScanBuilder(Bi5Options.from(k => m.get(k))).build().asInstanceOf[Bi5Scan]
       }
-      val sharded = plan(Map("listshards" -> "8"))
-      val files = sharded.flatMap(_.roots)
+      def plannedFiles(s: Bi5Scan): Array[String] =
+        s.toBatch.planInputPartitions().flatMap(_.asInstanceOf[Bi5Partition].roots)
+      val bins = scan().toBatch.planInputPartitions().map(_.asInstanceOf[Bi5Partition])
+      val files = bins.flatMap(_.roots)
       assert(files.length === 10000, "every file planned exactly once")
       assert(files.distinct.length === 10000)
-      assert(sharded.forall(!_.walk))
-      // ~4096B bins of 64B files: the job really packed, not one-file bins
-      assert(sharded.length < 1000 && sharded.length > 100, s"bins=${sharded.length}")
-      // identical coverage to the driver-side planner (bin boundaries may
-      // differ: per-shard packing vs one global sort)
-      val driver = plan(Map.empty).flatMap(_.roots)
-      assert(files.sorted.sameElements(driver.sorted))
-      // executor-side pruning: a ticker filter cuts planning to one subtree
-      val optMap = Map("path" -> root.getAbsolutePath, "digits" -> "5",
-        "split" -> "files", "maxpartitionbytes" -> "4096", "listshards" -> "8")
-      val scan = new Bi5ScanBuilder(Bi5Options.from(k => optMap.get(k)))
-        .build().asInstanceOf[Bi5Scan]
-      scan.filter(Array[org.apache.spark.sql.sources.Filter](
+      assert(bins.forall(!_.walk))
+      // ~4096B bins of 64B files: really packed, not one-file bins
+      assert(bins.length < 1000 && bins.length > 100, s"bins=${bins.length}")
+      // a runtime (DPP-style) ticker filter cuts planning to one subtree
+      val filtered = scan()
+      filtered.filter(Array[org.apache.spark.sql.sources.Filter](
         org.apache.spark.sql.sources.EqualTo("ticker", "T3")))
-      assert(scan.toBatch.planInputPartitions()
-        .flatMap(_.asInstanceOf[Bi5Partition].roots).length === 1000)
-      // statistics in sharded mode run as a distributed sum (never the
-      // driver-side flat listing) and must equal the driver-mode estimate
-      def scanFor(extra: Map[String, String]): Bi5Scan = {
-        val m = Map("path" -> root.getAbsolutePath, "digits" -> "5",
-          "split" -> "files", "maxpartitionbytes" -> "4096") ++ extra
-        new Bi5ScanBuilder(Bi5Options.from(k => m.get(k)))
-          .build().asInstanceOf[Bi5Scan]
-      }
-      val statsSharded = scanFor(Map("listshards" -> "8")).estimateStatistics()
-      val statsDriver = scanFor(Map.empty).estimateStatistics()
-      assert(statsSharded.numRows().getAsLong === statsDriver.numRows().getAsLong)
-      assert(statsSharded.sizeInBytes().getAsLong === statsDriver.sizeInBytes().getAsLong)
-      assert(statsSharded.numRows().getAsLong > 0)
-      // stats and planning SHARE one memoized listing job per filter set:
-      // files added after the first consultation must NOT appear (the scan
-      // serves both from one snapshot — without the cache each call would
-      // launch its own full distributed listing, the mode's dominant cost)
-      val cached = scanFor(Map("listshards" -> "8"))
+      assert(plannedFiles(filtered).length === 1000)
+      // statistics and planning share one listing per scan: a file added
+      // after the first consultation is seen by neither, and a FRESH scan
+      // lists again and sees it
+      val cached = scan()
       val rowsBefore = cached.estimateStatistics().numRows().getAsLong
+      assert(rowsBefore > 0)
       val lateDir = new java.io.File(root, "T0/2021/1/1")
       lateDir.mkdirs()
       java.nio.file.Files.write(
         new java.io.File(lateDir, "0h_ticks.bi5").toPath, Array.fill[Byte](4096)(1))
       assert(cached.estimateStatistics().numRows().getAsLong === rowsBefore,
-        "second stats call must serve the memoized listing")
-      assert(cached.toBatch.planInputPartitions()
-        .flatMap(_.asInstanceOf[Bi5Partition].roots).length === 10000,
+        "second stats call must serve the same listing")
+      assert(plannedFiles(cached).length === 10000,
         "planning must reuse the stats call's listing snapshot")
-      // a FRESH scan lists again and sees the late file
-      assert(scanFor(Map("listshards" -> "8")).toBatch.planInputPartitions()
-        .flatMap(_.asInstanceOf[Bi5Partition].roots).length === 10001)
-      // end-to-end on the REAL fixture tree: sharded read == driver read
-      val df = spark.read.format("bi5")
-        .option("digits", DigitsEur)
-        .option("split", "files")
-        .option("listShards", 4)
-        .load(s"$Fixtures/EURUSD/")
-      assert(df.count() === 27521)
+      assert(plannedFiles(scan()).length === 10001)
     } finally {
       import scala.reflect.io.Directory
       new Directory(root).deleteRecursively()

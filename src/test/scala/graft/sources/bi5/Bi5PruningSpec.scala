@@ -135,7 +135,6 @@ class Bi5PruningSpec extends AnyFunSuite with SparkSuite {
       val modes = Seq(
         root.toString -> Map.empty[String, String],
         root.toString -> Map("split" -> "files"),
-        root.toString -> Map("split" -> "files", "listShards" -> "2"),
         s"file://$root" -> Map.empty[String, String],
         s"file://$root" -> Map("split" -> "files"))
       for (january <- Seq(0, 1)) {

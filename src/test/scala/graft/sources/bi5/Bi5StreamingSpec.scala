@@ -1,12 +1,13 @@
 package graft.sources.bi5
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 
 /** Streaming tail of a growing bi5 tree: files copied in between triggers
-  * must appear incrementally, exactly once. */
+  * must appear incrementally, exactly once. Each test that copies the
+  * reference fixtures has a hermetic twin below over generated hour files. */
 class Bi5StreamingSpec extends AnyFunSuite with SparkSuite {
 
   private val Fixtures = "/root/reference/spark-2.4/src/test/resources"
@@ -298,5 +299,205 @@ class Bi5StreamingSpec extends AnyFunSuite with SparkSuite {
       // admission control actually split the backlog into multiple batches
       assert(q.recentProgress.count(_.numInputRows > 0) >= 2)
     } finally q.stop()
+  }
+
+  // ---- hermetic twins: the fixture-copying tests above, over hour files
+  // written by Bi5TreeFixture; row counts come from the generated ticks
+
+  /** Write a generated hour file at `root/rel`; returns its row count. */
+  private def hour(root: Path, rel: String, seed: Int): Long = {
+    Bi5TreeFixture.putHour(root, rel, seed)
+    Bi5TreeFixture.hourTicks(seed).size.toLong
+  }
+
+  private def rowsIn(table: String): Long =
+    spark.sql(s"select count(*) from $table").head.getLong(0)
+
+  private def withTree(prefix: String)(body: Path => Unit): Unit = {
+    val root = Files.createTempDirectory(prefix)
+    try body(root) finally Bi5TreeFixture.deleteTree(root)
+  }
+
+  test("twin: micro-batch stream picks up arriving hour files incrementally") {
+    withTree("bi5streamtwin") { root =>
+      val first = hour(root, "EURUSD/2019/11/31/15h_ticks.bi5", 1)
+      val q = spark.readStream.format("bi5").option("digits", 5).load(root.toString)
+        .writeStream.format("memory").queryName("bi5_tail_twin").outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(rowsIn("bi5_tail_twin") === first)
+        val second = hour(root, "EURUSD/2020/03/02/12h_ticks.bi5", 2) // arrives
+        q.processAllAvailable()
+        assert(rowsIn("bi5_tail_twin") === first + second)
+        q.processAllAvailable() // no duplicates on an idle re-trigger
+        assert(rowsIn("bi5_tail_twin") === first + second)
+        assert(spark.sql("select count(distinct ticker) from bi5_tail_twin").head.getLong(0) === 1)
+      } finally q.stop()
+    }
+  }
+
+  test("twin: unpadded hour components stream in event-time order, not path order") {
+    withTree("bi5unpaddedtwin") { root =>
+      val h9 = hour(root, "EURUSD/2020/03/02/9h_ticks.bi5", 1)
+      val q = spark.readStream.format("bi5").option("digits", 5).load(root.toString)
+        .writeStream.format("memory").queryName("bi5_unpadded_twin").outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(rowsIn("bi5_unpadded_twin") === h9)
+        // '10h...' sorts before '9h...' as a path, but after it in time
+        val h10 = hour(root, "EURUSD/2020/03/02/10h_ticks.bi5", 2)
+        q.processAllAvailable()
+        assert(rowsIn("bi5_unpadded_twin") === h9 + h10)
+      } finally q.stop()
+    }
+  }
+
+  test("twin: backfill lookback picks up late files behind the frontier exactly once") {
+    withTree("bi5backfilltwin") { root =>
+      val h12 = hour(root, "EURUSD/2020/03/02/12h_ticks.bi5", 1) // the frontier
+      val q = spark.readStream.format("bi5")
+        .option("digits", 5).option("backfillLookbackHours", 6).load(root.toString)
+        .writeStream.format("memory").queryName("bi5_backfill_twin").outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(rowsIn("bi5_backfill_twin") === h12)
+        val h10 = hour(root, "EURUSD/2020/03/02/10h_ticks.bi5", 2) // inside the window
+        q.processAllAvailable()
+        assert(rowsIn("bi5_backfill_twin") === h12 + h10,
+          "late file within the lookback window must be picked up")
+        q.processAllAvailable()
+        assert(rowsIn("bi5_backfill_twin") === h12 + h10)
+        hour(root, "EURUSD/2020/03/02/2h_ticks.bi5", 3) // outside the window
+        q.processAllAvailable()
+        assert(rowsIn("bi5_backfill_twin") === h12 + h10,
+          "file beyond the lookback window keeps the skip contract")
+        val h14 = hour(root, "EURUSD/2020/03/02/14h_ticks.bi5", 4) // ahead
+        q.processAllAvailable()
+        assert(rowsIn("bi5_backfill_twin") === h12 + h10 + h14)
+      } finally q.stop()
+    }
+  }
+
+  test("twin: backfill survives a restart: late file landing while stopped is recovered") {
+    withTree("bi5restarttwin") { dir =>
+      val root = dir.resolve("in")
+      val ckpt = dir.resolve("ckpt").toString
+      val outDir = dir.resolve("out").toString
+      // parquet sink: the memory sink refuses checkpoint recovery
+      def start() = spark.readStream.format("bi5")
+        .option("digits", 5).option("backfillLookbackHours", 6)
+        .load(root.toString)
+        .writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      def sunk(): Long = spark.read.parquet(outDir).count()
+
+      val h12 = hour(root, "EURUSD/2020/03/02/12h_ticks.bi5", 1)
+      val q1 = start()
+      try { q1.processAllAvailable() } finally q1.stop()
+      assert(sunk() === h12)
+
+      // while the query is down: one late file in-window, one new file ahead
+      val h11 = hour(root, "EURUSD/2020/03/02/11h_ticks.bi5", 2)
+      val h13 = hour(root, "EURUSD/2020/03/02/13h_ticks.bi5", 3)
+
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        assert(sunk() === h12 + h11 + h13)
+        q2.processAllAvailable() // and nothing twice
+        assert(sunk() === h12 + h11 + h13)
+      } finally q2.stop()
+    }
+  }
+
+  test("twin: pending-batch replay is toggle-safe: membership derives from offset content") {
+    withTree("bi5toggletwin") { root =>
+      val f12 = Bi5TreeFixture.putHour(root, "EURUSD/2020/03/02/12h_ticks.bi5", 1).toString
+      val f10 = Bi5TreeFixture.putHour(root, "EURUSD/2020/03/02/10h_ticks.bi5", 2).toString
+      val base12 = Bi5PathMeta.parse(f12, 0).get.baseEpochMicros
+      val base10 = Bi5PathMeta.parse(f10, 0).get.baseEpochMicros
+      def stream(lookback: Int) = new Bi5MicroBatchStream(
+        Bi5Options(root.toString, 5, 0, splitPerFile = false,
+          Bi5Options.DefaultMaxPartitionBytes, maxPartitionBytesExplicit = false,
+          trustHeaders = false, maxFilesPerTrigger = 0, backfillLookbackHours = lookback),
+        Bi5Schema.schema, Array.empty, "/tmp/ckpt-unused", NioBi5Store)
+      def planned(s: Bi5MicroBatchStream, a: Bi5StreamOffset, b: Bi5StreamOffset): Seq[String] =
+        s.planInputPartitions(a, b).map(_.asInstanceOf[Bi5Partition].roots.head).toSeq
+
+      // v1 offsets (no seen-set) replayed under lookback on: key-range batch
+      assert(planned(stream(6), Bi5StreamOffset(base10, f10), Bi5StreamOffset(base12, f12)) ===
+        Seq(f12), "v1 range batch must replay by key range even with lookback enabled")
+      // v2 offsets (a manifest with a back-fill) replayed under lookback off
+      assert(planned(stream(0), Bi5StreamOffset(base12, f12, Set(f12)),
+        Bi5StreamOffset(base12, f12, Set(f12, f10))) === Seq(f10),
+        "v2 manifest batch must replay its back-fill file even with lookback disabled")
+    }
+  }
+
+  test("twin: default mode (no lookback) keeps the skip-behind contract") {
+    withTree("bi5skiptwin") { root =>
+      val h12 = hour(root, "EURUSD/2020/03/02/12h_ticks.bi5", 1)
+      val q = spark.readStream.format("bi5").option("digits", 5).load(root.toString)
+        .writeStream.format("memory").queryName("bi5_skip_twin").outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(rowsIn("bi5_skip_twin") === h12)
+        hour(root, "EURUSD/2020/03/02/10h_ticks.bi5", 2) // behind the committed hour
+        q.processAllAvailable()
+        assert(rowsIn("bi5_skip_twin") === h12,
+          "default contract: a file behind the committed offset is skipped")
+        // behind in time, though '9h...' sorts after '12h...' as a path
+        hour(root, "EURUSD/2020/03/02/9h_ticks.bi5", 3)
+        q.processAllAvailable()
+        assert(rowsIn("bi5_skip_twin") === h12, "skip-behind follows event time")
+      } finally q.stop()
+    }
+  }
+
+  test("twin: pruned relist never re-enumerates committed day directories") {
+    withTree("bi5prunetwin") { root =>
+      for (d <- 1 to 5) hour(root, s"EURUSD/2020/01/0$d/3h_ticks.bi5", d)
+      val frontier = Bi5TreeFixture.putHour(root, "EURUSD/2020/03/02/9h_ticks.bi5", 6).toString
+      val committed = Bi5PathMeta.parse(frontier, 0).get.baseEpochMicros
+      val enumerated = scala.collection.mutable.ArrayBuffer.empty[String]
+      val listed =
+        Bi5FileLister.listBi5FilesSince(NioBi5Store, root.toString, committed, 0, enumerated += _)
+      assert(!enumerated.exists(_.contains("2020/01/")), s"re-enumerated archive: $enumerated")
+      assert(listed.map(_._1) === Seq(frontier), "the AT-offset file is still listed")
+      hour(root, "EURUSD/2020/03/02/10h_ticks.bi5", 7)
+      val listed2 = Bi5FileLister.listBi5FilesSince(NioBi5Store, root.toString, committed, 0)
+      assert(listed2.map(_._1).exists(_.endsWith("10h_ticks.bi5")))
+    }
+  }
+
+  test("twin: pruned relist respects lenient calendar roll-over bounds") {
+    withTree("bi5prunelenienttwin") { root =>
+      // 2019/11/31 with january=0 is really 2019-12-31
+      hour(root, "EURUSD/2019/11/31/15h_ticks.bi5", 1)
+      val committed = Bi5PathMeta.lenientBaseMicros(2019, 11, 15, 0) // 2019-12-15
+      val listed = Bi5FileLister.listBi5FilesSince(NioBi5Store, root.toString, committed, 0)
+      assert(listed.map(_._1).exists(_.endsWith("15h_ticks.bi5")),
+        "lenient roll-over file must survive the pruned walk")
+      hour(root, "EURUSD/2019/05/01/3h_ticks.bi5", 2)
+      val enumerated = scala.collection.mutable.ArrayBuffer.empty[String]
+      Bi5FileLister.listBi5FilesSince(NioBi5Store, root.toString, committed, 0, enumerated += _)
+      assert(!enumerated.exists(_.contains("2019/05")), "old month dir must not be enumerated")
+    }
+  }
+
+  test("twin: maxFilesPerTrigger paces the backlog without losing data") {
+    withTree("bi5pacedtwin") { root =>
+      val a = hour(root, "EURUSD/2019/11/31/15h_ticks.bi5", 1)
+      val b = hour(root, "EURUSD/2020/03/02/12h_ticks.bi5", 2)
+      val q = spark.readStream.format("bi5")
+        .option("digits", 5).option("maxFilesPerTrigger", 1).load(root.toString)
+        .writeStream.format("memory").queryName("bi5_paced_twin").outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(rowsIn("bi5_paced_twin") === a + b)
+        assert(q.recentProgress.count(_.numInputRows > 0) >= 2)
+      } finally q.stop()
+    }
   }
 }
